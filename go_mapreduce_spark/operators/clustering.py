@@ -593,7 +593,7 @@ def x179_pca_power_iteration(
     # session confs).  In-loop checkpoints are lazy — lineage is cut
     # at call time, compute defers into the next round's DAG — with
     # an eager final one so the chain materializes under the pinned
-    # confs (same A/B'd cadence as graph.pagerank_dangling).
+    # confs (same A/B'd cadence as graph._power_iteration).
     from go_mapreduce_spark.operators.scale import iterative_plan_confs
 
     with iterative_plan_confs(spark, 1):

@@ -533,8 +533,12 @@ def x57_hot_shingles(spark: SparkSession, sf_dir: str, min_df: int = HOT_DF_MIN)
 # x27 — dedup clustering: connected components over near-dup pairs
 # ---------------------------------------------------------------------------
 
+# rounds between lineage cuts of the CC labels
+CC_CHECKPOINT_EVERY = 3
+
+
 def connected_components(
-    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b", checkpoint_every: int = 3
+    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
 ) -> DataFrame:
     """Min-label propagation to a fixpoint: every node gets the
     minimum doc_id reachable in its component → (doc_id, cluster_id).
@@ -547,7 +551,7 @@ def connected_components(
     Lineage discipline: persist alone does NOT stop the logical plan
     growing one join+aggregate layer per round — analysis/optimization
     cost compounds and a cache miss would recompute the whole chain.
-    Every ``checkpoint_every`` rounds the labels are localCheckpoint-ed
+    Every ``CC_CHECKPOINT_EVERY`` (k) rounds the labels are localCheckpoint-ed
     (materialized, lineage truncated), bounding plan depth at k rounds
     regardless of graph diameter.  On a multi-executor cluster swap
     localCheckpoint for reliable ``checkpoint()`` + checkpoint dir
@@ -571,10 +575,10 @@ def connected_components(
     with pinned_shuffle_partitions(
         edges.sparkSession, iterative_shuffle_partitions(m)
     ):
-        return _cc_rounds(edges, checkpoint_every)
+        return _cc_rounds(edges)
 
 
-def _cc_rounds(edges: DataFrame, checkpoint_every: int) -> DataFrame:
+def _cc_rounds(edges: DataFrame) -> DataFrame:
     labels = (
         edges.select(F.col("u").alias("node"))
         .distinct()
@@ -599,7 +603,7 @@ def _cc_rounds(edges: DataFrame, checkpoint_every: int) -> DataFrame:
             F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"),
         )
         rounds += 1
-        if rounds % checkpoint_every == 0:
+        if rounds % CC_CHECKPOINT_EVERY == 0:
             # localCheckpoint is eager: materializes AND caches the
             # result while cutting lineage back to a leaf
             cand = cand.localCheckpoint()

@@ -15,17 +15,25 @@ Scale design (shared with connected_components, operators/dedup.py):
   bit-identical at any partitioning AND match the oracle's
   identically-shaped sum; 18 fractional digits keep ~1e-18 absolute
   precision on rank mass (ranks ∈ (0,1]).
-- ``localCheckpoint`` every ``checkpoint_every`` rounds bounds
-  lineage depth (same discipline as the CC loop; swap for reliable
-  checkpoint() on a multi-executor cluster).
-- The symmetric near-dup edge relation has no dangling nodes by
-  construction; the general dangling-mass correction is out of scope
-  and documented here rather than half-implemented.
+- Lineage cut by ``localCheckpoint``, lazy in the loop and eager on
+  the last round (same discipline as the CC loop; swap for reliable
+  checkpoint() on a multi-executor cluster).  The cadence is derived
+  from the round's shape, not a parameter: a round that reads the
+  vector twice (a dangling-mass or L1-norm aggregate beside the
+  contribution join) is cut every round, since its un-cut lineage
+  doubles per round; a round that reads it once is cut every
+  ``_LINEAR_CUT_EVERY`` rounds (SCALE.md, "Checkpoint cadence under
+  double-reference").
+- ``pagerank`` keeps the lossy sink simplification (sink mass is not
+  redistributed); ``pagerank_dangling`` and ``ppr_seeded`` carry the
+  full dangling-mass correction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from go_mapreduce_spark.operators.scale import (
@@ -36,21 +44,176 @@ from go_mapreduce_spark.operators.scale import (
 PR_DAMPING = 0.85
 PR_ITERS = 10
 _DEC = "decimal(38,18)"
+# cut cadence of a round that reads the vector once: its inter-cut
+# chain is linear, so a longer cadence is safe
+_LINEAR_CUT_EVERY = 4
+
+
+def _power_iteration(
+    ed: DataFrame,
+    n_iter: int,
+    contribution: Column,
+    update: Callable[[int], Column],
+    out_weight: Column | None = None,
+    symmetric: bool = False,
+    mass: str | None = None,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """The round skeleton shared by the PageRank family: ``n_iter``
+    fixed rounds over a per-node vector ``rank``, each one MapReduce
+    round pair — the ranks⋈edges contribution join, then a keyed
+    DECIMAL(38,18) sum — returning (node, rank).
+
+    - ``ed``: the edge relation (u, v[, w]); cached and counted here.
+    - ``out_weight``: per-source aggregate joined onto every edge
+      (out-degree, strength); None joins nothing.
+    - ``contribution``: per-edge value over the edge columns + ``rank``.
+    - ``update(n)``: next rank over ``s`` (summed contributions, 0.0
+      for a node with no in-edges), the node relation's loop-invariant
+      columns and ``mass``; ``n`` is the teleport support size.
+    - ``symmetric``: every node has in- and out-edges, so the node set
+      is the u side and ``s`` is the next vector as-is — the per-round
+      left join that re-admits zero-in-degree nodes is skipped,
+      dropping a third of the per-round shuffles.
+    - ``mass``: ``"dangling"`` adds the loop-invariant ``is_dangling``
+      flag and per round the 1-row decimal sum of rank on dangling
+      nodes; ``"norm"`` per round the 1-row L1 norm of ``s``.  Either
+      is cross-joined back as a broadcast (1 row: safe by
+      construction) — no driver collect inside the loop.
+    - ``seeds``: the teleport support is the seed nodes present in the
+      graph; ``teleport`` (uniform on them) is a node column and the
+      start vector.  Otherwise the support is every node and the start
+      vector is uniform.
+
+    Round-overhead discipline (r9 verdict: the per-round SHAPE was
+    already minimal; round overhead was the cost):
+
+    - Loop-invariant node columns (``is_dangling``, ``teleport``) are
+      hoisted into the cached node relation: the dangling mass is a
+      filter + aggregate, and the former per-round anti-join against
+      out-degree nodes is gone (same decimal sum over the same rows:
+      results bit-identical).
+    - A vector read twice per round (the mass aggregate and the
+      contribution join / output) doubles its un-cut lineage per round
+      (2^k subplans; the oracle needs MATERIALIZED CTEs for the same
+      reason), so those loops cut every round.
+      ``localCheckpoint(eager=False)`` cuts the LOGICAL lineage at call
+      time while deferring materialization to the round that consumes
+      it — the per-round eager jobs collapse into the final action's
+      DAG (A/B'd r10 on x143: lazy 6.8 s vs eager 7.3 s, and a cut
+      every 2nd round instead measured WORSE, 8.6 s, because the
+      doubled un-cut reference recomputes).  Round 13 on x292
+      (min-of-3 interleaved at sf0.1, identity asserted): cadence 4
+      3.99 s/33 jobs, 2 2.92 s/28 jobs, 1 3.00 s/25 jobs — every-round
+      cuts are the floor and bound duplication at 2.
+    - The last cut is EAGER so the whole chain materializes while the
+      pinned confs are still in force and before the caches unpersist
+      — otherwise the caller's action re-plans at the session default
+      and re-exchanges the cached graph.
+    - AQE is disabled for the loop (``iterative_plan_confs``): fixed-
+      shape rounds × runtime re-optimization rediscover the pinned
+      shape every round (A/B'd 6.4 vs 7.9 s on x143).
+    """
+    # the edge list is often an expensive subplan (x59 feeds the x6
+    # near-dup join in) — cache it FIRST so degrees, nodes, and the
+    # per-round joins all read the materialized relation, not the
+    # upstream pipeline again
+    ed = ed.persist()
+    # shuffle partitioning sized to the graph, not the session default:
+    # every round re-shuffles only ranks (≤ |V| rows) and aggregates
+    # ≤ |E| contributions, so partition-count overhead dominates at
+    # small scale and edge volume at large scale
+    parts = iterative_shuffle_partitions(ed.count(), cpu_bound=True)
+    with iterative_plan_confs(ed.sparkSession, parts):
+        outd = None if out_weight is None else ed.groupBy("u").agg(out_weight)
+        # the per-edge relation resolved once, hash-partitioned by the
+        # per-round join key and cached: every round's ranks⋈edges join
+        # reuses this partitioning (only the small ranks side moves)
+        # instead of re-exchanging the graph each iteration
+        ed_e = (ed if outd is None else ed.join(outd, "u")).repartition(parts, "u").persist()
+        nodes = (ed_e if symmetric else ed).select(F.col("u").alias("node"))
+        if not symmetric:
+            nodes = nodes.union(ed.select(F.col("v").alias("node")))
+        nodes = nodes.distinct()
+        cols = ["node"]
+        if seeds is not None:
+            support = nodes.join(seeds.select("node").distinct(), "node", "left_semi")
+            n = support.count()
+            nodes = nodes.join(support.withColumn("_sd", F.lit(1)), "node", "left")
+            cols.append(
+                F.when(F.col("_sd").isNotNull(), F.lit(1.0) / n)
+                .otherwise(F.lit(0.0))
+                .alias("teleport")
+            )
+        if mass == "dangling":
+            out_flag = outd.select(F.col("u").alias("node"), F.lit(1).alias("_o"))
+            nodes = nodes.join(out_flag, "node", "left")
+            cols.append(F.col("_o").isNull().alias("is_dangling"))
+        nodes = nodes.select(*cols).persist()
+        if seeds is None:
+            n = nodes.count()
+        if n == 0:
+            for rel in (ed_e, nodes, ed):
+                rel.unpersist()  # empty result: the returned plan needs no cache
+            if seeds is not None:
+                raise ValueError(
+                    "ppr_seeded: no seed node is present in the graph — "
+                    "the teleport distribution would be undefined"
+                )
+            return nodes.select("node", F.lit(0.0).alias("rank"))
+        start = F.lit(1.0 / n) if seeds is None else F.col("teleport")
+        ranks = nodes.withColumn("rank", start)
+        new_rank = update(n).alias("rank")
+        cut_every = 1 if mass else _LINEAR_CUT_EVERY
+        for i in range(n_iter):
+            summed = (
+                ed_e.join(ranks.withColumnRenamed("node", "u"), "u")
+                .select(F.col("v").alias("node"), contribution.alias("c"))
+                .groupBy("node")
+                .agg(F.sum(F.col("c").cast(_DEC)).cast("double").alias("s"))
+            )
+            nxt = summed
+            if not symmetric:
+                nxt = nodes.join(summed, "node", "left").withColumn(
+                    "s", F.coalesce("s", F.lit(0.0))
+                )
+            if mass == "dangling":
+                agg = ranks.filter(F.col("is_dangling")).agg(
+                    F.coalesce(
+                        F.sum(F.col("rank").cast(_DEC)).cast("double"), F.lit(0.0)
+                    ).alias("mass")
+                )
+            elif mass == "norm":
+                agg = summed.agg(F.sum(F.col("s").cast(_DEC)).cast("double").alias("mass"))
+            if mass:
+                nxt = nxt.crossJoin(F.broadcast(agg))
+            ranks = nxt.select(*nodes.columns, new_rank)
+            last = i + 1 == n_iter
+            if (i + 1) % cut_every == 0 or last:
+                ranks = ranks.localCheckpoint(eager=last)
+        ranks = ranks.select("node", "rank")
+        ed_e.unpersist()
+        nodes.unpersist()
+    ed.unpersist()
+    return ranks
+
+
+def _out_degree() -> Column:
+    return F.count(F.lit(1)).alias("deg")
 
 
 def pagerank(
     edges: DataFrame,
     damping: float = PR_DAMPING,
     n_iter: int = PR_ITERS,
-    checkpoint_every: int = 4,
     symmetric: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list (u, v); returns
     (node, rank).  The node set is u ∪ v, so sink nodes (out-degree
     0) are counted in n and receive teleport + incoming mass; their
     own mass is NOT redistributed (the standard lossy simplification
-    — total rank < 1 when sinks exist; the full dangling-mass
-    correction is documented out of scope in the module docstring).
+    — total rank < 1 when sinks exist; ``pagerank_dangling`` is the
+    full formulation).
 
     ``symmetric=True`` declares the graph symmetric (every node has
     both in- and out-degree ≥ 1): the node set collapses to the u
@@ -58,86 +221,14 @@ def pagerank(
     only to re-admit zero-in-degree nodes — is skipped, dropping a
     third of the per-round shuffles.
     """
-    # the edge list is often an expensive subplan (x59 feeds the x6
-    # near-dup join in) — cache it FIRST so degrees, nodes, and the
-    # per-round joins all read the materialized relation, not the
-    # upstream pipeline again
-    ed = edges.select("u", "v").distinct().persist()
-    m = ed.count()
-    # shuffle partitioning sized to the graph, not the session default:
-    # every round re-shuffles only ranks (≤ |V| rows) and aggregates
-    # ≤ |E| contributions, so partition-count overhead dominates at
-    # small scale and edge volume at large scale
-    parts = iterative_shuffle_partitions(m, cpu_bound=True)
-    spark = edges.sparkSession
-    with iterative_plan_confs(spark, parts):
-        ranks = _pagerank_rounds(ed, damping, n_iter, checkpoint_every, symmetric, parts)
-    ed.unpersist()
-    return ranks
-
-
-def _pagerank_rounds(
-    ed: DataFrame,
-    damping: float,
-    n_iter: int,
-    checkpoint_every: int,
-    symmetric: bool,
-    parts: int,
-) -> DataFrame:
-    outd = ed.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # (u, v, deg) resolved once, hash-partitioned by the per-round
-    # join key and cached: every round's ranks⋈edges join reuses this
-    # partitioning (only the small ranks side moves) instead of
-    # re-exchanging the graph each iteration
-    ed_deg = ed.join(outd, "u").repartition(parts, "u").persist()
-    if symmetric:
-        nodes = ed.select(F.col("u").alias("node")).distinct().persist()
-    else:
-        nodes = (
-            ed.select(F.col("u").alias("node"))
-            .union(ed.select(F.col("v").alias("node")))
-            .distinct()
-            .persist()
-        )
-    n = nodes.count()
-    if n == 0:
-        ed_deg.unpersist()
-        nodes.unpersist()  # empty relation: the returned plan needs no cache
-        return nodes.withColumn("rank", F.lit(0.0))
-
-    teleport = (1.0 - damping) / n
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(n_iter):
-        contrib = ed_deg.join(ranks.withColumnRenamed("node", "u"), "u").select(
-            F.col("v").alias("node"),
-            (F.col("rank") / F.col("deg")).alias("c"),
-        )
-        summed = contrib.groupBy("node").agg(
-            F.sum(F.col("c").cast(_DEC)).cast("double").alias("s")
-        )
-        if symmetric:
-            ranks = summed.select(
-                "node",
-                (F.lit(teleport) + F.lit(damping) * F.col("s")).alias("rank"),
-            )
-        else:
-            ranks = nodes.join(summed, "node", "left").select(
-                "node",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce("s", F.lit(0.0))
-                ).alias("rank"),
-            )
-        # lazy in-loop / eager final: the eager last checkpoint
-        # materializes the whole chain while the pinned confs are
-        # still in force — otherwise the caller's action re-plans at
-        # the session default and re-exchanges the cached graph
-        last = i + 1 == n_iter
-        if (i + 1) % checkpoint_every == 0 or last:
-            ranks = ranks.localCheckpoint(eager=last)
-    ed_deg.unpersist()
-    nodes.unpersist()
-    return ranks
+    return _power_iteration(
+        edges.select("u", "v").distinct(),
+        n_iter,
+        contribution=F.col("rank") / F.col("deg"),
+        update=lambda n: F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("s"),
+        out_weight=_out_degree(),
+        symmetric=symmetric,
+    )
 
 
 def x59_pagerank(spark: SparkSession, sf_dir: str, threshold: float = 0.8) -> DataFrame:
@@ -231,7 +322,6 @@ def pagerank_dangling(
     edges: DataFrame,
     damping: float = PR_DAMPING,
     n_iter: int = PR_ITERS,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """PageRank over a general directed edge list WITH dangling-mass
     redistribution — the full formulation: per round, the rank held by
@@ -241,109 +331,19 @@ def pagerank_dangling(
 
     r'(x) = (1-d)/n + d·(Σ_{u→x} r(u)/deg(u) + D/n),  D = Σ_{dangling} r(u)
 
-    Per round: one key-partitioned contribution join + decimal
-    aggregate as in ``pagerank``, plus a 1-row decimal aggregate for
-    D cross-joined back in-plan — no driver collect inside the loop.
-    Decimal sums keep every round partition-invariant and
-    oracle-replayable.
-
-    Round-overhead discipline (r9 verdict: the per-round SHAPE was
-    already minimal; round overhead was the cost):
-
-    - The dangling-node SET is loop-invariant, so ``ranks`` carries a
-      precomputed ``is_dangling`` flag and D is a filter + aggregate —
-      the former per-round anti-join against out-degree nodes is
-      hoisted out of the loop entirely (same decimal sum over the
-      same rows: results bit-identical).
-    - ``ranks`` is referenced twice per round (D and the contribution
-      join), so unchecked lineage doubles per iteration (2^k
-      subplans; the oracle needs MATERIALIZED CTEs for the same
-      reason).  ``localCheckpoint(eager=False)`` every round cuts the
-      LOGICAL lineage immediately (the plan becomes RDD-backed at
-      call time) while deferring materialization to the round that
-      consumes it — the 25 per-round eager jobs collapse into the
-      final action's DAG (A/B'd r10: lazy 6.8 s vs eager 7.3 s, and
-      checkpointing every 2nd round instead measured WORSE, 8.6 s,
-      because the doubled un-cut reference recomputes).
-    - AQE is disabled for the loop (``iterative_plan_confs``): 25
-      fixed-shape rounds × runtime re-optimization rediscovers the
-      pinned shape every round (A/B'd 6.4 vs 7.9 s).
+    Per round: the ``pagerank`` contribution join + decimal aggregate,
+    plus a 1-row decimal aggregate for D cross-joined back in-plan;
+    ``_power_iteration`` documents the round-overhead discipline.
     """
-    ed = edges.select("u", "v").distinct().persist()
-    m = ed.count()
-    parts = iterative_shuffle_partitions(m, cpu_bound=True)
-    spark = edges.sparkSession
-    with iterative_plan_confs(spark, parts):
-        outd = ed.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        ed_deg = ed.join(outd, "u").repartition(parts, "u").persist()
-        nodes = (
-            ed.select(F.col("u").alias("node"))
-            .union(ed.select(F.col("v").alias("node")))
-            .distinct()
-            .persist()
-        )
-        n = nodes.count()
-        if n == 0:
-            ed_deg.unpersist()
-            ed.unpersist()
-            nodes.unpersist()  # empty relation: the returned plan needs no cache
-            return nodes.withColumn("rank", F.lit(0.0))
-        teleport = (1.0 - damping) / n
-        out_nodes = outd.select(F.col("u").alias("node"))
-        # loop-invariant dangling flag, hoisted: one anti-join shape
-        # total instead of one per round
-        nodes_f = nodes.join(
-            out_nodes.withColumn("_o", F.lit(1)), "node", "left"
-        ).select("node", F.col("_o").isNull().alias("is_dangling")).persist()
-        ranks = nodes_f.withColumn("rank", F.lit(1.0 / n))
-        for i in range(n_iter):
-            dangling = (
-                ranks.filter(F.col("is_dangling"))
-                .agg(
-                    F.coalesce(
-                        F.sum(F.col("rank").cast(_DEC)).cast("double"),
-                        F.lit(0.0),
-                    ).alias("dm")
-                )
-            )
-            contrib = ed_deg.join(
-                ranks.withColumnRenamed("node", "u"), "u"
-            ).select(
-                F.col("v").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            summed = contrib.groupBy("node").agg(
-                F.sum(F.col("c").cast(_DEC)).cast("double").alias("s")
-            )
-            ranks = (
-                nodes_f.join(summed, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    "is_dangling",
-                    (
-                        F.lit(teleport)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce("s", F.lit(0.0))
-                            + F.col("dm") / F.lit(float(n))
-                        )
-                    ).alias("rank"),
-                )
-            )
-            # in-loop checkpoints are LAZY (lineage cut now, compute
-            # deferred into the consuming round's DAG); the final one
-            # is EAGER so the whole chain materializes inside the
-            # pinned-conf context, before the caches unpersist below
-            last = i + 1 == n_iter
-            if (i + 1) % checkpoint_every == 0 or last:
-                ranks = ranks.localCheckpoint(eager=last)
-        ranks = ranks.select("node", "rank")
-        ed_deg.unpersist()
-        nodes.unpersist()
-        nodes_f.unpersist()
-    ed.unpersist()
-    return ranks
+    return _power_iteration(
+        edges.select("u", "v").distinct(),
+        n_iter,
+        contribution=F.col("rank") / F.col("deg"),
+        update=lambda n: F.lit((1.0 - damping) / n)
+        + F.lit(damping) * (F.col("s") + F.col("mass") / F.lit(float(n))),
+        out_weight=_out_degree(),
+        mass="dangling",
+    )
 
 
 SUPPLIER_NODE_OFFSET = 1_000_000
@@ -403,7 +403,7 @@ def kcore_edges(e: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> D
             .filter(F.col("deg") >= k)
             .select("u")
         )
-        # lazy in-loop / eager final (see pagerank_dangling): lineage
+        # lazy in-loop / eager final (see _power_iteration): lineage
         # is cut at call time, so the 3-refs-per-round blowup is
         # still bounded while per-round eager jobs collapse
         cur = (
@@ -584,7 +584,7 @@ def cheapest_path(
                 F.col("v").alias("node"),
                 (F.col("cost") + F.col("w")).alias("cost"),
             )
-            # lazy in-loop / eager final (see pagerank_dangling)
+            # lazy in-loop / eager final (see _power_iteration)
             dist = (
                 dist.unionByName(cand)
                 .groupBy("node")
@@ -770,9 +770,7 @@ def x267_label_propagation(
 EV_ITERS = 8
 
 
-def eigenvector_centrality(
-    edges: DataFrame, n_iter: int = EV_ITERS, checkpoint_every: int = 1
-) -> DataFrame:
+def eigenvector_centrality(edges: DataFrame, n_iter: int = EV_ITERS) -> DataFrame:
     """Eigenvector centrality of a SYMMETRIC edge list (u, v) by
     L1-normalized power iteration: score ← A·score / ‖A·score‖₁ for
     ``n_iter`` fixed rounds from the uniform vector — PageRank's
@@ -784,54 +782,15 @@ def eigenvector_centrality(
     result is bit-stable at any partition count AND SQL-replayable —
     the same eigenvector up to scale, since power iteration is
     norm-choice-invariant for nonnegative symmetric A (Perron).
-
-    Same scale discipline as ``pagerank``: the graph is resolved,
-    hash-partitioned on the join key, and cached ONCE; each round
-    moves only the |V|-row score vector; shuffle partitions pinned to
-    graph volume; lineage cut by localCheckpoint.
     """
-    ed = edges.select("u", "v").distinct().persist()
-    m = ed.count()
-    parts = iterative_shuffle_partitions(m, cpu_bound=True)
-    spark = edges.sparkSession
-    with iterative_plan_confs(spark, parts):
-        ed_p = ed.repartition(parts, "u").persist()
-        nodes = ed_p.select(F.col("u").alias("node")).distinct()
-        n = nodes.count()
-        if n == 0:
-            ed.unpersist()
-            ed_p.unpersist()
-            return nodes.withColumn("score", F.lit(0.0))
-        scores = nodes.withColumn("score", F.lit(1.0 / n))
-        for i in range(n_iter):
-            contrib = ed_p.join(
-                scores.withColumnRenamed("node", "u"), "u"
-            ).select(F.col("v").alias("node"), F.col("score").alias("c"))
-            raw = contrib.groupBy("node").agg(
-                F.sum(F.col("c").cast(_DEC)).cast("double").alias("s")
-            )
-            tot = raw.agg(
-                F.sum(F.col("s").cast(_DEC)).cast("double").alias("t")
-            )
-            # 1-row L1 norm: safe broadcast by construction
-            scores = raw.crossJoin(F.broadcast(tot)).select(
-                "node", (F.col("s") / F.col("t")).alias("score")
-            )
-            # lazy in-loop / eager final cadence (pagerank_dangling
-            # documents the A/B); lineage is cut at call time either
-            # way, so the 2-refs-per-round subplan doubling stays
-            # bounded at 2^checkpoint_every.  Round 13: cadence 4 → 1
-            # measured (min-of-3 interleaved at sf0.1, identity
-            # asserted): ck=4 3.99 s/33 jobs, ck=2 2.92 s/28 jobs,
-            # ck=1 3.00 s/25 jobs — the uncut rounds' doubled
-            # references recompute (the x143 fusion finding); every
-            # round cut is the floor and bounds duplication at 2.
-            last = i + 1 == n_iter
-            if (i + 1) % checkpoint_every == 0 or last:
-                scores = scores.localCheckpoint(eager=last)
-    ed_p.unpersist()
-    ed.unpersist()
-    return scores
+    return _power_iteration(
+        edges.select("u", "v").distinct(),
+        n_iter,
+        contribution=F.col("rank"),
+        update=lambda n: F.col("s") / F.col("mass"),
+        symmetric=True,
+        mass="norm",
+    ).withColumnRenamed("rank", "score")
 
 
 def x292_eigenvector_centrality(
@@ -863,7 +822,6 @@ def pagerank_weighted(
     edges: DataFrame,
     damping: float = PR_DAMPING,
     n_iter: int = PR_ITERS,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank over a SYMMETRIC weighted edge list (u, v, w): each
     round a node passes ``rank · w_uv / strength(u)`` along every
@@ -871,50 +829,15 @@ def pagerank_weighted(
     TextRank runs on.  Caller guarantees symmetry (every node has
     out-strength > 0), so no dangling handling and the node set is
     the u side — the ``pagerank(symmetric=True)`` contract.
-
-    Same scale discipline as ``pagerank``: graph + strength resolved
-    and hash-partitioned once; per round only the |V|-row rank vector
-    shuffles; contribution sums through DECIMAL(38,18); lineage cut
-    by localCheckpoint.
     """
-    ed = edges.select("u", "v", "w").persist()
-    m = ed.count()
-    parts = iterative_shuffle_partitions(m, cpu_bound=True)
-    spark = edges.sparkSession
-    with iterative_plan_confs(spark, parts):
-        strength = ed.groupBy("u").agg(F.sum("w").alias("wsum"))
-        ed_s = ed.join(strength, "u").repartition(parts, "u").persist()
-        nodes = ed.select(F.col("u").alias("node")).distinct().persist()
-        n = nodes.count()
-        if n == 0:
-            ed.unpersist()
-            ed_s.unpersist()
-            nodes.unpersist()
-            return nodes.withColumn("rank", F.lit(0.0))
-        teleport = (1.0 - damping) / n
-        ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-        for i in range(n_iter):
-            contrib = ed_s.join(
-                ranks.withColumnRenamed("node", "u"), "u"
-            ).select(
-                F.col("v").alias("node"),
-                (F.col("rank") * F.col("w") / F.col("wsum")).alias("c"),
-            )
-            summed = contrib.groupBy("node").agg(
-                F.sum(F.col("c").cast(_DEC)).cast("double").alias("s")
-            )
-            ranks = summed.select(
-                "node",
-                (F.lit(teleport) + F.lit(damping) * F.col("s")).alias("rank"),
-            )
-            # lazy in-loop / eager final (see pagerank_dangling)
-            last = i + 1 == n_iter
-            if (i + 1) % checkpoint_every == 0 or last:
-                ranks = ranks.localCheckpoint(eager=last)
-    ed_s.unpersist()
-    nodes.unpersist()
-    ed.unpersist()
-    return ranks
+    return _power_iteration(
+        edges.select("u", "v", "w"),
+        n_iter,
+        contribution=F.col("rank") * F.col("w") / F.col("wsum"),
+        update=lambda n: F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("s"),
+        out_weight=F.sum("w").alias("wsum"),
+        symmetric=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1214,7 +1137,6 @@ def ppr_seeded(
     seeds: DataFrame,
     damping: float = PR_DAMPING,
     n_iter: int = PR_ITERS,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Personalized PageRank: teleport (and dangling mass) return to a
     SEED distribution instead of uniform — the "importance relative to
@@ -1224,94 +1146,21 @@ def ppr_seeded(
 
         r'(x) = (1-d)·s(x) + d·(Σ_{u→x} r(u)/deg(u) + D·s(x))
 
-    so total mass stays exactly 1.  Same plan discipline as
-    ``pagerank_dangling`` (cites mapreduce/mapreduce.go:178-219 for the
-    reduce-side shape): per round one key-partitioned contribution
-    join + decimal aggregate, a 1-row decimal dangling aggregate
-    broadcast back, ranks localCheckpoint-ed to keep lineage flat.
+    so total mass stays exactly 1.  Same plan as ``pagerank_dangling``
+    (cites mapreduce/mapreduce.go:178-219 for the reduce-side shape)
+    with s carried as the loop-invariant ``teleport`` node column.
+    Raises ``ValueError`` when no seed node is in the graph.
     """
-    ed = edges.select("u", "v").distinct().persist()
-    m = ed.count()
-    parts = iterative_shuffle_partitions(m, cpu_bound=True)
-    spark = edges.sparkSession
-    with iterative_plan_confs(spark, parts):
-        outd = ed.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        ed_deg = ed.join(outd, "u").repartition(parts, "u").persist()
-        nodes = (
-            ed.select(F.col("u").alias("node"))
-            .union(ed.select(F.col("v").alias("node")))
-            .distinct()
-        )
-        seed_nodes = nodes.join(
-            seeds.select("node").distinct(), "node", "left_semi"
-        )
-        ns = seed_nodes.count()
-        if ns == 0:
-            raise ValueError(
-                "ppr_seeded: no seed node is present in the graph — "
-                "the teleport distribution would be undefined"
-            )
-        out_nodes = outd.select(F.col("u").alias("node"))
-        # s (teleport prob) AND the loop-invariant dangling flag are
-        # both carried in the iterated relation: the per-round D
-        # aggregate is then a filter + 1-row agg, no join (same
-        # decimal sum over the same rows — bit-identical results;
-        # pagerank_dangling documents the round-overhead rationale).
-        nodes_s = (
-            nodes.join(seed_nodes.withColumn("_sd", F.lit(1)), "node", "left")
-            .join(out_nodes.withColumn("_o", F.lit(1)), "node", "left")
-            .select(
-                "node",
-                F.when(F.col("_sd").isNotNull(), F.lit(1.0) / ns)
-                .otherwise(F.lit(0.0))
-                .alias("s"),
-                F.col("_o").isNull().alias("is_dangling"),
-            )
-            .persist()
-        )
-        ranks = nodes_s.select("node", "s", "is_dangling", F.col("s").alias("rank"))
-        for i in range(n_iter):
-            dangling = ranks.filter(F.col("is_dangling")).agg(
-                F.coalesce(
-                    F.sum(F.col("rank").cast(_DEC)).cast("double"),
-                    F.lit(0.0),
-                ).alias("dm")
-            )
-            contrib = ed_deg.join(
-                ranks.withColumnRenamed("node", "u"), "u"
-            ).select(
-                F.col("v").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            summed = contrib.groupBy("node").agg(
-                F.sum(F.col("c").cast(_DEC)).cast("double").alias("cs")
-            )
-            ranks = (
-                nodes_s.join(summed, "node", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select(
-                    "node",
-                    "s",
-                    "is_dangling",
-                    (
-                        F.lit(1.0 - damping) * F.col("s")
-                        + F.lit(damping)
-                        * (
-                            F.coalesce("cs", F.lit(0.0))
-                            + F.col("dm") * F.col("s")
-                        )
-                    ).alias("rank"),
-                )
-            )
-            # lazy in-loop, eager final — see pagerank_dangling
-            last = i + 1 == n_iter
-            if (i + 1) % checkpoint_every == 0 or last:
-                ranks = ranks.localCheckpoint(eager=last)
-        ranks = ranks.select("node", "rank")
-        ed_deg.unpersist()
-        nodes_s.unpersist()
-    ed.unpersist()
-    return ranks
+    return _power_iteration(
+        edges.select("u", "v").distinct(),
+        n_iter,
+        contribution=F.col("rank") / F.col("deg"),
+        update=lambda n: F.lit(1.0 - damping) * F.col("teleport")
+        + F.lit(damping) * (F.col("s") + F.col("mass") * F.col("teleport")),
+        out_weight=_out_degree(),
+        mass="dangling",
+        seeds=seeds,
+    )
 
 
 def x378_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:

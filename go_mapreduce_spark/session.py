@@ -15,13 +15,16 @@ from __future__ import annotations
 
 import os
 import tempfile
+import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-_SHIPPED_SESSIONS: set[int] = set()
+# contexts the package was shipped to, held weakly: an id() key could
+# be reused by a later context after the first one is collected
+_SHIPPED_CONTEXTS: weakref.WeakSet = weakref.WeakSet()
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -36,8 +39,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     wheel on executors or spark-submit --py-files.)
     """
     sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED_SESSIONS:
+    if sc in _SHIPPED_CONTEXTS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(tempfile.mkdtemp(prefix="gms_pkg_"), "go_mapreduce_spark.zip")
@@ -49,7 +51,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     z.write(full, rel)
     sc.addPyFile(zpath)
-    _SHIPPED_SESSIONS.add(key)
+    _SHIPPED_CONTEXTS.add(sc)
 
 
 def get_spark(

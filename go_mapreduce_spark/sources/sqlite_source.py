@@ -92,7 +92,8 @@ def _batch_to_sqlite_rows(batch, schema: StructType) -> list:
     """Arrow RecordBatch → list of executemany parameter tuples.
 
     The per-value conversions are exactly :func:`_to_sqlite_value`
-    (bool→int, date/datetime→ISO text, everything else passthrough),
+    (bool→int, date/timestamp/timestamp_ntz→ISO text, everything else
+    passthrough),
     but applied per COLUMN from the declared schema instead of
     per value with isinstance — the Arrow writer path's whole point
     is that the row loop stays out of Python (guide §4: Arrow batches
@@ -118,7 +119,8 @@ def _batch_to_sqlite_rows(batch, schema: StructType) -> list:
                 )
                 for v in col
             ]
-        elif t == "date":
+        elif t in ("date", "timestamp_ntz"):
+            # timestamp_ntz is wall-clock time: naive ISO text, no tz shift
             col = [None if v is None else _to_sqlite_value(v) for v in col]
         cols.append(col)
     return list(zip(*cols))

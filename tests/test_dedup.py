@@ -221,14 +221,14 @@ def test_cc_chain_graph_converges_with_bounded_lineage(spark):
     not the total round count."""
     edges = [(i, i + 1) for i in range(10)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    out = D.connected_components(pairs, checkpoint_every=3)
+    out = D.connected_components(pairs)
     labels = {r.doc_id: r.cluster_id for r in out.collect()}
     assert labels == {i: 0 for i in range(11)}  # one component, min label 0
     # lineage assertion: the plan must bottom out at the checkpoint
     # leaf (Scan ExistingRDD).  Each un-checkpointed round embeds the
     # previous round's plan TWICE (labels feeds both join inputs), so
     # plan text grows ~2× per round: 11 rounds ≈ 2^11 units, while ≤
-    # checkpoint_every rounds above the leaf stays small — a flat cap
+    # CC_CHECKPOINT_EVERY rounds above the leaf stays small — a flat cap
     # on the string length is a real lineage-depth bound.
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Scan ExistingRDD" in plan, plan[:2000]

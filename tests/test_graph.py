@@ -7,19 +7,30 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _pr_reference(edges, damping=0.85, n_iter=10):
-    """Plain-python replica of the declared fixed-iteration formula."""
+def _pr_reference(edges, damping=0.85, n_iter=10, dangling=False, teleport=None):
+    """Plain-python replica of the declared fixed-iteration formula.
+
+    ``dangling=True`` redistributes the rank held by out-degree-0
+    nodes along the teleport vector each round; ``teleport`` (node →
+    probability, default uniform) is also the start vector."""
     nodes = sorted({u for u, _ in edges} | {v for _, v in edges})
     outd = {}
     for u, _ in edges:
         outd[u] = outd.get(u, 0) + 1
     n = len(nodes)
-    rank = {x: 1.0 / n for x in nodes}
+    if teleport is None:
+        teleport = {x: 1.0 / n for x in nodes}
+    rank = {x: teleport.get(x, 0.0) for x in nodes}
     for _ in range(n_iter):
         incoming = {x: 0.0 for x in nodes}
         for u, v in edges:
             incoming[v] += rank[u] / outd[u]
-        rank = {x: (1.0 - damping) / n + damping * incoming[x] for x in nodes}
+        dm = sum(rank[x] for x in nodes if x not in outd) if dangling else 0.0
+        rank = {
+            x: (1.0 - damping) * teleport.get(x, 0.0)
+            + damping * (incoming[x] + dm * teleport.get(x, 0.0))
+            for x in nodes
+        }
     return rank
 
 
@@ -59,6 +70,98 @@ def test_pagerank_symmetric_flag_is_equivalent(spark):
     a = {r.node: r.rank for r in pagerank(df, symmetric=True).collect()}
     b = {r.node: r.rank for r in pagerank(df, symmetric=False).collect()}
     assert a == b  # bit-identical: same decimal-sum plan modulo the sink join
+
+
+# directed toy graph: 3 and 5 have no in-edges, but every node has an
+# out-edge, so the dangling-mass variants get one extra sink (6)
+_DIRECTED = [(1, 2), (3, 2), (2, 4), (4, 1), (5, 1)]
+_DIRECTED_SINK = _DIRECTED + [(4, 6)]
+
+
+def test_pagerank_dangling_matches_reference(spark):
+    from go_mapreduce_spark.operators.graph import pagerank_dangling
+
+    df = spark.createDataFrame(_DIRECTED_SINK, "u long, v long")
+    got = {r.node: r.rank for r in pagerank_dangling(df).collect()}
+    want = _pr_reference(_DIRECTED_SINK, dangling=True)
+    assert set(got) == set(want)
+    for k in got:
+        assert got[k] == pytest.approx(want[k], abs=1e-12)
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-12)
+
+
+def test_ppr_seeded_matches_reference(spark):
+    from go_mapreduce_spark.operators.graph import ppr_seeded
+
+    df = spark.createDataFrame(_DIRECTED_SINK, "u long, v long")
+    # 99 is not in the graph: s is uniform on the seeds present
+    seeds = spark.createDataFrame([(1,), (5,), (99,)], "node long")
+    got = {r.node: r.rank for r in ppr_seeded(df, seeds).collect()}
+    want = _pr_reference(_DIRECTED_SINK, dangling=True, teleport={1: 0.5, 5: 0.5})
+    assert set(got) == set(want)
+    for k in got:
+        assert got[k] == pytest.approx(want[k], abs=1e-12)
+    assert got[3] == pytest.approx(0.0, abs=1e-12)  # unseeded, no in-edges
+
+
+# ceilings on (jobs, stages) of each call plus its collect(), as
+# measured on local[4] and local[8]: a change to the shared loop may
+# not add a job or a stage.  Stage counts can drop run to run (a reused
+# shuffle's stage is skipped), never rise.
+_LOOP_COUNT_CEILINGS = {
+    "pagerank_symmetric": (15, 50),
+    "pagerank": (15, 50),
+    "pagerank_dangling": (31, 108),
+    "eigenvector_centrality": (23, 74),
+    "pagerank_weighted": (14, 36),
+    "ppr_seeded": (32, 113),
+}
+
+
+@pytest.mark.parametrize("call", sorted(_LOOP_COUNT_CEILINGS))
+def test_power_iteration_job_and_stage_counts(spark, call):
+    from go_mapreduce_spark.operators import graph as G
+
+    pairs = [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)]
+    sym = pairs + [(b, a) for a, b in pairs]
+    run = {
+        "pagerank_symmetric": lambda: G.pagerank(
+            spark.createDataFrame(sym, "u long, v long"), symmetric=True
+        ),
+        "pagerank": lambda: G.pagerank(
+            spark.createDataFrame(_DIRECTED, "u long, v long")
+        ),
+        "pagerank_dangling": lambda: G.pagerank_dangling(
+            spark.createDataFrame(_DIRECTED, "u long, v long")
+        ),
+        "eigenvector_centrality": lambda: G.eigenvector_centrality(
+            spark.createDataFrame(sym, "u long, v long")
+        ),
+        "pagerank_weighted": lambda: G.pagerank_weighted(
+            spark.createDataFrame(
+                [(u, v, float(1 + (u * v) % 3)) for u, v in sym],
+                "u long, v long, w double",
+            )
+        ),
+        "ppr_seeded": lambda: G.ppr_seeded(
+            spark.createDataFrame(_DIRECTED, "u long, v long"),
+            spark.createDataFrame([(1,), (5,)], "node long"),
+        ),
+    }[call]
+    sc = spark.sparkContext
+    group = f"loop-counts-{call}"
+    sc.setJobGroup(group, group)
+    try:
+        run().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    max_jobs, max_stages = _LOOP_COUNT_CEILINGS[call]
+    assert len(jobs) <= max_jobs, (call, len(jobs))
+    assert stages <= max_stages, (call, stages)
 
 
 def test_stream_upsert_totals_equals_batch(spark, sf_dir, tmp_path):

@@ -89,10 +89,28 @@ def test_batch_to_sqlite_rows_matches_row_path_conversions():
 
     import pyarrow as pa
 
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import (
+        BooleanType,
+        DateType,
+        DoubleType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampNTZType,
+        TimestampType,
+    )
 
-    schema = StructType.fromDDL(
-        "b boolean, d date, ts timestamp, s string, x double"
+    # built field by field (not fromDDL, which needs a live
+    # SparkContext) so the test runs alone, without a session
+    schema = StructType(
+        [
+            StructField("b", BooleanType()),
+            StructField("d", DateType()),
+            StructField("ts", TimestampType()),
+            StructField("tn", TimestampNTZType()),
+            StructField("s", StringType()),
+            StructField("x", DoubleType()),
+        ]
     )
     batch = pa.RecordBatch.from_arrays(
         [
@@ -102,16 +120,21 @@ def test_batch_to_sqlite_rows_matches_row_path_conversions():
                 [dt.datetime(2024, 2, 29, 12, 30, 15), None, None],
                 type=pa.timestamp("us"),
             ),
+            # timestamp_ntz: wall-clock text as given, no tz shift
+            pa.array(
+                [None, dt.datetime(1995, 1, 1, 23, 59, 59, 5), dt.datetime(2024, 1, 1)],
+                type=pa.timestamp("us"),
+            ),
             pa.array(["a", None, "c"]),
             pa.array([1.5, float("inf"), None], type=pa.float64()),
         ],
-        names=["b", "d", "ts", "s", "x"],
+        names=["b", "d", "ts", "tn", "s", "x"],
     )
     rows = SQ._batch_to_sqlite_rows(batch, schema)
     assert rows == [
-        (1, "2024-02-29", "2024-02-29 12:30:15", "a", 1.5),
-        (0, None, None, None, float("inf")),
-        (None, "1999-01-01", None, "c", None),
+        (1, "2024-02-29", "2024-02-29 12:30:15", None, "a", 1.5),
+        (0, None, None, "1995-01-01 23:59:59.000005", None, float("inf")),
+        (None, "1999-01-01", None, "2024-01-01 00:00:00", "c", None),
     ]
     # tz-AWARE timestamps (what Spark's Arrow batches actually carry)
     # must store as naive UTC text, byte-identical to the old Row path
@@ -125,7 +148,7 @@ def test_batch_to_sqlite_rows_matches_row_path_conversions():
         names=["ts"],
     )
     assert SQ._batch_to_sqlite_rows(
-        aware, StructType.fromDDL("ts timestamp")
+        aware, StructType([StructField("ts", TimestampType())])
     ) == [("2024-02-29 12:30:15",)]
     # and it is exactly what _to_sqlite_value does value-wise
     assert rows[0][:3] == tuple(
