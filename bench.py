@@ -193,9 +193,10 @@ def main() -> None:
     # The IVF centroid memo is keyed on the CORPUS (semanticHash +
     # files), so the sf0.001 warmup above does not warm it for
     # SF_DIR — and x41's first probe then pays the one-time quantizer
-    # train inside its timed window (BENCH_AB_r09: 4.57 s first run
-    # vs 0.86 s steady).  Pre-run the IVF queries once at SF_DIR here
-    # so their timed walls measure the probe, not index build.
+    # train inside its timed window (BENCH_AB_r09, at commit 96c2043:
+    # 4.57 s first run vs 0.86 s steady).  Pre-run the IVF queries once
+    # at SF_DIR here so their timed walls measure the probe, not index
+    # build.
     for _ivf_q in ("x41_ann_ivf", "x41b_ivf_clustered"):
         if _ivf_q in QUERIES:
             QUERIES[_ivf_q](spark, SF_DIR).write.format("noop").mode("overwrite").save()

@@ -1415,11 +1415,12 @@ def x315_holm_bonferroni(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PERM_B = 64
 # Corpus passes for the replicate aggregate.  2 is the measured
-# optimum (round-13 sweep, tools/ab_r13_x320_chunks.py, min-of-3
-# interleaved noop at sf0.1: 8→4.42 s, 2→3.33 s, 1→3.47 s, 1 with
-# codegen.maxFields=300→3.61 s): each sha256 serves 16 label windows,
-# so ≥4 chunks re-derive hashes other chunks already computed (8
-# chunks = 8 digests/row; ≤4 chunks = the minimal 4), while 1 chunk's
+# optimum (round-13 sweep, tools/ab_r13_x320_chunks.py as of commit
+# 96c2043, min-of-3 interleaved noop at sf0.1: 8→4.42 s, 2→3.33 s,
+# 1→3.47 s, 1 with codegen.maxFields=300→3.61 s): each sha256 serves
+# 16 label windows, so ≥4 chunks re-derive hashes other chunks
+# already computed (8 chunks = 8 digests/row; ≤4 chunks = the
+# minimal 4), while 1 chunk's
 # 130 agg buffers fall out of whole-stage codegen (>100 fields) and
 # give back the saved scan.  At 2 chunks: minimal hash work AND
 # 2·B/chunks+2 = 66 buffers stay codegen-sized.

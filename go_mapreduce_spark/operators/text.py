@@ -1620,7 +1620,8 @@ def x253_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
             -- threshold and the small-LOOKING explode subtree below
             -- it, and broadcasts the CORPUS side (BuildLeft over the
             -- Generate) — measured in the round-12 exponent split
-            -- (tools/measure_x253_split.py): the join stage carried
+            -- (tools/measure_x253_split.py as of commit 96c2043):
+            -- the join stage carried
             -- the query's whole sf1 exponent (0.664 vs train -0.003)
             -- because broadcast cost grows with the corpus.  At
             -- 100 TB the unhinted plan ships the exploded corpus to

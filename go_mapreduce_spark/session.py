@@ -35,8 +35,10 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     Python processes that import pickled-by-reference module functions
     — the package must be importable THERE, not just on the driver.
     Idempotent per SparkContext; a no-op overhead of one zip on first
-    use.  (On a real cluster the same is achieved by installing the
-    wheel on executors or spark-submit --py-files.)
+    use.  ``get_spark`` calls it; operators call it too, for sessions a
+    caller built without ``get_spark``.  (On a real cluster the same is
+    achieved by installing the wheel on executors or spark-submit
+    --py-files.)
     """
     sc = spark.sparkContext
     if sc in _SHIPPED_CONTEXTS:
@@ -51,6 +53,11 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     z.write(full, rel)
     sc.addPyFile(zpath)
+    # the Python streaming-source runner ignores addPyFile includes and
+    # reads only the PYTHONPATH of the functions' worker env; functions
+    # serialized from now on carry the zip there too
+    pp = sc.environment.get("PYTHONPATH")
+    sc.environment["PYTHONPATH"] = zpath + (os.pathsep + pp if pp else "")
     _SHIPPED_CONTEXTS.add(sc)
 
 
@@ -92,4 +99,7 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Python workers (data sources, applyInPandasWithState, UDFs) import
+    # the package too; ship it so the engine runs from any working dir
+    ensure_package_on_executors(spark)
     return spark

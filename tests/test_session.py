@@ -13,6 +13,7 @@ class _StubContext:
 
     def __init__(self):
         self.shipped: list[str] = []
+        self.environment: dict[str, str] = {}
 
     def addPyFile(self, path: str) -> None:
         self.shipped.append(path)
@@ -36,6 +37,9 @@ def test_package_ships_once_per_context_object(monkeypatch):
     assert len(a.shipped) == 1
     with zipfile.ZipFile(a.shipped[0]) as z:
         assert "go_mapreduce_spark/session.py" in z.namelist()
+    # Python functions serialized afterwards carry the zip on their
+    # worker PYTHONPATH (the streaming-source runner reads only that)
+    assert a.environment["PYTHONPATH"] == a.shipped[0]
 
     # a new context object gets the package shipped again
     b = _StubContext()
@@ -44,3 +48,34 @@ def test_package_ships_once_per_context_object(monkeypatch):
 
     for path in a.shipped + b.shipped:
         shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+
+
+_CWD_PROBE = """
+import sys
+sys.path.insert(0, {repo!r})
+from go_mapreduce_spark.queries import QUERIES
+from go_mapreduce_spark.session import get_spark
+spark = get_spark("cwd-probe")
+for q in ("x171_custom_source_roundtrip", "x213_custom_stream_source"):
+    print(q, len(QUERIES[q](spark, {sf!r}).collect()))
+"""
+
+
+def test_engine_runs_from_a_non_repo_working_directory(tmp_path, sf_dir):
+    # x171 reads a Python batch data source and x213 a Python streaming
+    # source; both are instantiated in Python workers, which (with no
+    # PYTHONPATH and a cwd outside the repo) find the package only
+    # because get_spark ships it
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _CWD_PROBE.format(repo=repo, sf=sf_dir)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "x171_custom_source_roundtrip 20" in proc.stdout
+    assert "x213_custom_stream_source 5" in proc.stdout

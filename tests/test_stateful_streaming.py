@@ -19,9 +19,6 @@ def stream_dir(spark, sf_dir, tmp_path_factory):
 
 
 def test_stateful_running_totals_converge_to_batch(spark, sf_dir, stream_dir):
-    from go_mapreduce_spark.session import ensure_package_on_executors
-
-    ensure_package_on_executors(spark)
     stream = read_event_stream(spark, stream_dir, max_files_per_trigger=1)
     q = (
         user_running_totals(stream)

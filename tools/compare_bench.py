@@ -8,6 +8,10 @@ A query whose raw ratio tracks the calib ratio drifted with the host,
 not the engine — same-HEAD full-bench totals have measured 196-270 s
 purely from VM throttling variance.
 
+The REGRESSION set is also printed as one ``tools/ab.py`` command
+between the two captures' recorded heads: the A/B set is picked
+mechanically from the diff, never by hand (round-8 verdict).
+
     python tools/compare_bench.py OLD.json NEW.json [ratio_threshold]
 """
 
@@ -61,6 +65,11 @@ def main() -> None:
     for tag, rows in (("REGRESSION", regs), ("WIN", wins)):
         for r, k in rows:
             print(f"{tag}{tag_sfx} {k}: {old[k]:.2f}s -> {new[k]:.2f}s ({r:.2f}x)")
+    if regs:
+        base = old_doc.get("head", "<old head>")
+        head = new_doc.get("head", "<new head>")
+        names = " ".join(k for _, k in regs)
+        print(f"A/B: python tools/ab.py --base {base} --head {head} {names}")
 
 
 if __name__ == "__main__":
