@@ -13,6 +13,7 @@ so the same code runs unchanged on a 1000-executor cluster:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import weakref
@@ -25,6 +26,33 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # contexts the package was shipped to, held weakly: an id() key could
 # be reused by a later context after the first one is collected
 _SHIPPED_CONTEXTS: weakref.WeakSet = weakref.WeakSet()
+
+
+def _package_zip() -> str:
+    """Zip the package's .py files to one fixed path per package dir.
+
+    Every new context rewrites the same file rather than leaving a new
+    temp dir behind; the write goes to a sibling file first and is
+    renamed into place, so a concurrent reader never sees a partial zip.
+    """
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    key = hashlib.sha256(pkg_dir.encode()).hexdigest()[:12]
+    zdir = os.path.join(tempfile.gettempdir(), f"gms_pkg_{key}")
+    os.makedirs(zdir, exist_ok=True)
+    fd, part = tempfile.mkstemp(dir=zdir, suffix=".part")
+    try:
+        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for f in files:
+                    if f.endswith(".py"):
+                        full = os.path.join(root, f)
+                        z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+        zpath = os.path.join(zdir, "go_mapreduce_spark.zip")
+        os.replace(part, zpath)
+    except BaseException:
+        os.unlink(part)
+        raise
+    return zpath
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -43,15 +71,7 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if sc in _SHIPPED_CONTEXTS:
         return
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.mkdtemp(prefix="gms_pkg_"), "go_mapreduce_spark.zip")
-    with zipfile.ZipFile(zpath, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    z.write(full, rel)
+    zpath = _package_zip()
     sc.addPyFile(zpath)
     # the Python streaming-source runner ignores addPyFile includes and
     # reads only the PYTHONPATH of the functions' worker env; functions

@@ -1,10 +1,11 @@
 """session.ensure_package_on_executors: the package ships once per
-SparkContext object, tracked by the object itself (not its id())."""
+SparkContext object, tracked by the object itself (not its id()), and
+always to the same zip path."""
 
 from __future__ import annotations
 
 import os
-import shutil
+import tempfile
 import zipfile
 
 
@@ -24,9 +25,10 @@ class _StubSession:
         self.sparkContext = sc
 
 
-def test_package_ships_once_per_context_object(monkeypatch):
+def test_package_ships_once_per_context_object(monkeypatch, tmp_path):
     from go_mapreduce_spark import session
 
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     # a dead context's id() can be reused by a new one; make every id()
     # collide outright, so only object identity can tell contexts apart
     monkeypatch.setattr(session, "id", lambda _obj: 0, raising=False)
@@ -41,13 +43,13 @@ def test_package_ships_once_per_context_object(monkeypatch):
     # worker PYTHONPATH (the streaming-source runner reads only that)
     assert a.environment["PYTHONPATH"] == a.shipped[0]
 
-    # a new context object gets the package shipped again
+    # a new context object gets the package shipped again, rewritten
+    # at the same path: repeated sessions leave no new temp dirs behind
     b = _StubContext()
     session.ensure_package_on_executors(_StubSession(b))
-    assert len(b.shipped) == 1
-
-    for path in a.shipped + b.shipped:
-        shutil.rmtree(os.path.dirname(path), ignore_errors=True)
+    assert b.shipped == a.shipped
+    assert [p.name for p in tmp_path.iterdir()] == [os.path.basename(os.path.dirname(a.shipped[0]))]
+    assert os.listdir(os.path.dirname(a.shipped[0])) == ["go_mapreduce_spark.zip"]
 
 
 _CWD_PROBE = """

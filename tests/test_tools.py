@@ -12,6 +12,7 @@ import json
 import os
 import subprocess
 import sys
+import tempfile
 
 import pytest
 
@@ -85,6 +86,42 @@ def test_materialize_head_matches_git_blob(ab, tmp_path):
         capture_output=True, check=True,
     ).stdout
     assert (tmp_path / "go_mapreduce_spark" / "queries.py").read_bytes() == blob
+
+
+class _FakeWorker:
+    """Stands in for a side's worker process: records how it was spawned."""
+
+    spawned: list = []
+
+    def __init__(self, cmd, cwd, env, **_kw):
+        self.cwd, self.tmpdir = cwd, env["TMPDIR"]
+        self.tmpdir_was_empty = os.listdir(self.tmpdir) == []
+        self.stdin = open(os.devnull, "w")
+        _FakeWorker.spawned.append(self)
+
+    def wait(self):
+        return 0
+
+
+@needs_git
+def test_each_side_gets_its_own_empty_tmpdir(ab, monkeypatch, capsys):
+    # sources and sinks build data once under tempfile.gettempdir() and
+    # reuse it; a shared TMPDIR would let one side read the other's build
+    _FakeWorker.spawned = []
+    popen = subprocess.Popen  # git still runs for real
+    monkeypatch.setattr(
+        ab.subprocess, "Popen",
+        lambda cmd, **kw: _FakeWorker(cmd, **kw) if "--worker" in cmd else popen(cmd, **kw),
+    )
+    monkeypatch.setattr(ab, "run_ab", lambda sides, queries, reps: (0, {"identical": True}))
+    monkeypatch.setattr(sys, "argv", ["ab.py", "--base", "HEAD", "--sf", REPO, "q"])
+    assert ab.main() == 0
+    base, head = _FakeWorker.spawned
+    assert head.cwd == REPO and base.cwd != REPO
+    assert base.tmpdir != head.tmpdir and base.tmpdir_was_empty and head.tmpdir_was_empty
+    assert tempfile.gettempdir() not in (base.tmpdir, head.tmpdir)
+    assert not os.path.exists(base.tmpdir) and not os.path.exists(head.tmpdir)  # removed after
+    assert json.loads(capsys.readouterr().out)["identical"] is True
 
 
 @needs_git

@@ -6,7 +6,10 @@ Each side is ``git archive REV go_mapreduce_spark fixtures`` extracted
 into a temp dir; without ``--head`` the head side is the working tree.
 Each side runs in its own long-lived worker process whose cwd and
 PYTHONPATH are that side's root, so the driver and the Python workers
-both import that side's code.
+both import that side's code.  Each side also gets its own empty
+TMPDIR: queries that build data once under the temp dir and reuse it
+(SQLite and lakehouse sources, sinks) build it with that side's code,
+in the identity collect, so the timed runs see the warm path.
 
 Identity gate: before any timing each side collects every query once.
 Unless the order-insensitive row hashes are equal, the tool prints the
@@ -116,10 +119,11 @@ def worker(sf: str) -> None:
 class Side:
     """One revision, served by a worker process over JSON lines."""
 
-    def __init__(self, name: str, root: str, sf: str):
+    def __init__(self, name: str, root: str, sf: str, tmpdir: str):
         self.name = name
+        os.makedirs(tmpdir)
         pp = os.environ.get("PYTHONPATH")
-        env = dict(os.environ, PYTHONPATH=root + (os.pathsep + pp if pp else ""))
+        env = dict(os.environ, PYTHONPATH=root + (os.pathsep + pp if pp else ""), TMPDIR=tmpdir)
         self.proc = subprocess.Popen(
             [sys.executable, os.path.abspath(__file__), "--worker", sf],
             cwd=root, env=env, stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
@@ -171,7 +175,9 @@ def main() -> int:
     if sys.argv[1:2] == ["--worker"]:
         worker(sys.argv[2])
         return 0
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
     ap.add_argument("--base", required=True, help="git revision of the base side")
     ap.add_argument("--head", help="git revision of the head side (default: working tree)")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
@@ -192,7 +198,7 @@ def main() -> int:
                 commit = git("rev-parse", "--verify", f"{rev}^{{commit}}").decode().strip()
                 root = materialize(commit, os.path.join(tmp, name))
             meta[name] = {"rev": rev, "commit": commit}
-            sides.append(Side(name, root, sf))
+            sides.append(Side(name, root, sf, os.path.join(tmp, f"{name}_tmp")))
         code, report = run_ab(sides, args.queries, args.reps)
     finally:
         for s in sides:
