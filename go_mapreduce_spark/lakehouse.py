@@ -53,6 +53,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from go_mapreduce_spark import scratch
+
 _MANIFESTS = "_manifests"
 _DATA = "data"
 _TMP = "_tmp"
@@ -652,55 +654,35 @@ def delete_table(spark: SparkSession, root: str, condition) -> int:
 _DEMO_COLS = ["o_orderkey", "o_orderstatus", "o_totalprice"]
 
 
-def _demo_root(sf_dir: str) -> str:
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"gms_lakehouse_{tag}")
-
-
 def ensure_demo_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (or reuse) the three-version demo table; returns root.
-
-    Reuse is safe — every version's content is a pure function of the
-    read-only fixture; rebuild happens only when the expected history
-    (version 3, batches b1+b2) is not already present.
-    """
+    """Build (or reuse) the three-version demo table; returns root."""
     from go_mapreduce_spark.sources.registry import load_table
 
-    root = _demo_root(sf_dir)
-    try:
-        m = read_manifest(root)
-        if m["version"] == 3 and m["batch_ids"] == ["b1", "b2"]:
-            return root
-    except FileNotFoundError:
-        pass
-    if os.path.isdir(root):
-        shutil.rmtree(root)
-
-    orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
-    k = F.col("o_orderkey")
-    create_table(
-        spark, orders.filter(k % 4 == 0), root, key_col="o_orderkey"
-    )
-    b1 = (
-        orders.filter(k % 8 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-        .unionByName(orders.filter(k % 4 == 1))
-        .withColumn("_op", F.lit("upsert"))
-    )
-    merge_table(spark, b1, root, batch_id="b1")
-    b2 = (
-        orders.filter(k % 16 == 0)
-        .withColumn("_op", F.lit("delete"))
-        .unionByName(
-            orders.filter(k % 4 == 1)
-            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(500.0))
+    def build(root: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
+        k = F.col("o_orderkey")
+        create_table(
+            spark, orders.filter(k % 4 == 0), root, key_col="o_orderkey"
+        )
+        b1 = (
+            orders.filter(k % 8 == 0)
+            .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
+            .unionByName(orders.filter(k % 4 == 1))
             .withColumn("_op", F.lit("upsert"))
         )
-    )
-    merge_table(spark, b2, root, batch_id="b2")
-    return root
+        merge_table(spark, b1, root, batch_id="b1")
+        b2 = (
+            orders.filter(k % 16 == 0)
+            .withColumn("_op", F.lit("delete"))
+            .unionByName(
+                orders.filter(k % 4 == 1)
+                .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(500.0))
+                .withColumn("_op", F.lit("upsert"))
+            )
+        )
+        merge_table(spark, b2, root, batch_id="b2")
+
+    return scratch.build_once("lakehouse_demo", build, sf_dir)
 
 
 def x149_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,16 +750,12 @@ def x151_stream_lakehouse_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from go_mapreduce_spark.streaming.events import (
         _ensure_replay_events,
-        _replay_base,
         read_event_stream,
     )
 
-    root = os.path.join(_replay_base(sf_dir), "x151_table")
-    if os.path.isdir(root):
-        shutil.rmtree(root)
-    ckpt = os.path.join(_replay_base(sf_dir), "x151_ckpt")
-    if os.path.isdir(ckpt):
-        shutil.rmtree(ckpt)
+    work = scratch.fresh_dir("x151", sf_dir)
+    root = os.path.join(work, "table")
+    ckpt = os.path.join(work, "ckpt")
     empty = spark.createDataFrame(
         [], "user_id long, n_events long, total_value decimal(38,6)"
     )
@@ -1166,37 +1144,24 @@ def read_appends(
     )
 
 
-_APPEND_DEMO_BATCHES = 3
-
-
 def ensure_append_demo(spark: SparkSession, sf_dir: str) -> str:
     """Append-only demo table: the events table committed in 3 daily
     batches (day-of-month mod 3), exactly once each."""
-    import tempfile
-
     from go_mapreduce_spark.sources.registry import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"gms_lakehouse_app_{tag}")
-    try:
-        m = read_manifest(root)
-        if m["version"] == _APPEND_DEMO_BATCHES and m["batch_ids"] == ["a2", "a3"]:
-            return root
-    except FileNotFoundError:
-        pass
-    if os.path.isdir(root):
-        shutil.rmtree(root)
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value", F.dayofmonth("ts").alias("dom")
-    )
-    create_table(
-        spark, ev.filter(F.col("dom") % 3 == 0), root, key_col="event_id"
-    )
-    for i, batch in ((2, "a2"), (3, "a3")):
-        append_table(
-            spark, ev.filter(F.col("dom") % 3 == i - 1), root, batch_id=batch
+    def build(root: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value", F.dayofmonth("ts").alias("dom")
         )
-    return root
+        create_table(
+            spark, ev.filter(F.col("dom") % 3 == 0), root, key_col="event_id"
+        )
+        for i, batch in ((2, "a2"), (3, "a3")):
+            append_table(
+                spark, ev.filter(F.col("dom") % 3 == i - 1), root, batch_id=batch
+            )
+
+    return scratch.build_once("lakehouse_append_demo", build, sf_dir)
 
 
 def x170_incremental_append_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1229,13 +1194,6 @@ def x170_incremental_append_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _dv_demo_root(sf_dir: str) -> str:
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"gms_lakehouse_dv_{tag}")
-
-
 def ensure_dv_demo(spark: SparkSession, sf_dir: str) -> str:
     """v1 create (orders with o_orderkey % 4 == 0), v2 merge-on-read
     DELETE of finished orders with o_orderkey % 3 == 0 — a scattered
@@ -1245,24 +1203,17 @@ def ensure_dv_demo(spark: SparkSession, sf_dir: str) -> str:
     file)."""
     from go_mapreduce_spark.sources.registry import load_table
 
-    root = _dv_demo_root(sf_dir)
-    try:
-        m = read_manifest(root)
-        if m["version"] == 2 and m["op"] == "delete":
-            return root
-    except FileNotFoundError:
-        pass
-    if os.path.isdir(root):
-        shutil.rmtree(root)
-    orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
-    k = F.col("o_orderkey")
-    create_table(spark, orders.filter(k % 4 == 0), root, key_col="o_orderkey")
-    delete_table(
-        spark,
-        root,
-        (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 3 == 0),
-    )
-    return root
+    def build(root: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
+        k = F.col("o_orderkey")
+        create_table(spark, orders.filter(k % 4 == 0), root, key_col="o_orderkey")
+        delete_table(
+            spark,
+            root,
+            (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 3 == 0),
+        )
+
+    return scratch.build_once("lakehouse_dv_demo", build, sf_dir)
 
 
 def x197_lakehouse_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1343,34 +1294,20 @@ def restore_table(root: str, version: int, prune_ledger: bool = False) -> int:
     )
 
 
-def _restore_demo_root(sf_dir: str) -> str:
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"gms_lh_restore_{tag}")
-
-
 def ensure_restore_demo(spark: SparkSession, sf_dir: str) -> str:
     """create → append → DV delete → restore-to-v1 history; reused
     when already present (content is a pure function of the fixture)."""
     from go_mapreduce_spark.sources.registry import load_table
 
-    root = _restore_demo_root(sf_dir)
-    try:
-        m = read_manifest(root)
-        if m["version"] == 4 and m.get("op") == "restore":
-            return root
-    except FileNotFoundError:
-        pass
-    if os.path.isdir(root):
-        shutil.rmtree(root)
-    orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
-    k = F.col("o_orderkey")
-    create_table(spark, orders.filter(k % 4 == 0), root, key_col="o_orderkey")
-    append_table(spark, orders.filter(k % 4 == 2), root, batch_id="a1")
-    delete_table(spark, root, k % 8 == 0)
-    restore_table(root, 1)
-    return root
+    def build(root: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
+        k = F.col("o_orderkey")
+        create_table(spark, orders.filter(k % 4 == 0), root, key_col="o_orderkey")
+        append_table(spark, orders.filter(k % 4 == 2), root, batch_id="a1")
+        delete_table(spark, root, k % 8 == 0)
+        restore_table(root, 1)
+
+    return scratch.build_once("lakehouse_restore_demo", build, sf_dir)
 
 
 def x252_lakehouse_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1401,36 +1338,21 @@ def x252_lakehouse_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("version")
 
 
-def _lookup_demo_root(sf_dir: str) -> str:
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"gms_lh_lookup_{tag}")
-
-
 def ensure_lookup_demo(spark: SparkSession, sf_dir: str) -> str:
     """Single-version table (orders with o_orderkey % 4 == 0) whose
-    manifest carries per-file Bloom filters; rebuilt if a cached copy
-    predates the bloom index."""
+    manifest carries per-file Bloom filters."""
     from go_mapreduce_spark.sources.registry import load_table
 
-    root = _lookup_demo_root(sf_dir)
-    try:
-        m = read_manifest(root)
-        if m["version"] == 1 and all(e.get("bloom") for e in m["files"]):
-            return root
-    except FileNotFoundError:
-        pass
-    if os.path.isdir(root):
-        shutil.rmtree(root)
-    orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
-    create_table(
-        spark,
-        orders.filter(F.col("o_orderkey") % 4 == 0),
-        root,
-        key_col="o_orderkey",
-    )
-    return root
+    def build(root: str) -> None:
+        orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
+        create_table(
+            spark,
+            orders.filter(F.col("o_orderkey") % 4 == 0),
+            root,
+            key_col="o_orderkey",
+        )
+
+    return scratch.build_once("lakehouse_lookup_demo", build, sf_dir)
 
 
 LOOKUP_N_KEYS = 5
@@ -1502,13 +1424,6 @@ def x274_manifest_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("version")
 
 
-def _vacuum_demo_root(sf_dir: str) -> str:
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"gms_lh_vacuum_{tag}")
-
-
 def x286_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention lifecycle as a declared query: build a 3-version
     history (create → two appends), VACUUM to the newest 2 versions,
@@ -1525,9 +1440,7 @@ def x286_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from go_mapreduce_spark.sources.registry import load_table
 
-    root = _vacuum_demo_root(sf_dir)
-    if os.path.isdir(root):
-        shutil.rmtree(root)
+    root = scratch.fresh_dir("x286", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
     k = F.col("o_orderkey")
     create_table(spark, orders.filter(k % 8 == 0), root, key_col="o_orderkey")
@@ -1764,13 +1677,6 @@ WAP_RULES = {
 }
 
 
-def _wap_demo_root(sf_dir: str) -> str:
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"gms_wap_{tag}")
-
-
 def x367_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end Write-Audit-Publish: create a base table (orders
     with key%4<3), stage the key%4==3 slice on an audit branch, run
@@ -1785,9 +1691,7 @@ def x367_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     from go_mapreduce_spark.functions.numeric import dsum
     from go_mapreduce_spark.sources.registry import load_table
 
-    root = _wap_demo_root(sf_dir)
-    if os.path.isdir(root):
-        shutil.rmtree(root)
+    root = scratch.fresh_dir("x367", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(*_DEMO_COLS)
     k = F.col("o_orderkey")
     create_table(spark, orders.filter(k % 4 < 3), root, key_col="o_orderkey")
@@ -2014,12 +1918,8 @@ def x388_gdpr_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts plus the residue count (must be 0), all oracle-checkable
     closed-form from the fixture.
     """
-    import shutil
-    import tempfile
-
     from go_mapreduce_spark.sources.registry import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
@@ -2027,37 +1927,30 @@ def x388_gdpr_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     results = []
+    work = scratch.fresh_dir("x388", sf_dir)
     roots = {}
-    try:
-        for name, df, key in (
-            ("customer", cust, "c_custkey"),
-            ("orders", orders, "o_orderkey"),
-        ):
-            # per-run unique root: a fixed path keyed only by the sf
-            # tag races under concurrent pytest/bench runs (round-7
-            # ADVICE) — mkdtemp gives each invocation its own tables
-            root = tempfile.mkdtemp(prefix=f"gms_gdpr_{tag}_{name}_")
-            roots[name] = root
-            create_table(spark, df, root, key_col=key)
-        fc = F.pmod(F.col("c_custkey"), F.lit(GDPR_FORGET_MOD)) == 7
-        fo = F.pmod(F.col("o_custkey"), F.lit(GDPR_FORGET_MOD)) == 7
-        for name, cond in (("customer", fc), ("orders", fo)):
-            before = read_table(spark, roots[name]).count()
-            delete_table(spark, roots[name], cond)  # returns the version
-            after = read_table(spark, roots[name]).count()
-            results.append((name, before, before - after, after))
-        residue = (
-            read_table(spark, roots["orders"])
-            .join(
-                read_table(spark, roots["customer"]).select("c_custkey"),
-                F.col("o_custkey") == F.col("c_custkey"),
-                "left_anti",
-            )
-            .count()
+    for name, df, key in (
+        ("customer", cust, "c_custkey"),
+        ("orders", orders, "o_orderkey"),
+    ):
+        roots[name] = os.path.join(work, name)
+        create_table(spark, df, roots[name], key_col=key)
+    fc = F.pmod(F.col("c_custkey"), F.lit(GDPR_FORGET_MOD)) == 7
+    fo = F.pmod(F.col("o_custkey"), F.lit(GDPR_FORGET_MOD)) == 7
+    for name, cond in (("customer", fc), ("orders", fo)):
+        before = read_table(spark, roots[name]).count()
+        delete_table(spark, roots[name], cond)  # returns the version
+        after = read_table(spark, roots[name]).count()
+        results.append((name, before, before - after, after))
+    residue = (
+        read_table(spark, roots["orders"])
+        .join(
+            read_table(spark, roots["customer"]).select("c_custkey"),
+            F.col("o_custkey") == F.col("c_custkey"),
+            "left_anti",
         )
-    finally:
-        for root in roots.values():
-            shutil.rmtree(root, ignore_errors=True)
+        .count()
+    )
     # every surviving order must reference a surviving customer: the
     # anti-join residue equals orders whose customer was forgotten
     # AFTER the cascade — 0 by construction, asserted by the oracle

@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from go_mapreduce_spark import scratch
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -613,50 +615,24 @@ def x416_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Result rows are identical to the batch x415 by construction —
     decode depends only on row content, never on batch boundaries —
     so the oracle is the same media_id arithmetic.  ``sf_dir`` only
-    namespaces the replay scratch dir (payloads are scale-free).
+    keys the sink's scratch dir (payloads are scale-free).
     """
     from go_mapreduce_spark.session import ensure_package_on_executors
-    from go_mapreduce_spark.streaming.events import (
-        _replay_base,
-        _replay_to_parquet,
-    )
+    from go_mapreduce_spark.streaming.events import _replay_to_parquet
 
     ensure_package_on_executors(spark)
 
-    src_dir = os.path.join(_replay_base(sf_dir), "media_wav_src")
-    # cache validity is keyed on the FIXTURE CONTENT (mtime+size in
-    # the marker), not just a _SUCCESS flag: regenerating
-    # fixtures/media_wav.parquet invalidates the replay copy instead
-    # of silently serving stale payloads from /tmp
-    fx_stat = [
-        (os.path.basename(p), int(st.st_mtime_ns), st.st_size)
-        for p in sorted(
-            os.path.join(WAV_FIXTURE_PATH, f)
-            for f in os.listdir(WAV_FIXTURE_PATH)
-            if f.endswith(".parquet")
-        )
-        for st in (os.stat(p),)
-    ] if os.path.isdir(WAV_FIXTURE_PATH) else [
-        ("file", int(os.stat(WAV_FIXTURE_PATH).st_mtime_ns), os.stat(WAV_FIXTURE_PATH).st_size)
-    ]
-    marker = os.path.join(src_dir, "_FIXTURE_KEY")
-    key = repr(fx_stat)
-    valid = False
-    if os.path.isfile(os.path.join(src_dir, "_SUCCESS")) and os.path.isfile(marker):
-        with open(marker) as fh:
-            valid = fh.read() == key
-    if not valid:
+    def build(path: str) -> None:
         (
             spark.read.parquet(WAV_FIXTURE_PATH)
             .select("media_id", "payload")
             .repartitionByRange(4, "media_id")
             .sortWithinPartitions("media_id")
             .write.mode("overwrite")
-            .parquet(src_dir)
+            .parquet(path)
         )
-        with open(marker, "w") as fh:
-            fh.write(key)
 
+    src_dir = scratch.build_once("media_wav_src", build, WAV_FIXTURE_PATH)
     stream = (
         spark.readStream.schema("media_id bigint, payload binary")
         .option("maxFilesPerTrigger", 1)

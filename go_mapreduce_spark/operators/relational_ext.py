@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from go_mapreduce_spark import scratch
 from go_mapreduce_spark.functions.numeric import dsum, dsum_expr
 from go_mapreduce_spark.sources.registry import load_table
 
@@ -1548,11 +1549,9 @@ def x251_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays fully distributed with pushdown intact.
     """
     import os
-    import tempfile
 
     orders = load_table(spark, sf_dir, "orders")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    root = os.path.join(tempfile.gettempdir(), f"gms_evo_{tag}")
+    root = scratch.fresh_dir("x251", sf_dir)
     g1, g2 = os.path.join(root, "gen1"), os.path.join(root, "gen2")
     orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"

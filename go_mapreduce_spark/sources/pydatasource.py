@@ -29,6 +29,8 @@ import os
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
+from go_mapreduce_spark import scratch
+
 # The TSV wire contract, pinned on BOTH sides (write with Spark's CSV
 # sink, read with pyarrow): Spark's writer defaults escape embedded
 # quotes with a backslash while pyarrow's parser expects RFC-4180
@@ -129,21 +131,17 @@ def x171_custom_source_roundtrip(spark, sf_dir: str):
     any loss in the sink→connector cycle (type round-trip, shard
     boundary, dropped/duplicated partition) hash-mismatches.
     """
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.operators.wordcount import word_counts
     from go_mapreduce_spark.sources.registry import load_table
     from go_mapreduce_spark.sources.sinks import write_sorted_tsv
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(tempfile.gettempdir(), f"gms_wc_tsv_{tag}")
-    if not os.path.isdir(out) or not any(
-        f.startswith("part-") for f in os.listdir(out)
-    ):
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("text")
-        write_sorted_tsv(word_counts(docs), out, key_cols=["word"])
+        write_sorted_tsv(word_counts(docs), path, key_cols=["word"])
+
+    out = scratch.build_once("wc_tsv", build, sf_dir)
     register(spark)
     df = (
         spark.read.format("gms_tsv")
@@ -336,18 +334,11 @@ def x213_custom_stream_source(spark, sf_dir: str):
     reports only committed batches, so the parquet sink already holds
     that batch's files when we stop).
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.sources.registry import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    staged = os.path.join(tempfile.gettempdir(), f"gms_ev_tsv_{tag}")
-    if not os.path.isdir(staged) or not any(
-        f.startswith("part-") for f in os.listdir(staged)
-    ):
+    def build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "event_type", "value"
         )
@@ -358,16 +349,14 @@ def x213_custom_stream_source(spark, sf_dir: str):
         )
         for k, v in TSV_WRITE_OPTIONS.items():
             w = w.option(k, v)
-        w.csv(staged)
+        w.csv(path)
+
+    staged = scratch.build_once("events_tsv", build, sf_dir)
     register_stream(spark)
-    ckpt = os.path.join(tempfile.gettempdir(), f"gms_x213_ckpt_{tag}")
-    out_dir = os.path.join(tempfile.gettempdir(), f"gms_x213_out_{tag}")
-    marker = os.path.join(tempfile.gettempdir(), f"gms_x213_marker_{tag}.json")
-    for d in (ckpt, out_dir):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    if os.path.isfile(marker):
-        os.remove(marker)
+    work = scratch.fresh_dir("x213", sf_dir)
+    ckpt = os.path.join(work, "ckpt")
+    out_dir = os.path.join(work, "out")
+    marker = os.path.join(work, "marker.json")
     stream = (
         spark.readStream.format("gms_tsv_stream")
         .schema("event_id bigint, user_id bigint, event_type string, value double")
@@ -535,24 +524,16 @@ def x215_lakehouse_stream_source(spark, sf_dir: str):
     hash-mismatches.  The ``commitMarker`` restart floor is scoped to
     the checkpoint (both recreated together).
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.lakehouse import ensure_append_demo
 
     root = ensure_append_demo(spark, sf_dir)
     register_lakehouse_stream(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    ckpt = os.path.join(tempfile.gettempdir(), f"gms_x215_ckpt_{tag}")
-    out_dir = os.path.join(tempfile.gettempdir(), f"gms_x215_out_{tag}")
-    marker = os.path.join(tempfile.gettempdir(), f"gms_x215_marker_{tag}.json")
-    for d in (ckpt, out_dir):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    if os.path.isfile(marker):
-        os.remove(marker)
+    work = scratch.fresh_dir("x215", sf_dir)
+    ckpt = os.path.join(work, "ckpt")
+    out_dir = os.path.join(work, "out")
+    marker = os.path.join(work, "marker.json")
     stream = (
         spark.readStream.format("gms_lakehouse_stream")
         .schema(

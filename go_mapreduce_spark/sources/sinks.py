@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from go_mapreduce_spark import scratch
+
 
 def write_parquet(
     df: DataFrame,
@@ -167,16 +169,12 @@ def x147_jsonl_roundtrip(spark, sf_dir: str) -> DataFrame:
     file per partition, no shuffle); only the final aggregate
     exchanges K rows.
     """
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.functions.numeric import dsum
     from go_mapreduce_spark.sources.registry import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"gms_jsonl_{tag}")
+    path = scratch.fresh_dir("x147", sf_dir)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -212,16 +210,12 @@ def x191_orc_roundtrip(spark, sf_dir: str) -> DataFrame:
     file per partition, no shuffle), predicate/column pushdown on
     read-back is the same DataSource V1 path parquet uses.
     """
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.functions.numeric import dsum
     from go_mapreduce_spark.sources.registry import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"gms_orc_{tag}")
+    path = scratch.fresh_dir("x191", sf_dir)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_returnflag",
@@ -262,15 +256,13 @@ def x264_malformed_csv(spark, sf_dir: str) -> DataFrame:
     table and the planted count is a constant.
     """
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.functions.numeric import dsum
     from go_mapreduce_spark.sources.registry import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"gms_badcsv_{tag}")
+    path = scratch.fresh_dir("x264", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )

@@ -55,6 +55,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from go_mapreduce_spark import scratch
+
 _DEFAULT_PARTITIONS = 8
 
 # sqlite declared-type affinity → Spark DDL (schema inference)
@@ -506,39 +508,25 @@ def register(spark) -> None:
 
 
 def _ensure_orders_db(spark, sf_dir: str) -> str:
-    """Build the sqlite orders mirror once per sf tag through the
-    two-phase parallel writer; reuse on later calls (constant disk,
-    same discipline as the stream-replay scratch dirs).
-
-    Concurrency-safe: the mirror is built at a UNIQUE temp path and
-    ``os.replace``d into the shared name atomically, so the shared
-    path either doesn't exist or is a complete database — two
-    concurrent runs each build their own copy and the last rename
-    wins with identical content (no build-then-marker window where
-    both write the same file, the race round-7 ADVICE flagged for
-    x388 and round-8 ADVICE re-flagged here)."""
-    import tempfile
-    import uuid as _uuid
-
+    """Build the sqlite orders mirror once through the two-phase
+    parallel writer; reuse it on later calls."""
     from go_mapreduce_spark.sources.registry import load_table
 
     register(spark)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    db = os.path.join(tempfile.gettempdir(), f"gms_sqlite_{tag}.db")
-    if not os.path.isfile(db):
-        build = f"{db}.build-{_uuid.uuid4().hex}"
+
+    def build(path: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         )
         (
             orders.write.format("gms_sqlite")
             .mode("overwrite")
-            .option("path", build)
+            .option("path", os.path.join(path, "orders.db"))
             .option("table", "orders")
             .save()
         )
-        os.replace(build, db)
-    return db
+
+    return os.path.join(scratch.build_once("sqlite_orders", build, sf_dir), "orders.db")
 
 
 def x410_sqlite_roundtrip(spark, sf_dir: str):
@@ -776,21 +764,14 @@ def x411_sqlite_stream_ingest(spark, sf_dir: str):
     CDC-lite shape for dimension/control tables: the operational store
     needs no triggers or binlog, just append-only rowids.
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.functions.numeric import dsum
 
     db = _ensure_orders_db(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), f"gms_sqlite_stream_{tag}")
-    out_dir = os.path.join(base, "ingest_out")
-    ckpt_dir = os.path.join(base, "ingest_ckpt")
-    for d in (out_dir, ckpt_dir):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    base = scratch.fresh_dir("x411", sf_dir)
+    out_dir = os.path.join(base, "out")
+    ckpt_dir = os.path.join(base, "ckpt")
 
     def drain():
         q = (
@@ -830,9 +811,6 @@ def x412_sqlite_stream_sink(spark, sf_dir: str):
     The oracle is the same aggregate over raw events, so a
     double-applied epoch, lost stage, or marker bug hash-mismatches.
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.functions.numeric import dsum
@@ -840,15 +818,9 @@ def x412_sqlite_stream_sink(spark, sf_dir: str):
 
     register(spark)
     events_dir = _ensure_replay_events(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    base = os.path.join(tempfile.gettempdir(), f"gms_sqlite_stream_{tag}")
+    base = scratch.fresh_dir("x412", sf_dir)
     db = os.path.join(base, "events_sink.db")
-    ckpt_dir = os.path.join(base, "sink_ckpt")
-    os.makedirs(base, exist_ok=True)
-    if os.path.isdir(ckpt_dir):
-        shutil.rmtree(ckpt_dir)
-    if os.path.isfile(db):
-        os.remove(db)
+    ckpt_dir = os.path.join(base, "ckpt")
     schema = spark.read.parquet(events_dir).schema
 
     def drain():

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from go_mapreduce_spark import scratch
+
 # Schema of the replayed event stream (ts already µs-normalized —
 # streams come from a normalized source, not raw ns parquet).
 EVENT_SCHEMA = StructType(
@@ -192,17 +194,6 @@ REPLAY_SHUFFLE_PARTITIONS = 4
 REPLAY_FINAL_WATERMARK: dict[str, str | None] = {}
 
 
-def _replay_base(sf_dir: str) -> str:
-    """Deterministic per-sf scratch dir for stream replays: constant
-    disk across repeated bench/correctness invocations (the round-2
-    mkdtemp-per-call shape leaked a full events copy per run)."""
-    import os
-    import tempfile
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"gms_stream_replay_{tag}")
-
-
 def _ensure_replay_events(spark: SparkSession, sf_dir: str) -> str:
     """Write the events table as a 4-file parquet replay source once
     per sf; reuse on later calls (availableNow replays it in 2-file
@@ -214,36 +205,32 @@ def _ensure_replay_events(spark: SparkSession, sf_dir: str) -> str:
     would mark every older row in later batches late and, for
     stateful ops like the x65 stream-stream join, silently drop it).
     """
-    import os
-
     from go_mapreduce_spark.sources.registry import load_table
 
-    base = _replay_base(sf_dir)
-    events_dir = os.path.join(base, "events")
-    if not os.path.isfile(os.path.join(events_dir, "_SUCCESS")):
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .repartitionByRange(4, "ts")
             .sortWithinPartitions("ts")
             .write.mode("overwrite")
-            .parquet(events_dir)
+            .parquet(path)
         )
-    return events_dir
+
+    return scratch.build_once("replay_events", build, sf_dir)
 
 
 def _replay_to_parquet(
     spark: SparkSession, sf_dir: str, name: str, stream_df: DataFrame
 ) -> DataFrame:
     """Drain ``stream_df`` (availableNow, append mode) into a parquet
-    sink under the per-sf scratch dir; return the sink relation.
+    sink in ``scratch.fresh_dir(name, sf_dir)``; return the sink relation.
 
     This is the 100 TB backfill shape: append output + file sink keep
     driver memory flat (state holds only open windows; finalized rows
     go straight to distributed storage), unlike a ``complete``-mode
     memory sink, which materializes every window on the driver and
-    grows with stream length.  Sink + checkpoint are recreated per
-    invocation (constant disk, deterministic), so each call is a full
-    deterministic replay.
+    grows with stream length.  Sink + checkpoint start empty on every
+    call, so each call is a full deterministic replay.
 
     State partitioning is pinned to ``REPLAY_SHUFFLE_PARTITIONS`` for
     the replay's lifetime (restored after): every stateful operator
@@ -258,14 +245,10 @@ def _replay_to_parquet(
     Results are partition-count-invariant (determinism suite).
     """
     import os
-    import shutil
 
-    base = _replay_base(sf_dir)
-    out_dir = os.path.join(base, f"{name}_out")
-    ckpt_dir = os.path.join(base, f"{name}_ckpt")
-    for d in (out_dir, ckpt_dir):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    work = scratch.fresh_dir(name, sf_dir)
+    out_dir = os.path.join(work, "out")
+    ckpt_dir = os.path.join(work, "ckpt")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_SHUFFLE_PARTITIONS))
     try:
@@ -399,22 +382,19 @@ def _ensure_replay_events_dup(spark: SparkSession, sf_dir: str) -> str:
     """Replay source with every event DUPLICATED (events ∪ events),
     still range-partitioned and ts-sorted: the planted-duplicate
     input for the streaming-dedup gate.  Written once per sf."""
-    import os
-
     from go_mapreduce_spark.sources.registry import load_table
 
-    base = _replay_base(sf_dir)
-    dup_dir = os.path.join(base, "events_dup")
-    if not os.path.isfile(os.path.join(dup_dir, "_SUCCESS")):
+    def build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         (
             ev.unionAll(ev)
             .repartitionByRange(4, "ts")
             .sortWithinPartitions("ts")
             .write.mode("overwrite")
-            .parquet(dup_dir)
+            .parquet(path)
         )
-    return dup_dir
+
+    return scratch.build_once("replay_events_dup", build, sf_dir)
 
 
 def x90_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -818,18 +798,14 @@ def x236_multisink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     or partially-written batch hash-mismatches the closed-form oracle.
     """
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
     src = _ensure_replay_events(spark, sf_dir)
-    base = _replay_base(sf_dir)
-    raw_dir = os.path.join(base, "x236_raw")
-    agg_dir = os.path.join(base, "x236_agg")
-    ckpt = os.path.join(base, "x236_ckpt")
-    for d in (raw_dir, agg_dir, ckpt):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    base = scratch.fresh_dir("x236", sf_dir)
+    raw_dir = os.path.join(base, "raw")
+    agg_dir = os.path.join(base, "agg")
+    ckpt = os.path.join(base, "ckpt")
 
     stream = read_event_stream(spark, src, max_files_per_trigger=2)
 
@@ -898,12 +874,9 @@ def x271_stream_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    base = _replay_base(sf_dir)
-    state_dir = os.path.join(base, "x271_state")
-    out_dir = os.path.join(base, "x271_ckpt")
-    for d in (state_dir, out_dir):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    base = scratch.fresh_dir("x271", sf_dir)
+    state_dir = os.path.join(base, "state")
+    out_dir = os.path.join(base, "ckpt")
 
     stream = read_event_stream(
         spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2

@@ -55,3 +55,21 @@ def canon_rows(cols, rows):
 
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted("|".join(c(r[i]) for i in order) for r in rows)
+
+
+@pytest.fixture
+def scratch_dirs(monkeypatch):
+    """The dirs ``scratch.fresh_dir`` hands out during the test, by name
+    (the latest call wins), so a test can inspect a query's sinks and
+    checkpoints."""
+    from go_mapreduce_spark import scratch
+
+    made: dict[str, str] = {}
+    real = scratch.fresh_dir
+
+    def spy(name: str, sf_dir: str) -> str:
+        made[name] = real(name, sf_dir)
+        return made[name]
+
+    monkeypatch.setattr(scratch, "fresh_dir", spy)
+    return made

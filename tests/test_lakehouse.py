@@ -159,7 +159,7 @@ def test_empty_batch_commits_only_the_batch_id(spark, table):
     assert LH.read_manifest(table)["batch_ids"] == ["e1"]
 
 
-def test_stream_upsert_batch_replay_is_exactly_once(spark, sf_dir):
+def test_stream_upsert_batch_replay_is_exactly_once(spark, sf_dir, scratch_dirs):
     """The streaming CDC apply must survive a foreachBatch REPLAY (the
     crash-between-write-and-checkpoint case) without double-counting:
     re-running the drained query's batches against the SAME table via
@@ -185,9 +185,7 @@ def test_stream_upsert_batch_replay_is_exactly_once(spark, sf_dir):
 
     # simulate the crash-replay: re-apply a merge under batch 0's
     # already-recorded id — version AND state must not move
-    from go_mapreduce_spark.streaming.events import _replay_base
-
-    root = os.path.join(_replay_base(sf_dir), "x151_table")
+    root = os.path.join(scratch_dirs["x151"], "table")
     v = LH.current_version(root)
     before = {tuple(r) for r in LH.read_table(spark, root).collect()}
     replay = spark.createDataFrame(

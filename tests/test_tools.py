@@ -1,6 +1,8 @@
 """tools/: the revision A/B tool (identity gate, git-archive sides, one
 end-to-end smoke) and a guard that every tool still compiles and
-imports only engine names that exist."""
+imports only engine names that exist; plus a guard that only
+``go_mapreduce_spark/scratch.py`` decides where engine scratch data
+lives."""
 
 from __future__ import annotations
 
@@ -168,3 +170,28 @@ def test_tool_compiles_and_its_engine_imports_resolve(path):
             assert importlib.util.find_spec(f"{module}.{name}") is not None, (
                 f"{os.path.basename(path)}: `from {module} import {name}` does not resolve"
             )
+
+
+_TEMP_DIR_CALLS = {"gettempdir", "mkdtemp"}
+# session.py keeps its own fixed path for the package zip
+_SCRATCH_OWNERS = {"go_mapreduce_spark/scratch.py", "go_mapreduce_spark/session.py"}
+
+
+def test_engine_scratch_paths_come_from_the_scratch_module():
+    hits = {}
+    for path in glob.glob(os.path.join(REPO, "go_mapreduce_spark", "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, REPO)
+        if rel in _SCRATCH_OWNERS:
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        lines = [
+            node.lineno
+            for node in ast.walk(tree)
+            if (isinstance(node, ast.Attribute) and node.attr in _TEMP_DIR_CALLS)
+            or (isinstance(node, ast.Name) and node.id in _TEMP_DIR_CALLS)
+            or (isinstance(node, ast.alias) and node.name in _TEMP_DIR_CALLS)
+        ]
+        if lines:
+            hits[rel] = lines
+    assert hits == {}, "pick scratch paths with go_mapreduce_spark.scratch"

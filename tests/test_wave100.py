@@ -177,23 +177,19 @@ def test_query_sniff_sees_past_leading_nulls(tmp_path, spark):
     assert got == [(7, 2.5), (None, 1.5), (None, None)]
 
 
-def test_orders_db_built_atomically(spark, sf_dir):
+def test_orders_db_built_atomically(spark, sf_dir, tmp_path, monkeypatch):
     import tempfile
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    db = os.path.join(tempfile.gettempdir(), f"gms_sqlite_{tag}.db")
-    if os.path.isfile(db):
-        os.remove(db)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # force a fresh build
+    db = SQ._ensure_orders_db(spark, sf_dir)
     got = SQ._ensure_orders_db(spark, sf_dir)
     assert got == db and os.path.isfile(db)
     # no build residue (unique build paths are renamed away or staged
     # files consumed by the writer commit)
-    residue = [
-        f
-        for f in os.listdir(tempfile.gettempdir())
-        if f.startswith(f"gms_sqlite_{tag}.db.build-")
-    ]
+    slot = os.path.dirname(os.path.dirname(db))
+    residue = [f for f in os.listdir(slot) if f.startswith("build-")]
     assert residue == []
+    assert os.listdir(os.path.dirname(db)) == ["orders.db"]
     con = sqlite3.connect(db)
     n = con.execute("SELECT COUNT(*) FROM orders").fetchone()[0]
     con.close()

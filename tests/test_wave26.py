@@ -8,16 +8,13 @@ import os
 from pyspark.sql import functions as F
 
 
-def test_rocksdb_replay_matches_batch_and_engages_rocksdb(spark, sf_dir):
+def test_rocksdb_replay_matches_batch_and_engages_rocksdb(spark, sf_dir, scratch_dirs):
     """The RocksDB-backed replay must (a) equal the batch aggregate
     under the watermark-finalization rule, (b) actually have run on
     RocksDB (changelog files in the state checkpoint — the default
     provider writes .delta files instead), and (c) leave the session
     provider conf untouched."""
-    from go_mapreduce_spark.streaming.events import (
-        _replay_base,
-        x206_rocksdb_stateful,
-    )
+    from go_mapreduce_spark.streaming.events import x206_rocksdb_stateful
     from go_mapreduce_spark.sources.registry import load_table
 
     before = spark.conf.get(
@@ -59,6 +56,6 @@ def test_rocksdb_replay_matches_batch_and_engages_rocksdb(spark, sf_dir):
     }
     assert got == expected
 
-    state = os.path.join(_replay_base(sf_dir), "x206_ckpt", "state")
+    state = os.path.join(scratch_dirs["x206"], "ckpt", "state")
     changelogs = glob.glob(os.path.join(state, "**", "*.changelog"), recursive=True)
     assert changelogs, "no RocksDB changelog files — provider did not engage"

@@ -121,7 +121,7 @@ def test_x235_rank_windows_are_bucketed(spark, sf_dir):
     assert not unpartitioned_windows(df)
 
 
-def test_x236_sinks_are_consistent(spark, sf_dir):
+def test_x236_sinks_are_consistent(spark, sf_dir, scratch_dirs):
     """The raw archive and the per-batch rollup must tell the same
     story: re-aggregating the raw sink reproduces the rollup sink's
     totals exactly (both decimal)."""
@@ -133,10 +133,8 @@ def test_x236_sinks_are_consistent(spark, sf_dir):
         (r.event_type, r.n_events, r.total_value)
         for r in SE.x236_multisink_stream(spark, sf_dir).collect()
     }
-    base = SE._replay_base(sf_dir)
-    raw = spark.read.option("basePath", os.path.join(base, "x236_raw")).parquet(
-        os.path.join(base, "x236_raw")
-    )
+    raw_dir = os.path.join(scratch_dirs["x236"], "raw")
+    raw = spark.read.option("basePath", raw_dir).parquet(raw_dir)
     re_agg = {
         (r.event_type, r.n_events, r.total_value)
         for r in raw.groupBy("event_type")

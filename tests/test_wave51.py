@@ -50,13 +50,13 @@ def test_x285_matches_brute_force_latency(spark, sf_dir):
     assert abs(got.mean_s - sum(vals) / len(vals) / 1e6) < 1e-3
 
 
-def test_x286_vacuum_keeps_current_and_reaps_history(spark, sf_dir):
+def test_x286_vacuum_keeps_current_and_reaps_history(spark, sf_dir, scratch_dirs):
     from go_mapreduce_spark import lakehouse as LH
     from go_mapreduce_spark.sources.registry import load_table
 
     r = LH.x286_vacuum_audit(spark, sf_dir).collect()[0]
     assert r.files_reclaimed and r.n_versions_reaped == 2
-    root = LH._vacuum_demo_root(sf_dir)
+    root = scratch_dirs["x286"]
     # the current snapshot still reads exactly; reaped versions error
     want = (
         load_table(spark, sf_dir, "orders")

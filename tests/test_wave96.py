@@ -133,13 +133,11 @@ def test_parallel_write_two_phase_commit(spark, tmp_path):
     assert _read(spark, out, table="w").count() == 15
 
 
-def test_x410_roundtrip_matches_parquet(spark, sf_dir, duck):
+def test_x410_roundtrip_matches_parquet(spark, sf_dir, duck, tmp_path, monkeypatch):
     import tempfile
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    built = os.path.join(tempfile.gettempdir(), f"gms_sqlite_{tag}.db")
-    if os.path.isfile(built):
-        os.remove(built)  # force a fresh parallel write
+    # an empty temp dir forces a fresh parallel write of the mirror
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     got = {
         (r.o_orderpriority, r.n_orders, r.total_value)
         for r in SQ.x410_sqlite_roundtrip(spark, sf_dir).collect()
