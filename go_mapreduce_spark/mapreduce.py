@@ -16,8 +16,8 @@ Spark mapping (each reference operator R# from SURVEY.md §2.A):
     R5  group-by-key     → groupByKey (same partitioning, no extra shuffle)
     R6  per-part key sort→ sorted() inside mapPartitions
     R7  user Reduce      → mapValues-style apply in sorted order
-    R8  Merge            → sortByKey (range-partitioned merge sort —
-                           the reference's own TODO, mapreduce.go:228)
+    R8  Merge            → one-partition shuffle + sort: the reference's
+                           single Merge process (mapreduce.go:221-225)
     R9  TSV sink         → "key\\tvalue" text write
 
 Differences deliberately NOT replicated (SURVEY.md §7.3): unbounded
@@ -54,8 +54,13 @@ def run_map_reduce(
     n_map: int = 5,
     n_reduce: int = 3,
 ) -> RDD:
-    """Execute the reference MapReduce pipeline; returns a sorted
-    (key, value) RDD (the Merge output, minus the TSV formatting).
+    """Execute the reference MapReduce pipeline; returns a globally
+    key-sorted (key, value) RDD with one partition (the Merge output,
+    minus the TSV formatting).
+
+    The call is lazy: no job runs until the result is consumed, and
+    then the whole pipeline is one job in which ``n_reduce`` tasks
+    each run the user Reduce once per key of their partition.
 
     ``n_map``/``n_reduce`` mirror Job{NMap, NReduce}
     (mapreduce/job.go:5-11): static, user-declared parallelism.
@@ -81,15 +86,19 @@ def run_map_reduce(
 
     reduced = grouped.mapPartitions(_reduce_partition, preservesPartitioning=True)
 
-    # R8: Merge = global key sort (range-partitioned merge sort).
-    return reduced.sortByKey()
+    # R8: Merge = one task reads every reduce output and sorts it
+    # (spilling if need be), like the reference's single Merge
+    # process.  Unlike sortByKey, this fires no count/sample job, so
+    # the reduce above runs once.
+    return reduced.repartitionAndSortWithinPartitions(1)
 
 
 def write_merged_tsv(result: RDD, output_path: str) -> None:
     """R9: the reference's final sink — ``key\\tvalue`` lines, globally
-    key-sorted, single file (mapreduce.go:260-263 writes one file;
-    coalesce(1) mirrors that, and is exactly as much of a bottleneck
-    as the reference's single Merge process)."""
+    key-sorted, single file (mapreduce.go:260-263 writes one file).
+    ``run_map_reduce`` already returns one partition, so coalesce(1)
+    adds no stage; it only keeps the one-file contract for other
+    inputs."""
     result.map(lambda kv: f"{kv[0]}\t{kv[1]}").coalesce(1).saveAsTextFile(output_path)
 
 

@@ -7,7 +7,8 @@ them):
   tables, staged shards), reused across calls and processes.  A slot
   is ``name`` plus the real path of each input; a copy is reused only
   while the package sources and every input file's size and mtime are
-  unchanged.
+  unchanged.  A slot whose inputs are gone is deleted by the next
+  build of any slot.
 * :func:`fresh_dir` — an empty working dir per call (stream sinks and
   checkpoints, per-run tables) under one per-process root that is
   removed at exit.
@@ -20,6 +21,7 @@ from __future__ import annotations
 import atexit
 import functools
 import hashlib
+import json
 import os
 import shutil
 import tempfile
@@ -29,6 +31,7 @@ import uuid
 _PKG = os.path.dirname(os.path.abspath(__file__))
 _lock = threading.Lock()
 _run_root: str | None = None
+_INPUTS = "inputs"  # per slot: JSON list of the inputs' real paths
 
 
 @functools.cache
@@ -67,7 +70,8 @@ def build_once(name: str, build, *inputs: str) -> str:
     ``tmp``, which is then renamed into place: readers never see a
     partial copy, a build that raises publishes nothing, and a process
     that loses a concurrent race discards its own copy.  Publishing
-    deletes the slot's other versions, so disk use stays constant."""
+    deletes the slot's other versions, so disk use stays constant, and
+    the slots of other inputs that no longer exist."""
     real = [os.path.realpath(p) for p in inputs]
     slot = os.path.join(tempfile.gettempdir(), f"gms_{name}_{_digest(*real)}")
     path = os.path.join(slot, _digest(_source_digest(), *map(_files, real)))
@@ -82,12 +86,33 @@ def build_once(name: str, build, *inputs: str) -> str:
         except OSError:
             if not os.path.isdir(path):
                 raise
+        with open(f"{tmp}.inputs", "w") as fh:
+            json.dump(real, fh)
+        os.replace(f"{tmp}.inputs", os.path.join(slot, _INPUTS))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     for v in os.listdir(slot):
-        if v != os.path.basename(path) and not v.startswith("build-"):
+        if v not in (os.path.basename(path), _INPUTS) and not v.startswith("build-"):
             shutil.rmtree(os.path.join(slot, v), ignore_errors=True)
+    _prune_orphans(slot)
     return path
+
+
+def _prune_orphans(keep: str) -> None:
+    """Delete every slot but ``keep`` whose recorded inputs are not
+    all there any more.  Dirs without a record are left alone."""
+    root = os.path.dirname(keep)
+    for s in os.listdir(root):
+        slot = os.path.join(root, s)
+        if not s.startswith("gms_") or slot == keep:
+            continue
+        try:
+            with open(os.path.join(slot, _INPUTS)) as fh:
+                inputs = json.load(fh)
+        except (OSError, ValueError):
+            continue
+        if not all(os.path.exists(p) for p in inputs):
+            shutil.rmtree(slot, ignore_errors=True)
 
 
 def fresh_dir(name: str, sf_dir: str) -> str:

@@ -8,11 +8,12 @@ parquet (columnar, partitioned — the 100 TB default), CSV/TSV, JSON.
 Scale rules:
 - ``partition_by`` on parquet gives partition pruning to every
   downstream reader; choose low-cardinality columns.
-- The single-file sorted TSV exists for reference parity; its
-  coalesce(1) serializes through one task — exactly as bottlenecked
-  as the reference's single-process Merge, and flagged as such.
-  ``write_sorted_tsv`` (sharded) is the scalable variant: globally
-  ordered across shards via range partitioning, one file per range.
+- The single-file sorted TSV exists for reference parity: one
+  shuffle into one partition, sorted there, serializes through one
+  task — exactly as bottlenecked as the reference's single-process
+  Merge, and flagged as such.  ``write_sorted_tsv`` (sharded) is the
+  scalable variant: globally ordered across shards via range
+  partitioning, one file per range.
 """
 
 from __future__ import annotations
@@ -78,15 +79,17 @@ def write_sorted_tsv(
 ) -> None:
     """Globally key-sorted TSV (reference Merge output format).
 
-    single_file=True reproduces the reference's one-file contract via
-    coalesce(1) — fine for result sets, wrong for datasets.  Default
+    single_file=True reproduces the reference's one-file contract:
+    one shuffle into one partition, sorted within it (no range-bounds
+    sampling job) — fine for result sets, wrong for datasets.  Default
     writes range-partitioned shards: shard i's keys all precede shard
     i+1's, so `cat part-*` is still globally sorted (what the
     reference's own "XXX use merge sort" TODO wanted,
     mapreduce.go:228)."""
-    out = df.orderBy(*key_cols)
     if single_file:
-        out = out.coalesce(1)
+        out = df.repartition(1).sortWithinPartitions(*key_cols)
+    else:
+        out = df.orderBy(*key_cols)
     # escape='"' pins the quoting contract to RFC-4180 doubled quotes
     # (pyarrow's parser default) — Spark's backslash-escape default
     # would corrupt values containing tabs/quotes/newlines when the

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -73,3 +74,23 @@ def scratch_dirs(monkeypatch):
 
     monkeypatch.setattr(scratch, "fresh_dir", spy)
     return made
+
+
+def run_counted(spark, run) -> tuple[list[int], list]:
+    """Run ``run()`` in a job group of its own; return the ids of the
+    jobs it fired and the ``SparkStageInfo`` of each job's stages, by
+    stage id (parents before children; a stage two jobs share, skipped
+    in the second, counts for both)."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed asynchronously
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    stage_ids = sorted(s for j in jobs for s in tracker.getJobInfo(j).stageIds)
+    return jobs, [tracker.getStageInfo(s) for s in stage_ids]

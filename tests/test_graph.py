@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import run_counted
+
 
 def _pr_reference(edges, damping=0.85, n_iter=10, dangling=False, teleport=None):
     """Plain-python replica of the declared fixed-iteration formula.
@@ -148,20 +150,10 @@ def test_power_iteration_job_and_stage_counts(spark, call):
             spark.createDataFrame([(1,), (5,)], "node long"),
         ),
     }[call]
-    sc = spark.sparkContext
-    group = f"loop-counts-{call}"
-    sc.setJobGroup(group, group)
-    try:
-        run().collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+    jobs, stages = run_counted(spark, lambda: run().collect())
     max_jobs, max_stages = _LOOP_COUNT_CEILINGS[call]
     assert len(jobs) <= max_jobs, (call, len(jobs))
-    assert stages <= max_stages, (call, stages)
+    assert len(stages) <= max_stages, (call, len(stages))
 
 
 def test_stream_upsert_totals_equals_batch(spark, sf_dir, tmp_path):

@@ -22,6 +22,7 @@ from go_mapreduce_spark.mapreduce import (
 )
 from go_mapreduce_spark.operators.wordcount import q1_word_count
 from go_mapreduce_spark.sources.registry import load_table
+from tests.conftest import run_counted
 
 
 @pytest.fixture(scope="module")
@@ -52,11 +53,44 @@ def test_shim_output_globally_sorted(spark, corpus_file):
 
 
 def test_shim_respects_partition_counts(spark, corpus_file):
+    """Job.NReduce parity: ``n_reduce`` reduce tasks feed one Merge
+    task, and the partition counts do not change the result."""
     out = word_count(spark, corpus_file, n_map=4, n_reduce=2)
-    # nReduce reducers before the merge sort (Job.NReduce parity)
-    assert out.getNumPartitions() >= 1  # sortByKey repartitions by range
-    counts = dict(out.collect())
-    assert sum(int(v) for v in counts.values()) > 0
+    assert out.getNumPartitions() == 1
+    got: list = []
+    _, stages = run_counted(spark, lambda: got.extend(out.collect()))
+    # stages by id: map, reduce, merge
+    assert [s.numTasks for s in stages[-2:]] == [2, 1]
+    assert got == word_count(spark, corpus_file).collect()
+    assert sum(int(v) for _, v in got) > 0
+
+
+def test_shim_reduces_each_key_once(spark, corpus_file, tmp_path):
+    """The user Reduce runs once per key: the Merge must not re-run
+    the reduce stage (sortByKey's sizing jobs ran it three times)."""
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted_reduce(key, values):
+        calls.add(1)
+        return wc_reduce(key, values)
+
+    out_dir = str(tmp_path / "mrtmp_out")
+    write_merged_tsv(run_map_reduce(spark, corpus_file, wc_map, counted_reduce), out_dir)
+    (part,) = [f for f in os.listdir(out_dir) if f.startswith("part-")]
+    with open(os.path.join(out_dir, part)) as fh:
+        keys = {ln.split("\t")[0] for ln in fh.read().splitlines()}
+    assert calls.value == len(keys) > 0
+
+
+def test_shim_word_count_is_one_job(spark, corpus_file, tmp_path):
+    """Split → Map → Reduce → Merge → TSV is one job of at most three
+    stages (map, reduce, merge), like one reference run."""
+    out_dir = str(tmp_path / "mrtmp_out")
+    jobs, stages = run_counted(
+        spark, lambda: write_merged_tsv(word_count(spark, corpus_file), out_dir)
+    )
+    assert len(jobs) == 1, jobs
+    assert len(stages) <= 3, [s.name for s in stages]
 
 
 def test_shim_tsv_sink(spark, corpus_file, tmp_path):

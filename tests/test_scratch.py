@@ -31,8 +31,9 @@ def _sf(tmp_path, parent: str) -> str:
 
 
 def _slot_entries(tmp: str, name: str) -> list[str]:
+    """The slot's versions and build dirs (not its inputs record)."""
     (slot,) = [s for s in os.listdir(tmp) if s.startswith(f"gms_{name}_")]
-    return sorted(os.listdir(os.path.join(tmp, slot)))
+    return sorted(e for e in os.listdir(os.path.join(tmp, slot)) if e != scratch._INPUTS)
 
 
 def _writer(log: list):
@@ -104,6 +105,23 @@ def test_changed_input_or_code_rebuilds_and_drops_the_old_version(tmp, tmp_path,
     p3 = scratch.build_once("t", _writer(log), sf_a)
     assert p3 != p2 and len(log) == 4 and not os.path.exists(p2)
     assert os.path.isfile(os.path.join(other, "part-0"))  # the other sf is untouched
+
+
+def test_a_build_prunes_slots_whose_inputs_are_gone(tmp, tmp_path):
+    gone, live = _sf(tmp_path, "a"), _sf(tmp_path, "b")
+    log: list = []
+    p_gone = scratch.build_once("t", _writer(log), gone)
+    p_live = scratch.build_once("t", _writer(log), live)
+    unrecorded = os.path.join(tmp, "gms_run_x")  # not a slot: no inputs record
+    os.makedirs(unrecorded)
+    shutil.rmtree(gone)
+    assert scratch.build_once("t", _writer(log), live) == p_live  # a hit prunes nothing
+    assert os.path.isdir(p_gone) and len(log) == 2
+
+    scratch.build_once("u", _writer(log), live)
+    assert not os.path.exists(os.path.dirname(p_gone))
+    assert os.path.isfile(os.path.join(p_live, "part-0")) and os.path.isdir(unrecorded)
+    assert len(os.listdir(tmp)) == 3  # live t slot, u slot, gms_run_x
 
 
 def test_fresh_dir_is_empty_and_keyed_on_name_and_sf(tmp_path):

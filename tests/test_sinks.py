@@ -13,6 +13,7 @@ from go_mapreduce_spark.sources.sinks import (
     write_parquet,
     write_sorted_tsv,
 )
+from tests.conftest import run_counted
 
 
 def test_parquet_roundtrip_partitioned(spark, sf_dir, tmp_path):
@@ -58,6 +59,29 @@ def test_sorted_tsv_single_file(spark, sf_dir, tmp_path):
     lines = open(os.path.join(out, parts[0])).read().splitlines()
     keys = [ln.split("\t")[0] for ln in lines]
     assert keys == sorted(keys)
+
+
+# (jobs, stages) of a single-file sorted TSV write under the test
+# session (cpus=8, AQE on): the shuffle into one partition and the
+# write.  orderBy(...).coalesce(1) took 4 jobs / 8 stages: a
+# range-bounds sampling job, then a range shuffle coalesced away.
+_SINGLE_FILE_TSV_CEILING = (2, 3)
+
+
+def test_sorted_tsv_single_file_job_counts(spark, tmp_path):
+    df = spark.createDataFrame(
+        [(f"w{i % 17:02d}", str(i)) for i in range(200)], "k string, v string"
+    ).repartition(4)
+    out = str(tmp_path / "tsv1")
+    jobs, stages = run_counted(
+        spark, lambda: write_sorted_tsv(df, out, ["k"], single_file=True)
+    )
+    max_jobs, max_stages = _SINGLE_FILE_TSV_CEILING
+    assert len(jobs) <= max_jobs and len(stages) <= max_stages, (len(jobs), len(stages))
+    (part,) = [f for f in os.listdir(out) if f.startswith("part-")]
+    with open(os.path.join(out, part)) as fh:
+        keys = [ln.split("\t")[0] for ln in fh.read().splitlines()]
+    assert len(keys) == 200 and keys == sorted(keys)
 
 
 def test_sorted_tsv_sharded_globally_ordered(spark, sf_dir, tmp_path):

@@ -148,22 +148,24 @@ def test_streaming_dedup_first_occurrence_wins(spark, tmp_path):
     assert len(set(texts)) == 40
 
 
-def test_x166_full_outer_asymmetric_cutoffs(spark, tmp_path):
+def test_x166_full_outer_asymmetric_cutoffs(spark, tmp_path, monkeypatch):
     """Pin the full-outer null-emission rules on a hand-built stream:
     purchases finalize at ``ts < wm`` but clicks only at
     ``ts < wm - 30 min`` (a click can match purchases up to 30
     minutes after it, so its state lives 30 minutes longer).  The
     probe click inside (wm - 30 min, wm) must NOT emit."""
     import datetime as dt
+    import os
+    import tempfile
 
     import pandas as pd
 
     from go_mapreduce_spark.streaming import events as SE
 
     base = str(tmp_path / "x166_micro")
-    import os
-
     os.makedirs(base)
+    # keep the replay copy of this throwaway input under the test's own dir
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     t0 = dt.datetime(2024, 1, 1)
     mk = lambda i, h, m, u, t: dict(
         event_id=i, ts=t0 + dt.timedelta(hours=h, minutes=m), user_id=u,

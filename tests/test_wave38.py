@@ -119,7 +119,7 @@ def test_x249_hhi_bounds(spark, sf_dir):
         assert r.hhi >= r.top_share**2 * 10000 - 1e-3
 
 
-def test_x248_touching_intervals_merge(spark):
+def test_x248_touching_intervals_merge(spark, tmp_path):
     """Intervals whose start equals the running end must merge
     (strictly-after comparison), not open a new island."""
     from go_mapreduce_spark.operators.analytics import COVERAGE_TTL_S
@@ -135,9 +135,9 @@ def test_x248_touching_intervals_merge(spark):
         ],
         "user_id long, event_id long, ts timestamp",
     )
-    import tempfile, os
+    import os
 
-    d = tempfile.mkdtemp(prefix="gms_w38_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
     got = {r.user_id: r for r in AN.x248_interval_coverage(spark, d).collect()}
     assert got[1].n_islands == 2

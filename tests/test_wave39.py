@@ -4,7 +4,6 @@ RESTORE snapshot algebra, naive-Bayes mechanics on a separable corpus."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -85,7 +84,7 @@ def test_x252_restore_is_metadata_only_and_preserves_ledger(spark, sf_dir):
     assert LH.read_manifest(root, 3)["op"] == "delete"
 
 
-def test_x253_classifies_a_separable_corpus(spark):
+def test_x253_classifies_a_separable_corpus(spark, tmp_path):
     """On a corpus whose languages share no character bigrams, NB must
     reach accuracy 1.0 for every label."""
     from go_mapreduce_spark.operators.text import x253_naive_bayes_langid
@@ -102,7 +101,7 @@ def test_x253_classifies_a_separable_corpus(spark):
     df = spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    d = tempfile.mkdtemp(prefix="gms_w39_nb_")
+    d = str(tmp_path)
     df.write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
     got = {r.lang: r for r in x253_naive_bayes_langid(spark, d).collect()}
     assert set(got) == {"aa", "zz"}

@@ -5,12 +5,11 @@ from __future__ import annotations
 
 import datetime
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 
-def test_x273_catches_planted_violations(spark):
+def test_x273_catches_planted_violations(spark, tmp_path):
     from go_mapreduce_spark.operators.curation import x273_data_expectations
 
     base = datetime.datetime(1995, 6, 1)
@@ -22,7 +21,7 @@ def test_x273_catches_planted_violations(spark):
         (4, 104, 40.0, datetime.datetime(2050, 1, 1)),  # out-of-range date
         (5, 999, 50.0, base),                      # FK miss
     ]
-    d = tempfile.mkdtemp(prefix="gms_w47_")
+    d = str(tmp_path)
     spark.createDataFrame(
         rows,
         "o_orderkey long, o_custkey long, o_totalprice double, o_orderdate timestamp",

@@ -5,12 +5,11 @@ from __future__ import annotations
 
 import datetime
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 
-def test_x275_dst_boundary_day_assignment(spark):
+def test_x275_dst_boundary_day_assignment(spark, tmp_path):
     """Events an hour apart across the US spring-forward instant must
     land on the right New-York day even though UTC days differ."""
     from go_mapreduce_spark.operators.relational_ext import x275_local_day_rollup
@@ -25,7 +24,7 @@ def test_x275_dst_boundary_day_assignment(spark):
         # 2024-03-11 05:00 UTC = Mar 11 01:00 EDT
         (4, datetime.datetime(2024, 3, 11, 5, 0), 1, "a", 1.0, None),
     ]
-    d = tempfile.mkdtemp(prefix="gms_w48_")
+    d = str(tmp_path)
     spark.createDataFrame(
         rows,
         "event_id long, ts timestamp, user_id long, event_type string, "

@@ -4,12 +4,11 @@ cosine sanity, l-diversity census parity."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 
-def test_x278_classifies_trigram_separable_corpus(spark):
+def test_x278_classifies_trigram_separable_corpus(spark, tmp_path):
     from go_mapreduce_spark.operators.text import x278_rank_order_langid
 
     docs, did = [], 0
@@ -20,7 +19,7 @@ def test_x278_classifies_trigram_separable_corpus(spark):
         for w in words:
             did += 1
             docs.append((did, f"{w} {w} {w}", lang, "synthetic", 17))
-    d = tempfile.mkdtemp(prefix="gms_w49_")
+    d = str(tmp_path)
     spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))

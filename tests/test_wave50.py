@@ -38,15 +38,14 @@ def test_x281_rule_metrics_recompute(spark, sf_dir):
         assert r.pa < r.pb and r.pc not in (r.pa, r.pb)
 
 
-def test_x282_flesch_hand_example(spark):
+def test_x282_flesch_hand_example(spark, tmp_path):
     import os
-    import tempfile
 
     from go_mapreduce_spark.operators.text import x282_readability
 
     # "the cat sat. the dog ran!" -> 2 sentence terminators,
     # 6 words, vowel groups: e,a,a,e,o,a = 6
-    d = tempfile.mkdtemp(prefix="gms_w50_")
+    d = str(tmp_path)
     spark.createDataFrame(
         [(1, "the cat sat. the dog ran!", "en", "s", 25)],
         "doc_id long, text string, lang string, source string, n_chars long",
