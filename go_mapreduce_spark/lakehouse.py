@@ -29,8 +29,7 @@ public):
   viable at scale; asserted in tests).
 - Manifests accumulate applied **batch ids**: replaying an
   already-applied batch is a version-preserving no-op, giving
-  exactly-once CDC apply across restarts (the guarantee
-  streaming/upsert.py could only approximate with marker files).
+  exactly-once CDC apply across restarts.
 - **Time travel**: ``read_table(..., version=K)`` reads any retained
   snapshot — the audit/debug affordance every warehouse user asks
   for first.
@@ -118,6 +117,26 @@ def _commit(root: str, manifest: dict) -> int:
     return version
 
 
+_CARRIED = ("key_col", "schema", "files", "deletes", "batch_ids")
+# the parent of a table's first version
+_NO_TABLE = {"version": 0, "files": [], "batch_ids": []}
+
+
+def _commit_next(
+    root: str, parent: dict, op: str, batch_id: str | None = None, **fields
+) -> int:
+    """Commit the version after ``parent`` as ``op``.  The new
+    manifest carries over the parent's ``key_col``, ``schema``,
+    ``files``, ``deletes`` and ``batch_ids``; ``fields`` replaces or
+    adds entries, and ``batch_id`` (if given) joins the ledger."""
+    m = {k: parent[k] for k in _CARRIED if k in parent}
+    m.update(fields, version=parent["version"] + 1, parent=parent["version"], op=op)
+    m.setdefault("deletes", [])
+    if batch_id:
+        m["batch_ids"] = m["batch_ids"] + [batch_id]
+    return _commit(root, m)
+
+
 # Per-file key Bloom filters (manifest-level data-skipping index):
 # BLOOM_M bits, BLOOM_K xxhash64 seeds.  Internal to this engine (the
 # same Spark expressions build and probe them), so xxhash64 — the
@@ -128,34 +147,13 @@ BLOOM_M = 8192
 BLOOM_K = 3
 
 
-def _file_blooms(spark: SparkSession, paths: list[str], key_col: str) -> dict:
-    """Bit positions per file via ONE distributed aggregate (distinct
-    positions are capped at BLOOM_M·BLOOM_K per file — manifest-sized
-    collect), assembled into hex bitsets on the driver."""
-    if not paths:
-        return {}
-    seeds = F.array(*[F.lit(i) for i in range(BLOOM_K)])
-    pos = (
-        spark.read.parquet(*paths)
-        .select(F.input_file_name().alias("_f"), F.col(key_col).alias("_k"))
-        .select("_f", F.explode(seeds).alias("_s"), "_k")
-        .select(
-            "_f",
-            F.pmod(F.xxhash64(F.col("_k"), F.col("_s")), F.lit(BLOOM_M)).alias(
-                "_p"
-            ),
-        )
-        .groupBy("_f")
-        .agg(F.collect_set("_p").alias("ps"))
-        .collect()
-    )
-    out = {}
-    for r in pos:
-        bits = 0
-        for p in r["ps"]:
-            bits |= 1 << p
-        out[os.path.basename(r["_f"])] = f"{bits:x}"
-    return out
+def _bloom_positions(key) -> list:
+    """The ``BLOOM_K`` bit positions of ``key`` (a column); the writer
+    that builds the filters and the probe that reads them share it."""
+    return [
+        F.pmod(F.xxhash64(key, F.lit(seed)), F.lit(BLOOM_M))
+        for seed in range(BLOOM_K)
+    ]
 
 
 def _bloom_may_contain(bloom_hex: str | None, positions: list[int]) -> bool:
@@ -202,35 +200,29 @@ def lookup_keys(
     )
 
 
+def _probe_positions(spark: SparkSession, m: dict, keys: list) -> dict:
+    """Bloom bit positions per probe key for the table of manifest
+    ``m``.  xxhash64 is type-dependent (int32 and int64 values hash
+    differently), so the keys take the key column's type from the
+    manifest schema, the type the filters were built from — a
+    hardcoded bigint probe would prune every file of a string or int32
+    keyed table."""
+    from pyspark.sql.types import StructField, StructType
+
+    key_type = StructType.fromJson(json.loads(m["schema"]))[m["key_col"]].dataType
+    probe = spark.createDataFrame(
+        [(k,) for k in keys], StructType([StructField("k", key_type)])
+    ).select("k", *_bloom_positions(F.col("k")))
+    return {r[0]: list(r[1:]) for r in probe.collect()}
+
+
 def lookup_stats(
     spark: SparkSession, root: str, keys: list, version: int | None = None
 ) -> dict:
     """Planning-only half of :func:`lookup_keys`: which files survive
     range pruning, and of those, which survive the Bloom probe."""
     m = read_manifest(root, version)
-    # probe positions per key, computed with the SAME Spark expression
-    # AND the same key type that built the filters: xxhash64 is
-    # type-dependent (int32 vs int64 values hash differently), so the
-    # probe schema is derived from the manifest's stored schema for
-    # key_col rather than hardcoded — a bigint-only probe would make
-    # the Bloom index silently return zero rows for string/int32 keys.
-    from pyspark.sql.types import StructField, StructType
-
-    key_type = StructType.fromJson(json.loads(m["schema"]))[m["key_col"]].dataType
-    probe = (
-        spark.createDataFrame(
-            [(k,) for k in keys], StructType([StructField("k", key_type)])
-        )
-        .select(
-            "k",
-            F.explode(F.array(*[F.lit(i) for i in range(BLOOM_K)])).alias("s"),
-        )
-        .select("k", F.pmod(F.xxhash64(F.col("k"), F.col("s")), F.lit(BLOOM_M)).alias("p"))
-        .collect()
-    )
-    pos_by_key: dict = {}
-    for r in probe:
-        pos_by_key.setdefault(r["k"], []).append(r["p"])
+    pos_by_key = _probe_positions(spark, m, keys)
     n_total = len(m["files"])
     range_hit, bloom_hit = [], []
     for e in m["files"]:
@@ -271,9 +263,11 @@ def _write_data_files(
     every file with every batch).  ``order_expr`` overrides the
     physical clustering column (e.g. a Morton code for z-ordered
     OPTIMIZE); key-range STATS always stay on ``key_col``, honestly
-    reflecting whatever banding the chosen order gives it.  Stats
-    come from ONE aggregate over the just-written files, grouped by
-    ``input_file_name``.
+    reflecting whatever banding the chosen order gives it.  Row
+    count, key range and Bloom bits come from ONE aggregate over the
+    just-written files, grouped by ``input_file_name`` (each position
+    set holds at most ``BLOOM_M`` values per file — a manifest-sized
+    collect), assembled into hex bitsets on the driver.
     """
     stage = os.path.join(root, _TMP, f"v{version:05d}")
     if os.path.isdir(stage):
@@ -303,6 +297,7 @@ def _write_data_files(
     shutil.rmtree(stage)
     if not moved:
         return []
+    positions = _bloom_positions(F.col(key_col))
     stats = (
         spark.read.parquet(*[os.path.join(data_dir, m) for m in moved])
         .groupBy(F.input_file_name().alias("_f"))
@@ -310,24 +305,26 @@ def _write_data_files(
             F.count(F.lit(1)).alias("rows"),
             F.min(key_col).alias("min_key"),
             F.max(key_col).alias("max_key"),
+            *[F.collect_set(p).alias(f"_p{i}") for i, p in enumerate(positions)],
         )
         .collect()
     )
     by_name = {os.path.basename(r["_f"]): r for r in stats}
-    blooms = _file_blooms(
-        spark, [os.path.join(data_dir, m) for m in moved], key_col
-    )
     for m in moved:
         r = by_name.get(m)
         if r is None:  # empty range partition produced an empty file
             continue
+        bits = 0
+        for i in range(BLOOM_K):
+            for p in r[f"_p{i}"]:
+                bits |= 1 << p
         entries.append(
             {
                 "path": f"{_DATA}/{m}",
                 "rows": r["rows"],
                 "min_key": r["min_key"],
                 "max_key": r["max_key"],
-                "bloom": blooms.get(m),
+                "bloom": f"{bits:x}",
             }
         )
     return entries
@@ -341,17 +338,8 @@ def create_table(
         raise FileExistsError(f"table already exists at {root}")
     os.makedirs(root, exist_ok=True)
     files = _write_data_files(spark, df, root, 1, key_col)
-    return _commit(
-        root,
-        {
-            "version": 1,
-            "parent": 0,
-            "op": "create",
-            "key_col": key_col,
-            "schema": df.schema.json(),
-            "files": files,
-            "batch_ids": [],
-        },
+    return _commit_next(
+        root, _NO_TABLE, "create", key_col=key_col, schema=df.schema.json(), files=files
     )
 
 
@@ -443,7 +431,7 @@ def append_table(
     schema = StructType.fromJson(json.loads(m["schema"]))
     table_cols = {f.name for f in schema.fields}
     df_cols = {f.name for f in df.schema.fields}
-    out_schema_json = m["schema"]
+    out_schema = m["schema"]
     if df_cols != table_cols:
         extra, missing = df_cols - table_cols, table_cols - df_cols
         if not merge_schema or missing:
@@ -452,25 +440,13 @@ def append_table(
                 f"missing={sorted(missing)}); pass merge_schema=True to "
                 "add new columns (additive evolution only)"
             )
-        widened = StructType(
+        out_schema = StructType(
             schema.fields
             + [f for f in df.schema.fields if f.name in extra]
-        )
-        out_schema_json = widened.json()
-    version = m["version"] + 1
-    files = _write_data_files(spark, df, root, version, m["key_col"])
-    return _commit(
-        root,
-        {
-            "version": version,
-            "parent": m["version"],
-            "op": "append",
-            "key_col": m["key_col"],
-            "schema": out_schema_json,
-            "files": m["files"] + files,
-            "deletes": m.get("deletes", []),
-            "batch_ids": m["batch_ids"] + ([batch_id] if batch_id else []),
-        },
+        ).json()
+    files = _write_data_files(spark, df, root, m["version"] + 1, m["key_col"])
+    return _commit_next(
+        root, m, "append", batch_id, schema=out_schema, files=m["files"] + files
     )
 
 
@@ -503,23 +479,12 @@ def merge_table(
             "DV-deleted rows in them)"
         )
     key = m["key_col"]
-    version = m["version"] + 1
-
     bounds = updates.agg(
         F.min(key).alias("lo"), F.max(key).alias("hi")
     ).first()
     lo, hi = bounds["lo"], bounds["hi"]
     if lo is None:  # empty batch: commit only the batch id
-        return _commit(
-            root,
-            {
-                **{k: m[k] for k in ("key_col", "schema", "files")},
-                "version": version,
-                "parent": m["version"],
-                "op": "merge",
-                "batch_ids": m["batch_ids"] + ([batch_id] if batch_id else []),
-            },
-        )
+        return _commit_next(root, m, "merge", batch_id)
 
     affected = [
         e for e in m["files"] if not (e["max_key"] < lo or e["min_key"] > hi)
@@ -557,19 +522,8 @@ def merge_table(
             ]
         )
     )
-    new_files = _write_data_files(spark, merged, root, version, key)
-    return _commit(
-        root,
-        {
-            "version": version,
-            "parent": m["version"],
-            "op": "merge",
-            "key_col": key,
-            "schema": m["schema"],
-            "files": carried + new_files,
-            "batch_ids": m["batch_ids"] + ([batch_id] if batch_id else []),
-        },
-    )
+    new_files = _write_data_files(spark, merged, root, m["version"] + 1, key)
+    return _commit_next(root, m, "merge", batch_id, files=carried + new_files)
 
 
 def delete_table(spark: SparkSession, root: str, condition) -> int:
@@ -587,7 +541,7 @@ def delete_table(spark: SparkSession, root: str, condition) -> int:
     the anti-join until ``optimize_table`` materializes the vectors.
     MERGE refuses to run over pending vectors (it would carry
     unpruned files by reference and resurrect their deleted rows);
-    ``read_appends`` already refuses non-append commits.
+    ``read_appends`` refuses delete commits (:func:`added_files`).
 
     Each vector records ``applies_to_version`` — the snapshot it was
     computed against — so it only ever hides rows in files that
@@ -626,19 +580,7 @@ def delete_table(spark: SparkSession, root: str, condition) -> int:
         for e in entries:
             os.remove(os.path.join(root, e["path"]))
         return m["version"]  # no-op delete: no commit, no read debt
-    return _commit(
-        root,
-        {
-            "version": version,
-            "parent": m["version"],
-            "op": "delete",
-            "key_col": key,
-            "schema": m["schema"],
-            "files": m["files"],
-            "deletes": m.get("deletes", []) + entries,
-            "batch_ids": m["batch_ids"],
-        },
-    )
+    return _commit_next(root, m, "delete", deletes=m.get("deletes", []) + entries)
 
 
 # ---------------------------------------------------------------------------
@@ -735,8 +677,7 @@ def x151_stream_lakehouse_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits new running totals via :func:`merge_table` with the
     micro-batch id as the batch id.
 
-    This closes the round-3 gap note on streaming/upsert.py for real:
-    a crash between sink write and checkpoint commit makes Structured
+    A crash between sink write and checkpoint commit makes Structured
     Streaming REPLAY the batch, and the manifest's recorded batch id
     turns the replay into a version-preserving no-op — exactly-once
     totals without a lakehouse runtime, because the commit protocol
@@ -925,7 +866,6 @@ def optimize_table(
         )
         n_rows = sum(e["rows"] for e in small)
     n_files = max(1, math.ceil(n_rows / target_rows))
-    version = m["version"] + 1
     order_expr = None
     if zorder_cols is not None:
         from go_mapreduce_spark.operators.layout import _interleave
@@ -935,21 +875,11 @@ def optimize_table(
             F.col(a).cast("bigint"), F.col(b).cast("bigint")
         )
     new_files = _write_data_files(
-        spark, df, root, version, m["key_col"], n_files=n_files,
+        spark, df, root, m["version"] + 1, m["key_col"], n_files=n_files,
         order_expr=order_expr,
     )
-    return _commit(
-        root,
-        {
-            "version": version,
-            "parent": m["version"],
-            "op": "optimize",
-            "key_col": m["key_col"],
-            "schema": m["schema"],
-            "files": keep + new_files,
-            "batch_ids": m["batch_ids"],
-        },
-    )
+    # pending vectors are materialized in the rewritten files
+    return _commit_next(root, m, "optimize", files=keep + new_files, deletes=[])
 
 
 def vacuum_table(root: str, keep_versions: int = 1) -> list[str]:
@@ -1097,6 +1027,33 @@ def x169_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderstatus")
 
 
+def added_files(root: str, version: int) -> list[str]:
+    """Paths of the data files ``version`` added — the file provenance
+    that incremental reads (``read_appends``, the x215 stream source)
+    consume.  ``create``, ``append`` and ``wap_publish`` add the files
+    their parent lacks (a file belongs to the commit that introduced
+    it).  ``optimize`` adds none: it rewrites bytes, not rows, and a
+    naive two-manifest file diff would double-count every compacted
+    row.  Any other op (``merge``, ``delete``, ``restore``) changes
+    rows in place, which file provenance cannot attribute, so this
+    raises rather than silently miscounting."""
+    m = read_manifest(root, version)
+    if m["op"] == "optimize":
+        return []
+    if m["op"] not in ("create", "append", "wap_publish"):
+        raise ValueError(
+            f"version {version} is op={m['op']!r}: file provenance cannot "
+            "attribute in-place row changes — use table_changes() for "
+            "row-level deltas"
+        )
+    parent = (
+        {e["path"] for e in read_manifest(root, m["parent"])["files"]}
+        if m["parent"]
+        else set()
+    )
+    return [e["path"] for e in m["files"] if e["path"] not in parent]
+
+
 def read_appends(
     spark: SparkSession, root: str, from_version: int, to_version: int | None = None
 ) -> DataFrame:
@@ -1104,16 +1061,10 @@ def read_appends(
     ``from_version``, up to ``to_version`` (default: current) — the
     batch form of consuming a lakehouse table as a stream source.
 
-    Walks the commit log version by version.  ``append`` commits
-    contribute their new files (file-level provenance is exact for
-    appends: a file belongs to the commit that introduced it);
-    ``optimize`` commits are SKIPPED — they rewrite bytes, not rows,
-    and a naive two-manifest file diff would double-count every
-    compacted row; ``create`` precedes the window by definition.
-    ``merge`` commits change rows in place, which file provenance
-    cannot attribute — callers needing row-level deltas across a
-    MERGE use :func:`table_changes`; this function raises rather
-    than silently miscounting.
+    Walks the commit log version by version and reads the files each
+    version added (:func:`added_files`); a window holding a ``merge``
+    or ``delete`` raises — callers needing row-level deltas across
+    one use :func:`table_changes`.
 
     Cost is proportional to the appended data, never the table:
     manifest walking is driver-side JSON, and only the new files are
@@ -1122,21 +1073,10 @@ def read_appends(
     from pyspark.sql.types import StructType
 
     to_v = to_version if to_version is not None else current_version(root)
-    new_paths: list[str] = []
-    for v in range(from_version + 1, to_v + 1):
-        m = read_manifest(root, v)
-        if m["op"] == "optimize":
-            continue
-        if m["op"] != "append":
-            raise ValueError(
-                f"version {v} is op={m['op']!r}; incremental append read "
-                "is only defined across append/optimize commits — use "
-                "table_changes() for row-level deltas across a MERGE"
-            )
-        parent_paths = {e["path"] for e in read_manifest(root, m["parent"])["files"]}
-        new_paths += [e["path"] for e in m["files"] if e["path"] not in parent_paths]
-    m_to = read_manifest(root, to_v)
-    schema = StructType.fromJson(json.loads(m_to["schema"]))
+    new_paths = [
+        p for v in range(from_version + 1, to_v + 1) for p in added_files(root, v)
+    ]
+    schema = StructType.fromJson(json.loads(read_manifest(root, to_v)["schema"]))
     if not new_paths:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(
@@ -1277,20 +1217,15 @@ def restore_table(root: str, version: int, prune_ledger: bool = False) -> int:
     m_tgt = read_manifest(root, version)
     tgt_ids = set(m_tgt.get("batch_ids", []))
     suppressed = [b for b in m_cur["batch_ids"] if b not in tgt_ids]
-    return _commit(
+    return _commit_next(
         root,
-        {
-            "version": m_cur["version"] + 1,
-            "parent": m_cur["version"],
-            "op": "restore",
-            "restored_from": version,
-            "key_col": m_tgt["key_col"],
-            "schema": m_tgt["schema"],
-            "files": m_tgt["files"],
-            "deletes": m_tgt.get("deletes", []),
-            "batch_ids": sorted(tgt_ids) if prune_ledger else m_cur["batch_ids"],
-            "suppressed_batch_ids": [] if prune_ledger else suppressed,
-        },
+        m_cur,
+        "restore",
+        restored_from=version,
+        **{k: m_tgt[k] for k in ("key_col", "schema", "files")},
+        deletes=m_tgt.get("deletes", []),
+        batch_ids=sorted(tgt_ids) if prune_ledger else m_cur["batch_ids"],
+        suppressed_batch_ids=[] if prune_ledger else suppressed,
     )
 
 
@@ -1625,19 +1560,8 @@ def publish_branch(
                 os.replace(src, dst_abs)
             entries.append({**e, "path": f"{_DATA}/{dst}"})
         try:
-            v = _commit(
-                root,
-                {
-                    "version": version,
-                    "parent": m["version"],
-                    "op": "wap_publish",
-                    "key_col": m["key_col"],
-                    "schema": m["schema"],
-                    "files": m["files"] + entries,
-                    "deletes": m.get("deletes", []),
-                    "batch_ids": m["batch_ids"]
-                    + ([staged["batch_id"]] if staged["batch_id"] else []),
-                },
+            v = _commit_next(
+                root, m, "wap_publish", staged["batch_id"], files=m["files"] + entries
             )
         except CommitConflict as e:
             # a concurrent writer took this version: move our files to

@@ -46,13 +46,15 @@ def _source_digest() -> str:
 
 def _files(path: str, suffix: str = "") -> list[tuple[str, int, int]]:
     """``(relpath, size, mtime_ns)`` of every file under ``path``
-    (``path`` itself when it is a file), in a stable order."""
+    (``path`` itself when it is a file), in a stable order.  Bytecode
+    caches are skipped: importing a module writes them without
+    changing any input."""
     if os.path.isfile(path):
         st = os.stat(path)
         return [("", st.st_size, st.st_mtime_ns)]
     out = []
     for d, subdirs, names in os.walk(path):
-        subdirs.sort()
+        subdirs[:] = sorted(s for s in subdirs if s != "__pycache__")
         for f in sorted(n for n in names if n.endswith(suffix)):
             st = os.stat(os.path.join(d, f))
             out.append((os.path.relpath(os.path.join(d, f), path), st.st_size, st.st_mtime_ns))

@@ -13,46 +13,38 @@ so the same code runs unchanged on a 1000-executor cluster:
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
+
+from go_mapreduce_spark import scratch
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # contexts the package was shipped to, held weakly: an id() key could
 # be reused by a later context after the first one is collected
 _SHIPPED_CONTEXTS: weakref.WeakSet = weakref.WeakSet()
+_ZIP = "go_mapreduce_spark.zip"
 
 
 def _package_zip() -> str:
-    """Zip the package's .py files to one fixed path per package dir.
-
-    Every new context rewrites the same file rather than leaving a new
-    temp dir behind; the write goes to a sibling file first and is
-    renamed into place, so a concurrent reader never sees a partial zip.
-    """
+    """A zip of the package's .py files, built once per source state
+    (a ``scratch.build_once`` slot keyed on the package dir): a new
+    context reuses it, and the slot of a deleted checkout is pruned
+    like any other."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    key = hashlib.sha256(pkg_dir.encode()).hexdigest()[:12]
-    zdir = os.path.join(tempfile.gettempdir(), f"gms_pkg_{key}")
-    os.makedirs(zdir, exist_ok=True)
-    fd, part = tempfile.mkstemp(dir=zdir, suffix=".part")
-    try:
-        with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+
+    def build(out: str) -> None:
+        with zipfile.ZipFile(os.path.join(out, _ZIP), "w") as z:
             for root, _dirs, files in os.walk(pkg_dir):
                 for f in files:
                     if f.endswith(".py"):
                         full = os.path.join(root, f)
                         z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
-        zpath = os.path.join(zdir, "go_mapreduce_spark.zip")
-        os.replace(part, zpath)
-    except BaseException:
-        os.unlink(part)
-        raise
-    return zpath
+
+    return os.path.join(scratch.build_once("pkg", build, pkg_dir), _ZIP)
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:

@@ -417,12 +417,12 @@ class LakehouseStreamDataSource(DataSource):
     """``spark.readStream.format("gms_lakehouse_stream")`` — consumes
     a lakehouse table's commit log as a micro-batch stream: offset =
     table VERSION, one version per trigger.  Each batch reads exactly
-    the files its version INTRODUCED (file provenance is exact for
-    ``create``/``append``), skips ``optimize`` (byte rewrites, not
-    rows — reading them would double-count every compacted row, the
-    x170 rule), and REFUSES ``merge``/``delete`` versions (in-place
-    row changes have no file-level provenance; those windows belong
-    to ``table_changes``).  The streaming face of x170's batch
+    the files its version INTRODUCED, by the same rule as x170's
+    ``read_appends`` (``lakehouse.added_files``): ``create``,
+    ``append`` and ``wap_publish`` add files, ``optimize`` adds none,
+    and ``merge``/``delete`` versions are REFUSED (in-place row
+    changes have no file-level provenance; those windows belong to
+    ``table_changes``).  The streaming face of x170's batch
     incremental read — Delta's streaming-source contract rebuilt on
     the manifest log."""
 
@@ -458,29 +458,13 @@ class LakehouseStreamReader(DataSourceStreamReader):
         self._last = nxt
         return {"version": nxt}
 
-    def _new_paths(self, v: int) -> list:
-        from go_mapreduce_spark.lakehouse import read_manifest
-
-        m = read_manifest(self.root, v)
-        if m["op"] == "optimize":
-            return []
-        if m["op"] not in ("create", "append"):
-            raise ValueError(
-                f"version {v} is op={m['op']!r}: file provenance cannot "
-                "attribute in-place row changes — use table_changes()"
-            )
-        parent = (
-            {e["path"] for e in read_manifest(self.root, m["parent"])["files"]}
-            if m["parent"]
-            else set()
-        )
-        return [e["path"] for e in m["files"] if e["path"] not in parent]
-
     def partitions(self, start: dict, end: dict):
+        from go_mapreduce_spark.lakehouse import added_files
+
         self._last = max(getattr(self, "_last", 0) or 0, start["version"])
         paths = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            paths += self._new_paths(v)
+            paths += added_files(self.root, v)
         if not paths:
             return []
         return [

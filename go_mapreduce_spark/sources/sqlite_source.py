@@ -418,18 +418,15 @@ def _stage_rows_into_temp(con, table: str, cols_sql: str, messages) -> str:
     return tmp
 
 
-class SqliteWriter(DataSourceArrowWriter):
-    """Two-phase write: each task stages a private sqlite file (the
-    only safe parallel shape for a single-writer store); the driver
-    commit collects the stages (chunked ATTACH, see
-    :func:`_stage_rows_into_temp`) and applies them to the target
-    table in one transaction.
+class _StagedSqliteWriter:
+    """The task side shared by the batch and stream writers: each task
+    stages its rows in a private sqlite file (the only safe parallel
+    shape for a single-writer store) and reports it to the driver
+    commit, which merges the stages; abort drops them.
 
-    Round 13: rows arrive as Arrow RecordBatches
-    (``DataSourceArrowWriter``) instead of pickled Rows — the write
-    path's per-row Python loop collapses to one ``to_pylist`` per
-    column per batch + ``executemany`` (guide §4), mirroring the
-    reader, which has been Arrow-batched since round 7."""
+    Rows arrive as Arrow RecordBatches instead of pickled Rows — the
+    write path's per-row Python loop collapses to one ``to_pylist``
+    per column per batch + ``executemany``, mirroring the reader."""
 
     def __init__(self, schema: StructType, options: dict, overwrite: bool):
         self.schema = schema
@@ -462,6 +459,21 @@ class SqliteWriter(DataSourceArrowWriter):
             con.close()
         return _StageCommit(stage_path=stage, n_rows=n)
 
+    @staticmethod
+    def _drop_stages(messages) -> None:
+        for m in messages:
+            if m is not None and os.path.isfile(m.stage_path):
+                os.remove(m.stage_path)
+
+    def abort(self, messages, batchId: int | None = None) -> None:
+        self._drop_stages(messages)
+
+
+class SqliteWriter(_StagedSqliteWriter, DataSourceArrowWriter):
+    """Two-phase write: the driver commit collects the task stages
+    (chunked ATTACH, see :func:`_stage_rows_into_temp`) and applies
+    them to the target table in one transaction."""
+
     def commit(self, messages):
         con = sqlite3.connect(self.path)
         try:
@@ -483,14 +495,7 @@ class SqliteWriter(DataSourceArrowWriter):
             con.commit()
         finally:
             con.close()
-        for m in messages:
-            if m is not None and os.path.isfile(m.stage_path):
-                os.remove(m.stage_path)
-
-    def abort(self, messages):
-        for m in messages:
-            if m is not None and os.path.isfile(m.stage_path):
-                os.remove(m.stage_path)
+        self._drop_stages(messages)
 
 
 _REGISTERED_SESSIONS: set[str] = set()
@@ -664,50 +669,16 @@ class SqliteStreamReader(DataSourceStreamReader):
         )
 
 
-class SqliteStreamWriter(DataSourceStreamArrowWriter):
+class SqliteStreamWriter(_StagedSqliteWriter, DataSourceStreamArrowWriter):
     """Exactly-once per-epoch sink: tasks stage private .db files (the
     batch writer's two-phase shape) and the driver commit merges them
     INSIDE one transaction together with a ``(batch_id)`` marker row —
     a replayed epoch (post-crash retry) sees its marker and drops the
     stages instead of double-applying.  The same idempotence contract
-    as the lakehouse streaming upsert (streaming/upsert.py), against
-    an external single-writer store.
-
-    Round 13: Arrow-batched like :class:`SqliteWriter` — per-epoch rows
-    cross the JVM→Python boundary as RecordBatches, not pickled Rows
-    (guide §4)."""
+    as the lakehouse streaming upsert (x151's batch-id ledger), against
+    an external single-writer store."""
 
     MARKER_TABLE = "_gms_stream_commits"
-
-    def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        self.schema = schema
-        self.path = options["path"]
-        self.table = options["table"]
-
-    def _cols_sql(self) -> str:
-        return ", ".join(
-            f'"{f.name}" {_spark_to_sqlite(f.dataType)}' for f in self.schema.fields
-        )
-
-    def _ddl(self) -> str:
-        return f'CREATE TABLE IF NOT EXISTS "{self.table}" ({self._cols_sql()})'
-
-    def write(self, iterator):
-        stage = f"{self.path}.stage-{uuid.uuid4().hex}"
-        con = sqlite3.connect(stage)
-        n = 0
-        try:
-            con.execute(self._ddl())
-            ph = ", ".join("?" * len(self.schema.fields))
-            ins = f'INSERT INTO "{self.table}" VALUES ({ph})'
-            for batch in iterator:
-                rows = _batch_to_sqlite_rows(batch, self.schema)
-                con.executemany(ins, rows)
-                n += len(rows)
-            con.commit()
-        finally:
-            con.close()
-        return _StageCommit(stage_path=stage, n_rows=n)
 
     def commit(self, messages, batchId: int) -> None:
         con = sqlite3.connect(self.path)
@@ -744,14 +715,7 @@ class SqliteStreamWriter(DataSourceStreamArrowWriter):
                 con.commit()
         finally:
             con.close()
-        for m in messages:
-            if m is not None and os.path.isfile(m.stage_path):
-                os.remove(m.stage_path)
-
-    def abort(self, messages, batchId: int) -> None:
-        for m in messages:
-            if m is not None and os.path.isfile(m.stage_path):
-                os.remove(m.stage_path)
+        self._drop_stages(messages)
 
 
 def x411_sqlite_stream_ingest(spark, sf_dir: str):

@@ -1,5 +1,4 @@
-"""PageRank semantics tests (operators/graph.py) + the streaming
-foreachBatch upsert (streaming/upsert.py)."""
+"""PageRank semantics tests (operators/graph.py)."""
 
 from __future__ import annotations
 
@@ -156,37 +155,6 @@ def test_power_iteration_job_and_stage_counts(spark, call):
     assert len(stages) <= max_stages, (call, len(stages))
 
 
-def test_stream_upsert_totals_equals_batch(spark, sf_dir, tmp_path):
-    """Replaying events through the foreachBatch upsert must leave the
-    target equal to the batch per-user aggregate — across multiple
-    micro-batches (maxFilesPerTrigger=2 over 4 files)."""
-    from go_mapreduce_spark.functions.numeric import dsum
-    from go_mapreduce_spark.sources.registry import load_table
-    from go_mapreduce_spark.streaming.events import read_event_stream
-    from go_mapreduce_spark.streaming.upsert import stream_upsert_totals
-
-    replay = str(tmp_path / "replay")
-    target = str(tmp_path / "target")
-    ckpt = str(tmp_path / "ckpt")
-    events = load_table(spark, sf_dir, "events")
-    events.repartition(4).write.parquet(replay)
-
-    stream = read_event_stream(spark, replay, max_files_per_trigger=2)
-    stream_upsert_totals(spark, stream, target, ckpt)
-
-    got = {
-        r.user_id: (r.n_events, round(r.total_value, 6))
-        for r in spark.read.parquet(target).collect()
-    }
-    want = {
-        r.user_id: (r.n_events, round(r.total_value, 6))
-        for r in events.groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("value"), "total_value"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_pagerank_counts_sink_nodes(spark):
     """A pure sink (in-edges only) must be part of the node set: it
     dilutes 1/n and receives teleport + incoming mass."""
@@ -199,61 +167,6 @@ def test_pagerank_counts_sink_nodes(spark):
     assert set(got) == {1, 2, 3}
     for k in got:
         assert got[k] == pytest.approx(want[k], abs=1e-9)
-
-
-def test_upsert_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """Re-applying a micro-batch whose id is already recorded (crash
-    between target write and checkpoint commit) must be a no-op."""
-    from go_mapreduce_spark.sources.registry import load_table
-    from go_mapreduce_spark.streaming.upsert import apply_totals_batch
-
-    target = str(tmp_path / "target")
-    batch = load_table(spark, sf_dir, "events").limit(50)
-    apply_totals_batch(spark, target, batch, batch_id=0)
-    first = sorted(
-        (r.user_id, r.n_events, round(r.total_value, 6))
-        for r in spark.read.parquet(target).collect()
-    )
-    # replay of batch 0: skipped, no double-count
-    apply_totals_batch(spark, target, batch, batch_id=0)
-    again = sorted(
-        (r.user_id, r.n_events, round(r.total_value, 6))
-        for r in spark.read.parquet(target).collect()
-    )
-    assert again == first
-    # a NEW batch id does apply
-    apply_totals_batch(spark, target, batch, batch_id=1)
-    doubled = {
-        r.user_id: r.n_events for r in spark.read.parquet(target).collect()
-    }
-    base = {r[0]: r[1] for r in first}
-    assert doubled == {k: 2 * v for k, v in base.items()}
-
-
-def test_upsert_swap_crash_is_recoverable(spark, sf_dir, tmp_path):
-    """Simulate a crash between the two swap renames (target moved
-    aside, stage not yet renamed in): the next apply must heal from
-    <target>.old instead of losing the table."""
-    import os
-
-    from go_mapreduce_spark.sources.registry import load_table
-    from go_mapreduce_spark.streaming.upsert import apply_totals_batch
-
-    target = str(tmp_path / "target")
-    batch = load_table(spark, sf_dir, "events").limit(50)
-    apply_totals_batch(spark, target, batch, batch_id=0)
-    want = sorted(
-        (r.user_id, r.n_events, round(r.total_value, 6))
-        for r in spark.read.parquet(target).collect()
-    )
-    # crash window: target renamed aside, stage rename never happened
-    os.rename(target, target + ".old")
-    apply_totals_batch(spark, target, batch, batch_id=0)  # replay heals + skips
-    got = sorted(
-        (r.user_id, r.n_events, round(r.total_value, 6))
-        for r in spark.read.parquet(target).collect()
-    )
-    assert got == want
 
 
 def test_triangle_count_closed_triple(spark, sf_dir):

@@ -90,11 +90,9 @@ def test_commit_conflict_raises_and_preserves_log(spark, table):
     CommitConflict and the winner's manifest is byte-untouched (the
     hard-link publish cannot overwrite)."""
     base = LH.read_manifest(table)
-    winner = {**base, "version": 2, "parent": 1, "op": "append"}
-    loser = {**base, "version": 2, "parent": 1, "op": "merge"}
-    LH._commit(table, winner)
+    LH._commit_next(table, base, "append")
     with pytest.raises(LH.CommitConflict):
-        LH._commit(table, loser)
+        LH._commit_next(table, base, "merge")
     with open(LH._manifest_path(table, 2)) as f:
         assert json.load(f)["op"] == "append"
     # a writer that re-reads the log lands on the NEXT version instead
@@ -347,6 +345,92 @@ def test_read_appends_refuses_merge_windows(spark, table):
 
 def test_read_appends_empty_window(spark, table):
     assert LH.read_appends(spark, table, from_version=1).count() == 0
+
+
+def test_wap_publish_counts_as_an_append_for_incremental_reads(spark, table):
+    """A published WAP branch adds files the way an append does: the
+    batch incremental read and the x215 stream reader both return the
+    appended keys plus the published ones."""
+    from go_mapreduce_spark.sources.pydatasource import LakehouseStreamReader
+
+    cols = "k long, s string, v double"
+    appended = spark.createDataFrame([(200 + i, "a", 1.0) for i in range(5)], cols)
+    LH.append_table(spark, appended, table, batch_id="a1")  # v2
+    staged = spark.createDataFrame([(300 + i, "w", 2.0) for i in range(7)], cols)
+    LH.stage_append(spark, staged, table, "audit", batch_id="w1")
+    assert LH.publish_branch(spark, table, "audit") == 3
+    want = {200 + i for i in range(5)} | {300 + i for i in range(7)}
+    assert {r.k for r in LH.read_appends(spark, table, from_version=1).collect()} == want
+
+    rdr = LakehouseStreamReader(LH.read_table(spark, table).schema, {"path": table})
+    streamed = [
+        k
+        for part in rdr.partitions({"version": 1}, {"version": 3})
+        for batch in rdr.read(part)
+        for k in batch.to_pydict()["k"]
+    ]
+    assert sorted(streamed) == sorted(want)
+
+
+@pytest.mark.parametrize("key_type", ["bigint", "int", "string"])
+def test_manifest_stats_match_a_per_file_recompute(spark, tmp_path, key_type):
+    """Each file's row count, key range and Bloom bits come from one
+    aggregate at write time; each must equal a recompute over that
+    file alone, for every key type the Bloom hash tells apart."""
+    key = {
+        "bigint": F.col("id") * 4,
+        "int": (F.col("id") * 4).cast("int"),
+        "string": F.format_string("key_%05d", F.col("id")),
+    }[key_type]
+    root = str(tmp_path / key_type)
+    df = spark.range(200).select(key.alias("k"), F.col("id").alias("val"))
+    LH.create_table(spark, df, root, "k")
+    m = LH.read_manifest(root)
+    assert len(m["files"]) >= 2
+    per_file = {
+        os.path.basename(r["f"]): r
+        for r in LH.read_table(spark, root)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.min("k").alias("lo"),
+            F.max("k").alias("hi"),
+            F.collect_list("k").alias("keys"),
+        )
+        .collect()
+    }
+    assert len(per_file) == len(m["files"])
+    for e in m["files"]:
+        r = per_file[os.path.basename(e["path"])]
+        assert (e["rows"], e["min_key"], e["max_key"]) == (r["rows"], r["lo"], r["hi"])
+        bits = 0
+        for positions in LH._probe_positions(spark, m, r["keys"]).values():
+            for p in positions:
+                bits |= 1 << p
+        assert e["bloom"] == f"{bits:x}"
+
+
+def test_create_table_job_ceiling(spark, sf_dir, tmp_path):
+    """A create runs the range-partitioned write and ONE stats
+    aggregate (row count, key range and Bloom bits together), not a
+    second scan of the new files for the Bloom filters."""
+    from go_mapreduce_spark.sources.registry import load_table
+    from tests.conftest import run_counted
+
+    orders = load_table(spark, sf_dir, "orders").select(*LH._DEMO_COLS)
+    df = orders.filter(F.col("o_orderkey") % 4 == 0)
+    root = str(tmp_path / "t")
+    jobs, _ = run_counted(spark, lambda: LH.create_table(spark, df, root, "o_orderkey"))
+    assert len(jobs) <= 6, len(jobs)
+
+
+def test_x367_job_ceiling(spark, sf_dir):
+    """x367 writes three times (create and two stagings); each write
+    scans its new files once for stats."""
+    from tests.conftest import run_counted
+
+    jobs, _ = run_counted(spark, lambda: LH.x367_wap_publish(spark, sf_dir).collect())
+    assert len(jobs) <= 27, len(jobs)
 
 
 def test_append_schema_evolution_additive(spark, table):

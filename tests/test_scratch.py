@@ -107,6 +107,18 @@ def test_changed_input_or_code_rebuilds_and_drops_the_old_version(tmp, tmp_path,
     assert os.path.isfile(os.path.join(other, "part-0"))  # the other sf is untouched
 
 
+def test_new_bytecode_under_an_input_does_not_rebuild(tmp, tmp_path):
+    # the package zip's input is the package dir, where every first
+    # import writes a .pyc; that must not re-zip or drop the zip in use
+    sf = _sf(tmp_path, "a")
+    log: list = []
+    p1 = scratch.build_once("t", _writer(log), sf)
+    os.makedirs(os.path.join(sf, "__pycache__"))
+    with open(os.path.join(sf, "__pycache__", "m.cpython-311.pyc"), "wb") as fh:
+        fh.write(b"pyc")
+    assert scratch.build_once("t", _writer(log), sf) == p1 and len(log) == 1
+
+
 def test_a_build_prunes_slots_whose_inputs_are_gone(tmp, tmp_path):
     gone, live = _sf(tmp_path, "a"), _sf(tmp_path, "b")
     log: list = []

@@ -1,6 +1,6 @@
 """session.ensure_package_on_executors: the package ships once per
 SparkContext object, tracked by the object itself (not its id()), and
-always to the same zip path."""
+always from the same zip, built once in a ``scratch.build_once`` slot."""
 
 from __future__ import annotations
 
@@ -43,12 +43,16 @@ def test_package_ships_once_per_context_object(monkeypatch, tmp_path):
     # worker PYTHONPATH (the streaming-source runner reads only that)
     assert a.environment["PYTHONPATH"] == a.shipped[0]
 
-    # a new context object gets the package shipped again, rewritten
-    # at the same path: repeated sessions leave no new temp dirs behind
+    # a new context object gets the package shipped again, from the
+    # same zip, not a re-zipped one: repeated sessions leave no new
+    # temp dirs behind
+    built = os.stat(a.shipped[0]).st_mtime_ns
     b = _StubContext()
     session.ensure_package_on_executors(_StubSession(b))
     assert b.shipped == a.shipped
-    assert [p.name for p in tmp_path.iterdir()] == [os.path.basename(os.path.dirname(a.shipped[0]))]
+    assert os.stat(b.shipped[0]).st_mtime_ns == built
+    slot = os.path.dirname(os.path.dirname(a.shipped[0]))
+    assert [p.name for p in tmp_path.iterdir()] == [os.path.basename(slot)]
     assert os.listdir(os.path.dirname(a.shipped[0])) == ["go_mapreduce_spark.zip"]
 
 

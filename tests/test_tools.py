@@ -173,8 +173,7 @@ def test_tool_compiles_and_its_engine_imports_resolve(path):
 
 
 _TEMP_DIR_CALLS = {"gettempdir", "mkdtemp"}
-# session.py keeps its own fixed path for the package zip
-_SCRATCH_OWNERS = {"go_mapreduce_spark/scratch.py", "go_mapreduce_spark/session.py"}
+_SCRATCH_OWNERS = {"go_mapreduce_spark/scratch.py"}
 
 
 def test_engine_scratch_paths_come_from_the_scratch_module():

@@ -97,7 +97,6 @@ def test_lakehouse_stream_refuses_merge_versions(spark, sf_dir, tmp_path):
     import pytest
 
     import go_mapreduce_spark.lakehouse as lh
-    from go_mapreduce_spark.sources.pydatasource import LakehouseStreamReader
 
     root = str(tmp_path / "tbl")
     df = spark.createDataFrame(
@@ -107,11 +106,11 @@ def test_lakehouse_stream_refuses_merge_versions(spark, sf_dir, tmp_path):
     batch = spark.createDataFrame([(1, 99.0, "upsert")], "k bigint, v double, _op string")
     lh.merge_table(spark, batch, root, batch_id="m1")
 
-    rdr = LakehouseStreamReader.__new__(LakehouseStreamReader)
-    rdr.root = root
-    assert rdr._new_paths(1)  # create version has provenance
+    # the stream reader's partitions take each version's files from
+    # lakehouse.added_files
+    assert lh.added_files(root, 1)  # create version has provenance
     with pytest.raises(ValueError, match="table_changes"):
-        rdr._new_paths(2)  # merge version refuses
+        lh.added_files(root, 2)  # merge version refuses
 
 
 def test_lakehouse_stream_matches_batch_totals(spark, sf_dir):

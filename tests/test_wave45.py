@@ -85,10 +85,10 @@ def test_x270_falls_back_correctly_under_deletion_vectors(spark, sf_dir):
 
 def test_lookup_probe_derives_key_type_from_manifest(spark, tmp_path):
     """xxhash64 is type-dependent: the Bloom probe must hash the SAME
-    type _file_blooms hashed (the key's native parquet type).  Before
-    the round-6 fix the probe hardcoded bigint — string keys crashed
-    createDataFrame and int32 keys silently pruned EVERY file (a
-    false-negative index)."""
+    type the write-time Bloom aggregate hashed (the key's native
+    parquet type).  Before the round-6 fix the probe hardcoded bigint —
+    string keys crashed createDataFrame and int32 keys silently pruned
+    EVERY file (a false-negative index)."""
     from go_mapreduce_spark import lakehouse as LH
 
     # string-keyed table
