@@ -49,6 +49,7 @@ import os
 import re
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -566,7 +567,7 @@ def delete_table(spark: SparkSession, root: str, condition) -> int:
         if fn.endswith(".parquet"):
             dst = f"v{version:05d}_del_00000.parquet"
             os.rename(os.path.join(stage, fn), os.path.join(data_dir, dst))
-            rows = spark.read.parquet(os.path.join(data_dir, dst)).count()
+            rows = pq.read_metadata(os.path.join(data_dir, dst)).num_rows
             entries.append(
                 {
                     "path": f"{_DATA}/{dst}",
@@ -689,10 +690,7 @@ def x151_stream_lakehouse_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per batch, one map-side-combined aggregate over the batch,
     one key-range-pruned MERGE against only the overlapping files.
     """
-    from go_mapreduce_spark.streaming.events import (
-        _ensure_replay_events,
-        read_event_stream,
-    )
+    from go_mapreduce_spark.streaming.events import replay_events
 
     work = scratch.fresh_dir("x151", sf_dir)
     root = os.path.join(work, "table")
@@ -729,9 +727,7 @@ def x151_stream_lakehouse_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         merge_table(batch_df.sparkSession, merged, root, batch_id=f"b{batch_id}")
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    ).select("user_id", "value")
+    stream = replay_events(spark, sf_dir).select("user_id", "value")
     q = (
         stream.writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", ckpt)

@@ -71,13 +71,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
-def shingle_array(text: Column, n: int = 3) -> Column:
-    """Shingles directly from text — convenience for single-use sites;
-    prefer materializing tokens + :func:`shingles_from_tokens` in
-    multi-stage pipelines (see its docstring for why)."""
-    return shingles_from_tokens(lower_tokens(text), n)
-
-
 def doc_shingles(
     docs: DataFrame,
     id_col: str = "doc_id",

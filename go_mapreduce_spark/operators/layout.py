@@ -459,118 +459,3 @@ def x205_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("length_pct"),
     ).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# x373 — CBO join-order advisor (wave 81)
-# ---------------------------------------------------------------------------
-
-ADVISOR_SEGMENT = "BUILDING"
-
-
-def x373_join_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cost-based join-order advisor for the canonical 3-relation
-    query lineitem ⋈ orders ⋈ σ_seg(customer): estimate each valid
-    left-deep order's FIRST intermediate cardinality from exact table
-    stats (row counts, key NDVs, filter selectivity) with the
-    textbook |A⋈B| = |A|·|B|/max(ndv_A, ndv_B) model, rank plans by
-    estimate, and report the ACTUAL intermediate row count next to
-    each estimate — the x142/x127 statistics machinery closed into an
-    optimizer decision, and a direct audit of how well uniformity
-    assumptions hold on this data.
-
-    Plans: (σC⋈O)⋈L — filter pushed; (O⋈L)⋈σC — fact-first; and
-    (C⋈O)⋈L with the filter NOT pushed, priced to show what pushdown
-    buys.  Everything after the stats aggregates (one per table) and
-    the three actual-count probes is arithmetic on a 3-row relation.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    lstats = li.agg(
-        F.count(F.lit(1)).alias("nl"),
-        F.countDistinct("l_orderkey").alias("ndv_l_ok"),
-    )
-    ostats = o.agg(
-        F.count(F.lit(1)).alias("no"),
-        F.countDistinct("o_orderkey").alias("ndv_o_ok"),
-        F.countDistinct("o_custkey").alias("ndv_o_ck"),
-    )
-    cstats = c.agg(
-        F.count(F.lit(1)).alias("nc"),
-        F.countDistinct("c_custkey").alias("ndv_c_ck"),
-        F.sum(
-            (F.col("c_mktsegment") == ADVISOR_SEGMENT).cast("int")
-        ).alias("nc_f"),
-    )
-    cf = c.filter(F.col("c_mktsegment") == ADVISOR_SEGMENT)
-    act_co_f = (
-        o.join(cf, o.o_custkey == cf.c_custkey)
-        .agg(F.count(F.lit(1)).alias("act"))
-        .select(F.lit("filter_pushed_C_O_then_L").alias("plan"), "act")
-    )
-    act_ol = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .agg(F.count(F.lit(1)).alias("act"))
-        .select(F.lit("fact_first_O_L_then_C").alias("plan"), "act")
-    )
-    act_co = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .agg(F.count(F.lit(1)).alias("act"))
-        .select(F.lit("no_pushdown_C_O_then_L").alias("plan"), "act")
-    )
-    stats = lstats.crossJoin(ostats).crossJoin(cstats)
-    sel = F.col("nc_f") / F.col("nc").cast("double")
-    ndv_cf = F.col("ndv_c_ck") * sel
-    est_co_f = (
-        F.col("no").cast("double")
-        * F.col("nc_f")
-        / F.greatest(F.col("ndv_o_ck").cast("double"), ndv_cf)
-    )
-    est_ol = (
-        F.col("nl").cast("double")
-        * F.col("no")
-        / F.greatest(
-            F.col("ndv_l_ok").cast("double"), F.col("ndv_o_ok").cast("double")
-        )
-    )
-    est_co = (
-        F.col("no").cast("double")
-        * F.col("nc")
-        / F.greatest(
-            F.col("ndv_o_ck").cast("double"), F.col("ndv_c_ck").cast("double")
-        )
-    )
-    ests = (
-        stats.select(
-            F.lit("filter_pushed_C_O_then_L").alias("plan"),
-            est_co_f.alias("est"),
-        )
-        .unionByName(
-            stats.select(
-                F.lit("fact_first_O_L_then_C").alias("plan"),
-                est_ol.alias("est"),
-            )
-        )
-        .unionByName(
-            stats.select(
-                F.lit("no_pushdown_C_O_then_L").alias("plan"),
-                est_co.alias("est"),
-            )
-        )
-    )
-    acts = act_co_f.unionByName(act_ol).unionByName(act_co)
-    w = Window.orderBy(F.col("est_first_join_rows").asc(), "plan")
-    return (
-        ests.join(acts, "plan")
-        .select(
-            "plan",
-            F.round("est", 2).alias("est_first_join_rows"),
-            F.col("act").cast("bigint").alias("actual_first_join_rows"),
-            F.round(
-                F.col("est") / F.col("act").cast("double"), 4
-            ).alias("est_over_actual"),
-        )
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .orderBy("rank")
-    )

@@ -49,7 +49,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from go_mapreduce_spark import scratch
 
 MEDIA_SCHEMA = StructType(
     [
@@ -618,21 +617,17 @@ def x416_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys the sink's scratch dir (payloads are scale-free).
     """
     from go_mapreduce_spark.session import ensure_package_on_executors
-    from go_mapreduce_spark.streaming.events import _replay_to_parquet
+    from go_mapreduce_spark.streaming.events import _replay_to_parquet, write_replay
 
     ensure_package_on_executors(spark)
 
-    def build(path: str) -> None:
-        (
-            spark.read.parquet(WAV_FIXTURE_PATH)
-            .select("media_id", "payload")
-            .repartitionByRange(4, "media_id")
-            .sortWithinPartitions("media_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-
-    src_dir = scratch.build_once("media_wav_src", build, WAV_FIXTURE_PATH)
+    src_dir = write_replay(
+        "media_wav_src",
+        lambda: spark.read.parquet(WAV_FIXTURE_PATH).select("media_id", "payload"),
+        ["media_id"],
+        4,
+        WAV_FIXTURE_PATH,
+    )
     stream = (
         spark.readStream.schema("media_id bigint, payload binary")
         .option("maxFilesPerTrigger", 1)

@@ -17,6 +17,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from go_mapreduce_spark.session import scoped_confs
+
 # Target shuffle-partition payload for iterative loops: ~4M edge rows
 # (~64 MB of (long,long) pairs) per reducer.  Iterative algorithms pay
 # shuffle-partition COUNT overhead per round (task scheduling, state
@@ -127,9 +129,8 @@ def spread_for_fanout(
 @contextlib.contextmanager
 def iterative_plan_confs(spark, n: int):
     """Pin ``spark.sql.shuffle.partitions`` AND disable AQE for a
-    driver-side iterative loop's lifetime (composes
-    :func:`pinned_shuffle_partitions` with
-    ``spark.sql.adaptive.enabled=false``), restoring both on exit.
+    driver-side iterative loop's lifetime (``session.scoped_confs``:
+    both are restored on exit).
 
     Why AQE off here: an iterative loop re-plans the SAME fixed-shape
     round 10–25×; every round's stages then pay AQE's runtime
@@ -143,30 +144,24 @@ def iterative_plan_confs(spark, n: int):
     :func:`iterative_shuffle_partitions`; one-pass scan-heavy plans
     should keep AQE on.
     """
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        with pinned_shuffle_partitions(spark, n):
-            yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    with scoped_confs(
+        spark,
+        {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": str(n)},
+    ):
+        yield
 
 
 @contextlib.contextmanager
 def pinned_shuffle_partitions(spark, n: int):
     """Pin ``spark.sql.shuffle.partitions`` for a driver-side loop's
-    lifetime, restoring on exit (same discipline as the streaming
-    replay drain, streaming/events.py).  Plans are bound to the conf
-    at ACTION time, so every round planned inside the block — and any
-    final ``localCheckpoint`` — uses the pinned count; callers must
-    materialize results before exiting if downstream consumers should
-    not re-plan at the session default."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
+    lifetime, restoring on exit (``session.scoped_confs``, as the
+    streaming replay drain in streaming/events.py does).  Plans are
+    bound to the conf at ACTION time, so every round planned inside
+    the block — and any final ``localCheckpoint`` — uses the pinned
+    count; callers must materialize results before exiting if
+    downstream consumers should not re-plan at the session default."""
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": str(n)}):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def salted_join(

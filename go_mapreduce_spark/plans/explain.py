@@ -49,10 +49,6 @@ def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in formatted_plan(df)
-
-
 def executed_plan(df: DataFrame) -> str:
     """Final (post-AQE) physical plan — triggers execution.
 

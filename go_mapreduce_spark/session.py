@@ -13,6 +13,7 @@ so the same code runs unchanged on a 1000-executor cluster:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import weakref
 import zipfile
@@ -45,6 +46,24 @@ def _package_zip() -> str:
                         z.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
 
     return os.path.join(scratch.build_once("pkg", build, pkg_dir), _ZIP)
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set the session confs ``confs`` for the block.  On exit, also
+    when the block raises, each key gets its old value back, and a key
+    that had no value is unset."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:

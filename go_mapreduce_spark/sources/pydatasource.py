@@ -109,17 +109,32 @@ class TsvReader(DataSourceReader):
         yield from table.to_batches()
 
 
-_REGISTERED_SESSIONS: set[str] = set()
+def register_on(spark, source: type[DataSource]) -> None:
+    """Register ``source`` on ``spark`` unless ``spark`` has it.
+
+    Registrations belong to one session: a ``newSession()`` shares the
+    first session's SparkContext but starts with none of its sources,
+    so the check asks the session itself.  Spark refuses a name that
+    the thread's ACTIVE session knows and ``spark`` does not, so
+    ``spark`` is the active session for the call, and the previous one
+    is active again after it."""
+    if spark._jsparkSession.sessionState().dataSourceManager().dataSourceExists(source.name()):
+        return
+    jsession = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    prev = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(source)
+    finally:
+        if prev.isDefined():
+            jsession.setActiveSession(prev.get())
+        else:
+            jsession.clearActiveSession()
 
 
 def register(spark) -> None:
-    """Register the connector once per SparkSession (re-registration
-    under the same name raises in pyspark 4)."""
-    key = spark.sparkContext.applicationId
-    if key in _REGISTERED_SESSIONS:
-        return
-    spark.dataSource.register(TsvDataSource)
-    _REGISTERED_SESSIONS.add(key)
+    """Register ``gms_tsv`` on ``spark`` (:func:`register_on`)."""
+    register_on(spark, TsvDataSource)
 
 
 def x171_custom_source_roundtrip(spark, sf_dir: str):
@@ -300,15 +315,9 @@ class TsvStreamReader(DataSourceStreamReader):
         _write_marker(self.marker, "index", end["index"])
 
 
-_STREAM_REGISTERED: set[str] = set()
-
-
 def register_stream(spark) -> None:
-    key = spark.sparkContext.applicationId
-    if key in _STREAM_REGISTERED:
-        return
-    spark.dataSource.register(TsvStreamDataSource)
-    _STREAM_REGISTERED.add(key)
+    """Register ``gms_tsv_stream`` on ``spark`` (:func:`register_on`)."""
+    register_on(spark, TsvStreamDataSource)
 
 
 def x213_custom_stream_source(spark, sf_dir: str):
@@ -485,15 +494,10 @@ class LakehouseStreamReader(DataSourceStreamReader):
         _write_marker(self.marker, "version", end["version"])
 
 
-_LH_STREAM_REGISTERED: set[str] = set()
-
-
 def register_lakehouse_stream(spark) -> None:
-    key = spark.sparkContext.applicationId
-    if key in _LH_STREAM_REGISTERED:
-        return
-    spark.dataSource.register(LakehouseStreamDataSource)
-    _LH_STREAM_REGISTERED.add(key)
+    """Register ``gms_lakehouse_stream`` on ``spark``
+    (:func:`register_on`)."""
+    register_on(spark, LakehouseStreamDataSource)
 
 
 def x215_lakehouse_stream_source(spark, sf_dir: str):

@@ -152,21 +152,6 @@ def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def read_text_lines(spark: SparkSession, path: str, n_map: int | None = None) -> DataFrame:
-    """Line-oriented text source (reference parity: R1 file split).
-
-    The reference splits one file into nMap line-aligned chunks
-    (mapreduce/mapreduce.go:74-112).  Spark's text source does the
-    same split at HDFS-block/line boundaries; ``n_map`` maps to a
-    minimum split count via repartition only when the caller insists
-    on the reference's static parallelism.
-    """
-    df = spark.read.text(path)
-    if n_map is not None:
-        df = df.repartition(n_map)
-    return df
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -498,18 +498,15 @@ class SqliteWriter(_StagedSqliteWriter, DataSourceArrowWriter):
         self._drop_stages(messages)
 
 
-_REGISTERED_SESSIONS: set[str] = set()
-
-
 def register(spark) -> None:
-    key = spark.sparkContext.applicationId
-    if key in _REGISTERED_SESSIONS:
-        return
+    """Register ``gms_sqlite`` on ``spark``
+    (``pydatasource.register_on``)."""
+    from go_mapreduce_spark.sources.pydatasource import register_on
+
     # runtime SQL conf (works on a plain driver session — verified):
     # without it Spark refuses any reader that implements pushFilters
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(SqliteDataSource)
-    _REGISTERED_SESSIONS.add(key)
+    register_on(spark, SqliteDataSource)
 
 
 def _ensure_orders_db(spark, sf_dir: str) -> str:
@@ -778,20 +775,16 @@ def x412_sqlite_stream_sink(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from go_mapreduce_spark.functions.numeric import dsum
-    from go_mapreduce_spark.streaming.events import _ensure_replay_events
+    from go_mapreduce_spark.streaming.events import replay_events
 
     register(spark)
-    events_dir = _ensure_replay_events(spark, sf_dir)
     base = scratch.fresh_dir("x412", sf_dir)
     db = os.path.join(base, "events_sink.db")
     ckpt_dir = os.path.join(base, "ckpt")
-    schema = spark.read.parquet(events_dir).schema
 
     def drain():
         q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "2")
-            .parquet(events_dir)
+            replay_events(spark, sf_dir)
             .selectExpr("event_id", "user_id", "event_type", "value")
             .writeStream.format("gms_sqlite")
             .option("path", db)

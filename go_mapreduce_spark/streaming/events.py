@@ -14,9 +14,18 @@ Scale notes:
   of stream length.
 - ``availableNow`` triggers give exactly-once batch-style replay for
   backfills — same code path as the 24/7 stream.
+
+Replays: :func:`write_replay` writes every file-replay source (an
+ordered frame in, k ordered parquet files out), and every events
+replay query reads :func:`replay_events`.
 """
 
 from __future__ import annotations
+
+import math
+import os
+import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -30,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from go_mapreduce_spark import scratch
+from go_mapreduce_spark.session import scoped_confs
 
 # Schema of the replayed event stream (ts already µs-normalized —
 # streams come from a normalized source, not raw ns parquet).
@@ -194,29 +204,73 @@ REPLAY_SHUFFLE_PARTITIONS = 4
 REPLAY_FINAL_WATERMARK: dict[str, str | None] = {}
 
 
-def _ensure_replay_events(spark: SparkSession, sf_dir: str) -> str:
-    """Write the events table as a 4-file parquet replay source once
-    per sf; reuse on later calls (availableNow replays it in 2-file
-    micro-batches, exercising multi-trigger watermark advancement).
+def write_replay(
+    name: str,
+    frame: Callable[[], DataFrame],
+    order: list[str],
+    n_files: int,
+    *inputs: str,
+) -> str:
+    """Path of a file-replay source: the rows of ``frame()`` sorted by
+    ``order`` and cut into ``n_files`` parquet files, written once per
+    state of ``inputs`` (``scratch.build_once`` slot ``name``).
 
-    Files are RANGE-partitioned and sorted by ``ts`` — a historical
-    backfill replays chronologically, so per-batch watermarks trail
-    the data instead of jumping to global-max after batch 1 (which
-    would mark every older row in later batches late and, for
-    stateful ops like the x65 stream-stream join, silently drop it).
+    The cut is a pure function of the rows.  One task sorts them and
+    rolls to a new file every ``ceil(rows / n_files)`` rows, so each
+    file but the last holds exactly that many (a frame of very few
+    rows can give fewer files).  ``order`` must be a total order for
+    the rows inside each file to be fixed too.  The file stream source
+    takes files in modification-time order, so each file's mtime is
+    set one second after the previous file's: a replay reads the
+    files, and so the rows, in ``order``.
     """
-    from go_mapreduce_spark.sources.registry import load_table
 
     def build(path: str) -> None:
+        df = frame()
+        per_file = max(1, math.ceil(df.count() / n_files))
         (
-            load_table(spark, sf_dir, "events")
-            .repartitionByRange(4, "ts")
-            .sortWithinPartitions("ts")
+            df.coalesce(1)
+            .sortWithinPartitions(*order)
             .write.mode("overwrite")
+            .option("maxRecordsPerFile", per_file)
             .parquet(path)
         )
+        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+        now = time.time_ns()
+        for i, f in enumerate(parts):
+            t = now - (len(parts) - i) * 1_000_000_000
+            os.utime(os.path.join(path, f), ns=(t, t))
 
-    return scratch.build_once("replay_events", build, sf_dir)
+    return scratch.build_once(name, build, *inputs)
+
+
+def _ensure_replay_events(spark: SparkSession, sf_dir: str) -> str:
+    """The events table as a 4-file replay source, ordered by
+    ``(ts, event_id)``: equal row counts per file, files in ``ts``
+    order.  A historical backfill replays chronologically, so
+    per-batch watermarks trail the data instead of jumping to the
+    global max after batch 1 (which would mark every older row in
+    later batches late and, for stateful ops like the x65
+    stream-stream join, silently drop it)."""
+    from go_mapreduce_spark.sources.registry import load_table
+
+    return write_replay(
+        "replay_events",
+        lambda: load_table(spark, sf_dir, "events"),
+        ["ts", "event_id"],
+        4,
+        sf_dir,
+    )
+
+
+def replay_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as a stream, 2 of the 4 replay files per
+    trigger: an ``availableNow`` drain runs two chronological data
+    micro-batches, which exercises watermark advancement across
+    triggers.  Every event-replay query reads this."""
+    return read_event_stream(
+        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
+    )
 
 
 def _replay_to_parquet(
@@ -244,14 +298,11 @@ def _replay_to_parquet(
     where per-partition data — not store fan-out — is the bound.
     Results are partition-count-invariant (determinism suite).
     """
-    import os
-
     work = scratch.fresh_dir(name, sf_dir)
     out_dir = os.path.join(work, "out")
     ckpt_dir = os.path.join(work, "ckpt")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_SHUFFLE_PARTITIONS))
-    try:
+    pin = {"spark.sql.shuffle.partitions": str(REPLAY_SHUFFLE_PARTITIONS)}
+    with scoped_confs(spark, pin):
         q = (
             stream_df.writeStream.format("parquet")
             .option("path", out_dir)
@@ -268,8 +319,6 @@ def _replay_to_parquet(
                 wm = et["watermark"]
                 break
         REPLAY_FINAL_WATERMARK[name] = wm
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(out_dir)
 
 
@@ -287,9 +336,7 @@ def x36_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``complete``-mode memory-sink variant (equals FULL batch, but
     driver-bound) stays pytest-only in test_streaming.
     """
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     out = _replay_to_parquet(spark, sf_dir, "x36", tumbling_counts(stream))
     return out.select(
         "window_start", "event_type", "n_events", "total_value"
@@ -308,9 +355,7 @@ def x43_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate proves the merge-on-overlap session state machine, not just
     windowed hashing.
     """
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     out = _replay_to_parquet(spark, sf_dir, "x43", session_aggregate(stream))
     return out.select(
         "user_id", "session_start", "session_end", "n_events", "total_value"
@@ -331,9 +376,7 @@ def x65_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffered from batch N-1) are what make this a real statefulness
     gate rather than a per-batch join.
     """
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     out = _replay_to_parquet(
         spark, sf_dir, "x65", purchases_with_recent_click(stream)
     )
@@ -369,38 +412,18 @@ def x89_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch x24 expansion under the same finalization predicate
     (window_end <= ms-truncated max(ts) - 2h).
     """
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     out = _replay_to_parquet(spark, sf_dir, "x89", sliding_counts(stream))
     return out.select(
         "window_start", "event_type", "n_events", "total_value"
     ).orderBy("window_start", "event_type")
 
 
-def _ensure_replay_events_dup(spark: SparkSession, sf_dir: str) -> str:
-    """Replay source with every event DUPLICATED (events ∪ events),
-    still range-partitioned and ts-sorted: the planted-duplicate
-    input for the streaming-dedup gate.  Written once per sf."""
-    from go_mapreduce_spark.sources.registry import load_table
-
-    def build(path: str) -> None:
-        ev = load_table(spark, sf_dir, "events")
-        (
-            ev.unionAll(ev)
-            .repartitionByRange(4, "ts")
-            .sortWithinPartitions("ts")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-
-    return scratch.build_once("replay_events_dup", build, sf_dir)
-
-
 def x90_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-visible streaming exactly-once dedup: replay a source
-    where EVERY event appears twice, drop duplicates on event_id
-    within the watermark horizon, and summarize per event type.
+    """Driver-visible streaming exactly-once dedup: replay the events
+    unioned with themselves, so EVERY event appears twice, drop
+    duplicates on event_id within the watermark horizon, and
+    summarize per event type.
 
     ``dropDuplicatesWithinWatermark`` keeps the seen-key set only for
     the 2h watermark horizon — bounded state at any stream length,
@@ -413,11 +436,10 @@ def x90_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from go_mapreduce_spark.functions.numeric import dsum
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events_dup(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     deduped = (
-        stream.withWatermark("ts", "2 hours")
+        stream.unionAll(stream)
+        .withWatermark("ts", "2 hours")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     out = _replay_to_parquet(spark, sf_dir, "x90", deduped)
@@ -458,9 +480,7 @@ def x118_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.floor(F.col("n_total") / 10).alias("activity_tier")
         )
     )
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     enriched = (
         stream.filter(F.col("event_type") == "purchase")
         .join(profile, "user_id")
@@ -507,9 +527,7 @@ def x134_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         _update_user_totals,
     )
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     totals = (
         stream.select("user_id", "value")
         .groupBy("user_id")
@@ -562,9 +580,7 @@ def x135_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides evict around the watermark, the non-optional property
     of any stream-stream join at 100 TB.
     """
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
         .select(
@@ -619,9 +635,7 @@ def x166_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded on both sides by the same eviction rule that gates
     emission.
     """
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     purchases = (
         stream.filter(F.col("event_type") == "purchase")
         .select(
@@ -680,9 +694,7 @@ def x168_stream_attributed_windows(spark: SparkSession, sf_dir: str) -> DataFram
     replay end.  State is bounded at BOTH stages: the join evicts
     around the watermark, the aggregate holds only open windows.
     """
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     attributed = purchases_with_recent_click(stream)
     agg = (
         attributed.groupBy(F.window("purchase_ts", "1 hour").alias("w"))
@@ -720,9 +732,7 @@ def x206_rocksdb_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from go_mapreduce_spark.functions.numeric import dsum
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "2 hours").alias("w"), F.col("user_id"))
@@ -737,40 +747,12 @@ def x206_rocksdb_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    prev_changelog = spark.conf.get(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        None,
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true",
-    )
-    try:
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+    with scoped_confs(spark, rocksdb):
         out = _replay_to_parquet(spark, sf_dir, "x206", agg)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        if prev_changelog is None:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                prev_changelog,
-            )
     return out.select(
         "window_start", "user_id", "n_events", "total_value"
     ).orderBy("window_start", "user_id")
@@ -797,17 +779,14 @@ def x236_multisink_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared result re-aggregates sink (b), so a dropped, duplicated,
     or partially-written batch hash-mismatches the closed-form oracle.
     """
-    import os
-
     from pyspark.sql import functions as F
 
-    src = _ensure_replay_events(spark, sf_dir)
     base = scratch.fresh_dir("x236", sf_dir)
     raw_dir = os.path.join(base, "raw")
     agg_dir = os.path.join(base, "agg")
     ckpt = os.path.join(base, "ckpt")
 
-    stream = read_event_stream(spark, src, max_files_per_trigger=2)
+    stream = replay_events(spark, sf_dir)
 
     def write_both(batch_df, batch_id: int) -> None:
         batch_df.persist()
@@ -869,7 +848,6 @@ def x271_stream_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     under at-least-once delivery.  Final answer compares the merged
     estimate to the exact distinct count batch-side.
     """
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -878,9 +856,7 @@ def x271_stream_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     state_dir = os.path.join(base, "state")
     out_dir = os.path.join(base, "ckpt")
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
 
     # The live state version is selected by a pointer file updated with
     # os.replace (atomic on POSIX): a crash at ANY point leaves the
@@ -970,9 +946,7 @@ def x343_stream_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     out = _replay_to_parquet(spark, sf_dir, "x343", tumbling_counts(stream))
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), "event_type"
@@ -1015,9 +989,7 @@ def x371_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         PSI_EPS,
     )
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     binned = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(
@@ -1107,9 +1079,7 @@ def x393_stream_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from go_mapreduce_spark.functions.numeric import DECIMAL_T
 
-    stream = read_event_stream(
-        spark, _ensure_replay_events(spark, sf_dir), max_files_per_trigger=2
-    )
+    stream = replay_events(spark, sf_dir)
     daily = (
         stream.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 day").alias("w"))

@@ -519,6 +519,19 @@ def test_dv_delete_hides_rows_without_rewriting_files(spark, tmp_path):
     assert lh.read_table(spark, root, version=1).count() == 20
 
 
+def test_delete_table_job_ceiling(spark, tmp_path):
+    """A delete writes its key-list file and takes the row count from
+    that file's footer, without a second scan of the file."""
+    from pyspark.sql import functions as F
+
+    from tests.conftest import run_counted
+
+    lh, root = _dv_table(spark, tmp_path)
+    jobs, _ = run_counted(spark, lambda: lh.delete_table(spark, root, F.col("o_orderkey") % 5 == 0))
+    assert lh.read_manifest(root)["deletes"][0]["rows"] == 4
+    assert len(jobs) <= 1, len(jobs)
+
+
 def test_dv_optimize_materializes_and_clears_vectors(spark, tmp_path):
     from pyspark.sql import functions as F
 

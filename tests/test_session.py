@@ -85,3 +85,26 @@ def test_engine_runs_from_a_non_repo_working_directory(tmp_path, sf_dir):
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert "x171_custom_source_roundtrip 20" in proc.stdout
     assert "x213_custom_stream_source 5" in proc.stdout
+
+
+def test_scoped_confs_restores_unsets_and_survives_a_raise(spark):
+    """``scoped_confs`` puts back a key's old value, unsets a key that
+    had none, and does both when the block raises."""
+    import pytest
+
+    from go_mapreduce_spark.session import scoped_confs
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    fresh = "spark.gms.test.scopedConfs"
+    assert spark.conf.get(fresh, None) is None
+    confs = {"spark.sql.shuffle.partitions": "3", fresh: "on"}
+    with scoped_confs(spark, confs):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+        assert spark.conf.get(fresh) == "on"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert spark.conf.get(fresh, None) is None
+    with pytest.raises(RuntimeError, match="boom"):
+        with scoped_confs(spark, confs):
+            raise RuntimeError("boom")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    assert spark.conf.get(fresh, None) is None

@@ -327,3 +327,40 @@ def test_custom_stream_source_restart_floor(spark, sf_dir, tmp_path):
     r3 = PDS.TsvStreamReader(schema, {"path": staged})
     r3.partitions(o2, o2)
     assert r3.latestOffset()["index"] >= o2["index"]
+
+
+def test_data_sources_register_on_a_new_session(spark, tmp_path):
+    """Python data sources are registered per session: a
+    ``newSession()`` shares the first session's application id but
+    starts with none of its sources, so each ``register*`` call must
+    register on the session it is given."""
+    import sqlite3
+
+    from go_mapreduce_spark.sources import pydatasource as PDS
+    from go_mapreduce_spark.sources import sqlite_source as SQ
+
+    tsv = str(tmp_path / "tsv")
+    write_sorted_tsv(spark.createDataFrame([("a", 1), ("b", 2)], "k string, n bigint"), tsv, ["k"])
+    db = str(tmp_path / "t.db")
+    con = sqlite3.connect(db)
+    con.execute("CREATE TABLE t (k TEXT, n INTEGER)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", [("a", 1), ("b", 2)])
+    con.commit()
+    con.close()
+
+    registers = (PDS.register, PDS.register_stream, PDS.register_lakehouse_stream, SQ.register)
+    for register in registers:
+        register(spark)
+    s2 = spark.newSession()
+    jsession = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    active = jsession.getActiveSession().get()
+    for register in registers:
+        register(s2)
+    assert jsession.getActiveSession().get().equals(active)  # put back after each call
+    back = s2.read.format("gms_tsv").schema("k string, n bigint").option("path", tsv).load()
+    assert sorted(back.collect()) == [("a", 1), ("b", 2)]
+    back = s2.read.format("gms_sqlite").option("path", db).option("table", "t").load()
+    assert sorted((r.k, r.n) for r in back.collect()) == [("a", 1), ("b", 2)]
+    manager = s2._jsparkSession.sessionState().dataSourceManager()
+    for name in ("gms_tsv_stream", "gms_lakehouse_stream"):
+        assert manager.dataSourceExists(name), name

@@ -189,3 +189,47 @@ def test_stream_sliding_emits_finalized_subset(spark, sf_dir):
     assert len(got) < len(batch)  # open windows near max(ts) held back
     for k, v in got.items():
         assert batch[k] == v
+
+
+def test_event_replay_is_repeatable_and_chronological(spark, sf_dir, tmp_path, monkeypatch):
+    """Two fresh builds of the event replay cut the rows into the same
+    per-file counts, and a drain reads them chronologically: each
+    batch's min ``ts`` is at or after the previous batch's max."""
+    import tempfile
+
+    import pyarrow.parquet as pq
+
+    from go_mapreduce_spark.streaming import events as SE
+
+    def build(name: str) -> list[int]:
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / name))
+        os.makedirs(tempfile.tempdir)
+        path = SE._ensure_replay_events(spark, sf_dir)
+        files = [os.path.join(path, f) for f in os.listdir(path) if f.startswith("part-")]
+        mtimes = sorted(os.stat(f).st_mtime_ns for f in files)
+        assert len(set(mtimes)) == len(files), "the source would order tied files arbitrarily"
+        files.sort(key=lambda f: os.stat(f).st_mtime_ns)
+        return [pq.read_metadata(f).num_rows for f in files]
+
+    first = build("a")
+    assert build("b") == first
+    assert len(first) == 4 and sum(first) == load_table(spark, sf_dir, "events").count()
+
+    batches = []
+
+    def record(df, batch_id):
+        r = df.agg(F.min("ts"), F.max("ts"), F.count(F.lit(1))).first()
+        batches.append((batch_id, r[0], r[1], r[2]))
+
+    q = (
+        SE.replay_events(spark, sf_dir)
+        .writeStream.foreachBatch(record)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    batches.sort()
+    assert [n for *_, n in batches] == [first[0] + first[1], first[2] + first[3]]
+    for (_, _, prev_max, _), (_, cur_min, _, _) in zip(batches, batches[1:]):
+        assert cur_min >= prev_max
