@@ -6,6 +6,14 @@ ANSI-SQL oracle DuckDB can run on the same parquet fixtures
 between the two — the driver's compare hashes values after sorting
 columns by name.
 
+``QUERIES`` is derived by one rule: a query is a module-level function
+named ``q<N>_…`` or ``x<N>[a-z]_…`` (``x41b_ivf_clustered``) defined in
+one of the engine modules imported below, keyed by its own name and
+ordered by (prefix, number, suffix) — so q1–q10 and x1–x3 come first.
+A name defined in two modules fails the import.  Adding a query is
+writing the function (and importing its module here if it is a new
+one), plus an ``ORACLE_SQL`` entry where SQL can express it.
+
 Queries whose semantics are not exactly SQL-expressible (seeded LSH,
 streaming state) appear in ``QUERIES`` without an oracle entry; the
 driver records a rows-only check and pytest covers them with
@@ -14,10 +22,14 @@ recall-bound / batch-equivalence tests instead (SURVEY.md §5.2).
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import math as _math
+import re
+from collections.abc import Callable, Iterable
+from types import FunctionType, ModuleType
 
 from pyspark.sql import DataFrame, SparkSession
 
+from go_mapreduce_spark import lakehouse as LH
 from go_mapreduce_spark.operators import analytics as AN
 from go_mapreduce_spark.operators import cdc as CD
 from go_mapreduce_spark.operators import graph as G
@@ -29,231 +41,104 @@ from go_mapreduce_spark.operators import relational as R
 from go_mapreduce_spark.operators import relational_ext as RX
 from go_mapreduce_spark.operators import scale as SC
 from go_mapreduce_spark.operators import sketches as SK
+from go_mapreduce_spark.operators import stats as ST
+from go_mapreduce_spark.operators import tpch as TP
 from go_mapreduce_spark.operators import udfs as U
 from go_mapreduce_spark.operators import wordcount as W
 from go_mapreduce_spark.operators import dedup as D
 from go_mapreduce_spark.operators import similarity as S
 from go_mapreduce_spark.operators import text as T
 from go_mapreduce_spark.operators import windows as WIN
+from go_mapreduce_spark.operators.stats import (
+    PSI_BINS_PER_DECADE as _PSI_B,
+    PSI_EPS as _PSI_E,
+)
+from go_mapreduce_spark.sources import pydatasource as PDS
+from go_mapreduce_spark.sources import sinks as SNK
+from go_mapreduce_spark.sources import sqlite_source as SQ
 from go_mapreduce_spark.streaming import events as SE
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-QUERIES: dict[str, QueryFn] = {
-    # --- reference parity + relational core (SURVEY.md §2.C Q1–Q10) ---
-    "q1_word_count": W.q1_word_count,
-    "q2_grouped_agg": R.q2_grouped_agg,
-    "q3_filter_agg": R.q3_filter_agg,
-    "q4_broadcast_join": R.q4_broadcast_join,
-    "q5_multiway_join": R.q5_multiway_join,
-    "q6_count_distinct": R.q6_count_distinct,
-    "q7_topk": R.q7_topk,
-    "q8_window": R.q8_window,
-    "q9_intersect": R.q9_intersect,
-    "q10_anti_join": R.q10_anti_join,
-    # --- north-star extensions (X1–X3) ---
-    "x1_dedup_exact": D.x1_dedup_exact,
-    "x2_top_tokens": W.x2_top_tokens,
-    "x3_knn_cosine": S.x3_knn_cosine,
-    # --- training-data pipeline: dedup family ---
-    "x4_dedup_minhash_lsh": D.x4_dedup_minhash_lsh,      # no exact oracle (LSH)
-    "x5_dedup_simhash": D.x5_dedup_simhash,              # no exact oracle (LSH)
-    "x6_dedup_ngram_jaccard": D.x6_dedup_ngram_jaccard,
-    # --- text analysis ---
-    "x7_token_stats": T.x7_token_stats,
-    "x8_lang_id": T.x8_lang_id,
-    "x9_quality_score": T.x9_quality_score,
-    "x10_fingerprint": T.x10_fingerprint,
-    # --- streaming-semantics windows (batch-checked) ---
-    "x11_tumbling_window": WIN.x11_tumbling_window,
-    "x12_session_window": WIN.x12_session_window,        # no oracle (gap semantics)
-    # --- embedding near-dup ---
-    "x13_dedup_embedding": D.x13_dedup_embedding,
-    # --- extended relational surface ---
-    "x14_rollup": RX.x14_rollup,
-    "x15_json_extract": RX.x15_json_extract,
-    "x16_asof_join": RX.x16_asof_join,
-    "x17_range_join": RX.x17_range_join,
-    "x18_except": RX.x18_except,
-    "x19_scalar_funcs": RX.x19_scalar_funcs,
-    # --- text analysis (continued) ---
-    "x21_tfidf": T.x21_tfidf,
-    # --- UDF surface ---
-    "x22_pandas_udf_tokens": U.x22_pandas_udf_tokens,
-    # --- sliding window ---
-    "x24_sliding_window": WIN.x24_sliding_window,
-    # --- sketches (x25: no oracle — estimates are implementation-
-    #     specific; error-bound tests vs exact in tests/test_scale.py.
-    #     x26 got a BOUND oracle in wave 99: its output is the
-    #     in-plan rank-error contract, DuckDB pins the flags) ---
-    "x25_approx_distinct": SK.x25_approx_distinct,
-    "x26_approx_quantiles": SK.x26_approx_quantiles,
-    # --- iterative graph algorithm + grouped z-score (window plan;
-    #     the applyInPandas variant is the pytest UDF demo) ---
-    "x27_dedup_clusters": D.x27_dedup_clusters,
-    "x28_grouped_zscore": RX.x28_grouped_zscore,
-    # --- cube & pivot ---
-    "x29_cube": RX.x29_cube,
-    "x30_pivot": RX.x30_pivot,
-    # --- SQL surface + correlated subquery (decorrelation) ---
-    "x31_correlated_subquery": RX.x31_correlated_subquery,
-    # --- UNION ALL + array aggregation ---
-    "x32_union_all": RX.x32_union_all,
-    "x33_array_agg": RX.x33_array_agg,
-    # --- explicit GROUPING SETS (SQL surface) ---
-    "x34_grouping_sets": RX.x34_grouping_sets,
-    # --- multimodal decode (Arrow mapInPandas over binary payloads) ---
-    "x35_multimodal_decode": MM.x35_multimodal_decode,
-    # --- Structured Streaming availableNow replay (≡ batch x11) ---
-    "x36_stream_tumbling": SE.x36_stream_tumbling,
-    # --- training-data curation: sampling / budgeting / accounting ---
-    "x37_hash_sample": C.x37_hash_sample,
-    "x38_per_group_cap": C.x38_per_group_cap,
-    "x39_bpe_token_count": C.x39_bpe_token_count,
-    "x40_grouped_median": C.x40_grouped_median,
-    # --- IVF approximate nearest neighbors (recall-tested, no oracle) ---
-    "x41_ann_ivf": S.x41_ann_ivf,
-    # x41b: the trained quantizer on a CLUSTERED corpus — the
-    # operator's contract regime; recall ≥ 0.9 pytest-gated at both
-    # committed sfs (wave 99, round-8 verdict ask #6)
-    "x41b_ivf_clustered": S.x41b_ivf_clustered,
-    # --- grouped-agg pandas UDAF surface ---
-    "x42_pandas_udaf_geomean": U.x42_pandas_udaf_geomean,
-    # --- streaming session-window replay (≡ batch x12) ---
-    "x43_stream_sessions": SE.x43_stream_sessions,
-    # --- winnowing fingerprints (MOSS-style overlap sketch) ---
-    "x44_winnow_fingerprint": T.x44_winnow_fingerprint,
-    # --- Python UDTF through SQL LATERAL ---
-    "x45_udtf_bigrams": U.x45_udtf_bigrams,
-    # --- higher-order array functions over vectors ---
-    "x46_array_math": RX.x46_array_math,
-    # --- skew salting proven semantically invisible ---
-    "x47_salted_join": SC.x47_salted_join,
-    # --- curation wave 2: packing / repetition / PII audit ---
-    "x48_pack_sequences": C.x48_pack_sequences,
-    "x49_repetition_score": C.x49_repetition_score,
-    "x50_redact_pii": C.x50_redact_pii,
-    # --- time-series gap-fill + forward fill (hypertable resample) ---
-    "x51_gapfill_ffill": WIN.x51_gapfill_ffill,
-    # --- curation wave 3: eval decontamination + token-budget mixing ---
-    "x52_decontaminate": C.x52_decontaminate,
-    "x53_token_budget_mix": C.x53_token_budget_mix,
-    # --- CDC: join-based MERGE upsert + SCD2 validity intervals ---
-    "x54_merge_upsert": CD.x54_merge_upsert,
-    "x55_scd2_intervals": CD.x55_scd2_intervals,
-    # --- clustering: nearest-centroid assignment (trainer in pytest) ---
-    "x56_kmeans_assign": CL.x56_kmeans_assign,
-    # --- hot-shingle audit (max_df sizing input) + window-fn zoo ---
-    "x57_hot_shingles": D.x57_hot_shingles,
-    "x58_window_zoo": RX.x58_window_zoo,
-    # --- PageRank over the near-dup graph (fixed-iteration replay) ---
-    "x59_pagerank": G.x59_pagerank,
-    # --- context-window chunking + composed curation keep-set ---
-    "x60_chunk_documents": C.x60_chunk_documents,
-    "x61_curation_pipeline": C.x61_curation_pipeline,
-    # --- near-dup-aware keep-set (x27 cluster representatives) ---
-    "x64_neardup_curation": C.x64_neardup_curation,
-    # --- stream-stream join replay (≡ batch time-window self-join) ---
-    "x65_stream_join": SE.x65_stream_join,
-    # --- sparse TF-IDF cosine similarity join ---
-    "x66_tfidf_cosine": T.x66_tfidf_cosine,
-    # --- per-group mode with deterministic ties ---
-    "x67_grouped_mode": RX.x67_grouped_mode,
-    # --- UNPIVOT/melt (inverse of x30 pivot) ---
-    "x68_unpivot": RX.x68_unpivot,
-    # --- triangle counting on the near-dup graph ---
-    "x69_triangle_count": G.x69_triangle_count,
-    # --- trigram language-model counts (KenLM-style) ---
-    "x70_trigram_lm": T.x70_trigram_lm,
-    # --- frame-sample grid fan-out accounting (multimodal plumbing) ---
-    "x71_frame_grid": MM.x71_frame_grid,
-    # --- per-label vector centroid (k-means update step, oracle-faced) ---
-    "x72_label_centroids": CL.x72_label_centroids,
-    # --- BM25 ranking + skip-gram co-occurrence (IR / word2vec prep) ---
-    "x73_bm25": T.x73_bm25,
-    "x74_skipgram_cooc": T.x74_skipgram_cooc,
-    # --- event-transition matrix + lang-ID confusion matrix ---
-    "x75_event_transitions": AN.x75_event_transitions,
-    "x76_lang_confusion": T.x76_lang_confusion,
-    # --- multi-granularity rollup + embedding-quantization audit ---
-    "x77_multi_rollup": WIN.x77_multi_rollup,
-    "x78_quantize_audit": CL.x78_quantize_audit,
-    # --- round-3 wave 4: warehouse reports + analytics + dedup ---
-    "x79_pricing_summary": RX.x79_pricing_summary,
-    "x80_sessionize": WIN.x80_sessionize,
-    "x81_token_entropy": T.x81_token_entropy,
-    "x82_chi2_independence": AN.x82_chi2_independence,
-    "x83_iqr_outliers": AN.x83_iqr_outliers,
-    "x84_sorted_neighborhood": D.x84_sorted_neighborhood,
-    "x85_stratified_sample": C.x85_stratified_sample,
-    "x86_price_histogram": AN.x86_price_histogram,
-    "x87_basket_pairs": AN.x87_basket_pairs,
-    "x88_key_skew_spectrum": AN.x88_key_skew_spectrum,
-    "x89_stream_sliding": SE.x89_stream_sliding,
-    "x90_stream_dedup": SE.x90_stream_dedup,
-    "x91_doc_perplexity": T.x91_doc_perplexity,
-    "x92_share_of_total": RX.x92_share_of_total,
-    "x93_string_agg": RX.x93_string_agg,
-    "x94_measure_corr": AN.x94_measure_corr,
-    "x95_dim_stats": CL.x95_dim_stats,
-    "x96_incremental_dedup": D.x96_incremental_dedup,
-    "x97_shipping_priority": RX.x97_shipping_priority,
-    "x98_returned_items": RX.x98_returned_items,
-    "x99_cumulative_users": AN.x99_cumulative_users,
-    "x100_feature_matrix": T.x100_feature_matrix,
-    # --- event analytics: conversion funnel + retention cohorts ---
-    "x62_funnel": AN.x62_funnel,
-    "x63_retention_cohorts": AN.x63_retention_cohorts,
-    # --- wave 6: shuffle/sampling/profiling/regression/bloom ---
-    "x101_corpus_shuffle": C.x101_corpus_shuffle,
-    "x102_weighted_sample": C.x102_weighted_sample,
-    "x103_rolling_revenue": AN.x103_rolling_revenue,
-    "x104_regr_by_group": AN.x104_regr_by_group,
-    "x105_bloom_join": SC.x105_bloom_join,
-    "x106_column_profile": AN.x106_column_profile,
-    "x107_keyword_search": T.x107_keyword_search,
-    "x108_rolling_anomaly": AN.x108_rolling_anomaly,
-    "x109_shard_manifest": C.x109_shard_manifest,
-    "x110_time_range_rolling": WIN.x110_time_range_rolling,
-    "x111_corpus_drift": T.x111_corpus_drift,
-    "x112_heavy_hitters": SK.x112_heavy_hitters,
-    # --- wave 7: entity resolution + tokenizer coverage + novelty ---
-    "x113_fuzzy_match": D.x113_fuzzy_match,
-    "x114_oov_rate": T.x114_oov_rate,
-    "x115_ngram_novelty": T.x115_ngram_novelty,
-    # --- wave 8: physical layout / table-service planning ---
-    "x116_minhash_signatures": D.x116_minhash_signatures,
-    "x117_minhash_band_pairs": D.x117_minhash_band_pairs,
-    "x119_compaction_plan": L.x119_compaction_plan,
-    "x118_stream_enrich": SE.x118_stream_enrich,
-    "x121_pmi_bigrams": T.x121_pmi_bigrams,
-    "x122_media_dedup": MM.x122_media_dedup,
-    "x123_first_touch": AN.x123_first_touch,
-    "x125_sole_return_supplier": RX.x125_sole_return_supplier,
-    "x126_idle_rich_customers": RX.x126_idle_rich_customers,
-    "x120_range_boundaries": L.x120_range_boundaries,
-    "x124_zorder_audit": L.x124_zorder_audit,
-    "x127_equidepth_hist": L.x127_equidepth_hist,
-    "x128_centroid_similarity": CL.x128_centroid_similarity,
-    # --- wave 9: PIT join, covariance, skyline, conversion, BPE step ---
-    "x129_pit_join": CD.x129_pit_join,
-    "x130_covariance_matrix": CL.x130_covariance_matrix,
-    "x131_pareto_frontier": RX.x131_pareto_frontier,
-    "x132_conversion_window": AN.x132_conversion_window,
-    "x133_bpe_merge_step": T.x133_bpe_merge_step,
-    "x134_stateful_totals": SE.x134_stateful_totals,
-    "x135_stream_left_join": SE.x135_stream_left_join,
-    # --- wave 10: path mining, typed JSON, data-quality audit ---
-    "x136_event_paths": AN.x136_event_paths,
-    "x137_json_struct_stats": RX.x137_json_struct_stats,
-    "x138_fk_audit": RX.x138_fk_audit,
-    # --- wave 11: robust stats + split manifest ---
-    "x139_winsorize": AN.x139_winsorize,
-    "x140_robust_outliers": AN.x140_robust_outliers,
-    "x141_split_manifest": C.x141_split_manifest,
-    "x142_skipping_estimate": L.x142_skipping_estimate,
-    "x143_pagerank_dangling": G.x143_pagerank_dangling,
-}
+_QUERY_NAME = re.compile(r"([qx])(\d+)([a-z]?)_")
+
+
+def _query_order(name: str) -> tuple[str, int, str]:
+    prefix, number, suffix = _QUERY_NAME.match(name).groups()
+    return prefix, int(number), suffix
+
+
+def collect_queries(modules: Iterable[ModuleType]) -> dict[str, QueryFn]:
+    """The query functions defined in ``modules`` (names they import do
+    not count), in registry order; raises on a name defined twice."""
+    found: dict[str, QueryFn] = {}
+    for mod in modules:
+        for name, fn in vars(mod).items():
+            if (
+                isinstance(fn, FunctionType)
+                and fn.__module__ == mod.__name__
+                and _QUERY_NAME.match(name)
+            ):
+                if name in found:
+                    raise ValueError(
+                        f"query {name} is defined in both "
+                        f"{found[name].__module__} and {mod.__name__}"
+                    )
+                found[name] = fn
+    return {name: found[name] for name in sorted(found, key=_query_order)}
+
+
+QUERIES: dict[str, QueryFn] = collect_queries(
+    {
+        m.__name__: m
+        for m in list(globals().values())
+        if isinstance(m, ModuleType) and m.__name__.startswith("go_mapreduce_spark.")
+    }.values()
+)
+
+
+# ---------------------------------------------------------------------------
+# Bench I/O-class tags (round-10 verdict ask #3): queries whose
+# execution MATERIALIZES /tmp state — stream checkpoints + replay
+# sinks, lakehouse table churn, staged sqlite dbs, or iterative
+# localCheckpoint chains (block-manager disk spill).  bench.py keys
+# its 1.5 s min-of-3 I/O class on THIS set instead of sniffing module
+# names, so a graph loop in operators/graph.py is classed the same as
+# a stream replay in streaming/events.py (r7–r9 drift showed both
+# carry disk-contention noise: x388 4→24 s, pagerank 10.8→49.2 s in
+# the same contended capture).
+# ---------------------------------------------------------------------------
+
+_IO_MODULE_HINTS = ("streaming", "lakehouse", "sqlite_source")
+# iterative / checkpoint-materializing queries living in otherwise
+# compute-classed modules
+_IO_EXPLICIT = frozenset({
+    "x27_dedup_clusters",
+    "x59_pagerank",
+    "x143_pagerank_dangling",
+    "x146_kcore",
+    "x164_khop_reachability",
+    "x165_cheapest_path",
+    "x179_pca_power_iteration",
+    "x185_logreg_train",
+    "x292_eigenvector_centrality",
+    "x314_markov_stationary",
+    "x318_modularity",
+    "x319_hits_scores",
+    "x324_closeness_centrality",
+    "x377_kcenter_coreset",
+    "x378_personalized_pagerank",
+    "x382_semdedup",
+    "x385_recursive_cte",
+    "x388_gdpr_cascade",
+    "x416_stream_media_decode",
+})
+IO_TMP_STATE_QUERIES = frozenset(
+    name
+    for name, fn in QUERIES.items()
+    if any(h in fn.__module__ for h in _IO_MODULE_HINTS)
+) | (_IO_EXPLICIT & frozenset(QUERIES))
+
 
 
 # DuckDB-runnable ANSI SQL over views: region nation customer supplier
@@ -2860,18 +2745,6 @@ ORACLE_SQL["x143_pagerank_dangling"] = _pagerank_dangling_oracle()
 # roundtrip, multi-touch attribution
 # ---------------------------------------------------------------------------
 
-from go_mapreduce_spark.sources import sinks as SNK  # noqa: E402
-
-QUERIES.update(
-    {
-        "x144_monthly_growth": AN.x144_monthly_growth,
-        "x145_minhash_calibration": D.x145_minhash_calibration,
-        "x146_kcore": G.x146_kcore,
-        "x147_jsonl_roundtrip": SNK.x147_jsonl_roundtrip,
-        "x148_multitouch_attribution": AN.x148_multitouch_attribution,
-    }
-)
-
 ORACLE_SQL["x144_monthly_growth"] = """
     WITH m AS (
         SELECT date_trunc('month', l_shipdate) AS month,
@@ -3037,16 +2910,6 @@ ORACLE_SQL["x148_multitouch_attribution"] = """
 # lakehouse (transactional MERGE target): x149/x150
 # ---------------------------------------------------------------------------
 
-from go_mapreduce_spark import lakehouse as LH  # noqa: E402
-
-QUERIES.update(
-    {
-        "x149_lakehouse_merge": LH.x149_lakehouse_merge,
-        "x150_lakehouse_time_travel": LH.x150_lakehouse_time_travel,
-        "x151_stream_lakehouse_upsert": LH.x151_stream_lakehouse_upsert,
-    }
-)
-
 # Demo CDC history is closed-form in o_orderkey arithmetic:
 #   v1: keys %4==0 at raw price
 #   v2: v1 with %8==0 at +1000, plus %4==1 inserted at raw price
@@ -3108,25 +2971,6 @@ ORACLE_SQL["x150_lakehouse_time_travel"] = """
 # subqueries, HAVING-vs-global-total, disjunctive pushdown, nested
 # semi-join chains, left-join count distributions, star rollups
 # ---------------------------------------------------------------------------
-
-from go_mapreduce_spark.operators import tpch as TP  # noqa: E402
-
-QUERIES.update(
-    {
-        "x152_min_cost_supplier": TP.x152_min_cost_supplier,
-        "x153_important_part_value": TP.x153_important_part_value,
-        "x154_promo_revenue": TP.x154_promo_revenue,
-        "x155_small_qty_revenue": TP.x155_small_qty_revenue,
-        "x156_large_orders": TP.x156_large_orders,
-        "x157_disjunctive_revenue": TP.x157_disjunctive_revenue,
-        "x158_excess_shippers": TP.x158_excess_shippers,
-        "x159_top_supplier": TP.x159_top_supplier,
-        "x160_order_count_distribution": TP.x160_order_count_distribution,
-        "x161_nation_volume": TP.x161_nation_volume,
-        "x162_market_share": TP.x162_market_share,
-        "x163_product_profit": TP.x163_product_profit,
-    }
-)
 
 _REV_DEC = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))"
 
@@ -3346,13 +3190,6 @@ ORACLE_SQL["x163_product_profit"] = """
 # wave 15: traversal primitives + the full-outer streaming regime
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x164_khop_reachability": G.x164_khop_reachability,
-        "x165_cheapest_path": G.x165_cheapest_path,
-    }
-)
-
 
 def _bfs_oracle(rounds: int = G.BFS_ROUNDS) -> str:
     """x164's chained-CTE replay: fixed frontier-expansion rounds
@@ -3435,9 +3272,6 @@ def _cheapest_path_oracle(rounds: int = G.BFS_ROUNDS) -> str:
 ORACLE_SQL["x165_cheapest_path"] = _cheapest_path_oracle()
 
 
-
-QUERIES.update({"x166_stream_full_join": SE.x166_stream_full_join})
-
 ORACLE_SQL["x166_stream_full_join"] = """
     WITH mx AS (
         SELECT least(
@@ -3471,9 +3305,6 @@ ORACLE_SQL["x166_stream_full_join"] = """
 """
 
 
-
-QUERIES.update({"x167_table_changes": LH.x167_table_changes})
-
 ORACLE_SQL["x167_table_changes"] = """
     WITH ch AS (
         SELECT 'delete' AS change,
@@ -3493,11 +3324,6 @@ ORACLE_SQL["x167_table_changes"] = """
     FROM ch GROUP BY change ORDER BY change
 """
 
-
-
-QUERIES.update(
-    {"x168_stream_attributed_windows": SE.x168_stream_attributed_windows}
-)
 
 ORACLE_SQL["x168_stream_attributed_windows"] = """
     WITH mx AS (
@@ -3527,9 +3353,6 @@ ORACLE_SQL["x168_stream_attributed_windows"] = """
 """
 
 
-
-QUERIES.update({"x169_incremental_mv": LH.x169_incremental_mv})
-
 # v3's closed-form state (demo history key arithmetic): keys %4==0
 # minus %16==0, priced +1000 where %8==0; plus %4==1 priced +500.
 ORACLE_SQL["x169_incremental_mv"] = """
@@ -3552,9 +3375,6 @@ ORACLE_SQL["x169_incremental_mv"] = """
 """
 
 
-
-QUERIES.update({"x170_incremental_append_read": LH.x170_incremental_append_read})
-
 ORACLE_SQL["x170_incremental_append_read"] = """
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -3565,13 +3385,6 @@ ORACLE_SQL["x170_incremental_append_read"] = """
     GROUP BY event_type ORDER BY event_type
 """
 
-
-
-from go_mapreduce_spark.sources import pydatasource as PDS  # noqa: E402
-
-QUERIES.update(
-    {"x171_custom_source_roundtrip": PDS.x171_custom_source_roundtrip}
-)
 
 # same contract as x2: the connector cycle must be lossless
 ORACLE_SQL["x171_custom_source_roundtrip"] = """
@@ -3584,15 +3397,6 @@ ORACLE_SQL["x171_custom_source_roundtrip"] = """
     LIMIT 20
 """
 
-
-
-QUERIES.update(
-    {
-        "x172_late_order_priority": TP.x172_late_order_priority,
-        "x173_priority_shipping": TP.x173_priority_shipping,
-        "x174_parts_supplier_census": TP.x174_parts_supplier_census,
-    }
-)
 
 ORACLE_SQL["x172_late_order_priority"] = """
     SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS order_count
@@ -3642,16 +3446,6 @@ ORACLE_SQL["x174_parts_supplier_census"] = """
 # temperature-resampled mixture, vocab coverage curve, exact shared-
 # substring spans, dominant-PC power iteration
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x175_bpe_train": T.x175_bpe_train,
-        "x176_temperature_mix": C.x176_temperature_mix,
-        "x177_vocab_coverage": T.x177_vocab_coverage,
-        "x178_longest_shared_span": D.x178_longest_shared_span,
-        "x179_pca_power_iteration": CL.x179_pca_power_iteration,
-    }
-)
 
 
 def _bpe_train_oracle(n_merges: int = T.BPE_TRAIN_MERGES) -> str:
@@ -3868,16 +3662,6 @@ ORACLE_SQL["x179_pca_power_iteration"] = _power_iter_oracle()
 # rank-based AUC — new Spark-4 surfaces + classifier-eval primitives
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x180_countmin_error": SK.x180_countmin_error,
-        "x181_recursive_chain": G.x181_recursive_chain,
-        "x182_variant_analytics": RX.x182_variant_analytics,
-        "x183_array_lambda_stats": RX.x183_array_lambda_stats,
-        "x184_quality_auc": T.x184_quality_auc,
-    }
-)
-
 ORACLE_SQL["x180_countmin_error"] = f"""
     WITH toks AS (
         SELECT unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -3991,16 +3775,6 @@ ORACLE_SQL["x184_quality_auc"] = _auc_oracle()
 # wave 19: in-plan logistic trainer, calibration bins, JL distortion,
 # TWAP, exact Gini — model-training/eval primitives + OLAP integrals
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x185_logreg_train": CL.x185_logreg_train,
-        "x186_quality_calibration": T.x186_quality_calibration,
-        "x187_jl_distortion": S.x187_jl_distortion,
-        "x188_time_weighted_avg": AN.x188_time_weighted_avg,
-        "x189_revenue_gini": AN.x189_revenue_gini,
-    }
-)
 
 _FEAT_CTE_TMPL = """f AS (
         SELECT ROUND(CASE WHEN tl > 0 THEN CAST(al AS DOUBLE)/tl
@@ -4225,13 +3999,6 @@ ORACLE_SQL["x189_revenue_gini"] = """
 # wave 20: hierarchical sweep-line peak concurrency + ORC roundtrip
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x190_peak_concurrency": AN.x190_peak_concurrency,
-        "x191_orc_roundtrip": SNK.x191_orc_roundtrip,
-    }
-)
-
 ORACLE_SQL["x190_peak_concurrency"] = f"""
     WITH d AS (
         SELECT event_type, CAST(ts AS TIMESTAMP) AS t, 1 AS delta
@@ -4280,14 +4047,6 @@ ORACLE_SQL["x191_orc_roundtrip"] = """
 # wave 21: content-defined chunking, SQL session variables, dynamic
 # partition pruning
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x192_cdc_chunks": D.x192_cdc_chunks,
-        "x193_sql_variables": RX.x193_sql_variables,
-        "x194_dpp_join": R.x194_dpp_join,
-    }
-)
 
 
 def _cdc_oracle() -> str:
@@ -4376,13 +4135,6 @@ ORACLE_SQL["x194_dpp_join"] = """
 # wave 22: cross-split leakage census + media byte-frequency audit
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x195_split_leakage": C.x195_split_leakage,
-        "x196_byte_frequency_audit": MM.x196_byte_frequency_audit,
-    }
-)
-
 ORACLE_SQL["x195_split_leakage"] = f"""
     WITH tagged AS (
         SELECT doc_id, text,
@@ -4462,10 +4214,6 @@ ORACLE_SQL["x196_byte_frequency_audit"] = f"""
 # wave 23: merge-on-read deletion vectors
 # ---------------------------------------------------------------------------
 
-from go_mapreduce_spark import lakehouse as LH2  # noqa: E402
-
-QUERIES.update({"x197_lakehouse_delete": LH2.x197_lakehouse_delete})
-
 ORACLE_SQL["x197_lakehouse_delete"] = """
     SELECT o_orderstatus,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -4482,14 +4230,6 @@ ORACLE_SQL["x197_lakehouse_delete"] = """
 # wave 24: window completeness, map lambdas, and the x200 capstone
 # pipeline
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x198_window_completeness": WIN.x198_window_completeness,
-        "x199_map_lambdas": RX.x199_map_lambdas,
-        "x200_curation_pipeline": C.x200_curation_pipeline,
-    }
-)
 
 ORACLE_SQL["x198_window_completeness"] = """
     SELECT o_custkey, o_orderkey,
@@ -4583,16 +4323,6 @@ ORACLE_SQL["x200_curation_pipeline"] = _pipeline_oracle()
 # union, sentence stats, exact quantile normalization
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x201_argmax_user": RX.x201_argmax_user,
-        "x202_explode_outer": RX.x202_explode_outer,
-        "x203_union_by_name": RX.x203_union_by_name,
-        "x204_sentence_stats": T.x204_sentence_stats,
-        "x205_quantile_normalize": L.x205_quantile_normalize,
-    }
-)
-
 ORACLE_SQL["x201_argmax_user"] = """
     WITH pu AS (
         SELECT event_type, user_id,
@@ -4685,8 +4415,6 @@ ORACLE_SQL["x205_quantile_normalize"] = """
 # wave 26: RocksDB state store
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x206_rocksdb_stateful": SE.x206_rocksdb_stateful})
-
 ORACLE_SQL["x206_rocksdb_stateful"] = """
     -- same append-mode finalization rule as x36: emitted windows are
     -- those with window_end <= ms-truncated max(ts) - 2h
@@ -4710,14 +4438,6 @@ ORACLE_SQL["x206_rocksdb_stateful"] = """
 # ---------------------------------------------------------------------------
 # wave 27: calendar dimension, array set algebra, bitmap flags
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x207_calendar_dim": RX.x207_calendar_dim,
-        "x208_array_set_ops": RX.x208_array_set_ops,
-        "x209_bitmap_flags": RX.x209_bitmap_flags,
-    }
-)
 
 ORACLE_SQL["x207_calendar_dim"] = """
     WITH d AS (
@@ -4774,13 +4494,6 @@ ORACLE_SQL["x209_bitmap_flags"] = """
 # ---------------------------------------------------------------------------
 # wave 28: observe() DQ metrics + linear-interpolation gap fill
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x210_observed_metrics": R.x210_observed_metrics,
-        "x211_gapfill_linear": WIN.x211_gapfill_linear,
-    }
-)
 
 ORACLE_SQL["x210_observed_metrics"] = """
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -4839,15 +4552,6 @@ ORACLE_SQL["x211_gapfill_linear"] = """
 # wave 29: parameterized SQL
 # ---------------------------------------------------------------------------
 
-from go_mapreduce_spark.sources import pydatasource as PDS  # noqa: E402
-
-QUERIES.update(
-    {
-        "x212_parameterized_sql": RX.x212_parameterized_sql,
-        "x213_custom_stream_source": PDS.x213_custom_stream_source,
-    }
-)
-
 ORACLE_SQL["x213_custom_stream_source"] = """
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -4855,13 +4559,6 @@ ORACLE_SQL["x213_custom_stream_source"] = """
                AS total_value
     FROM events GROUP BY 1 ORDER BY 1
 """
-
-QUERIES.update(
-    {
-        "x214_xml_roundtrip": RX.x214_xml_roundtrip,
-        "x215_lakehouse_stream_source": PDS.x215_lakehouse_stream_source,
-    }
-)
 
 ORACLE_SQL["x215_lakehouse_stream_source"] = """
     SELECT event_type,
@@ -4897,14 +4594,6 @@ ORACLE_SQL["x212_parameterized_sql"] = f"""
 # wave 30: sequence-pattern match, longest streaks, log2 latency
 # spectrum
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x216_sequence_match": AN.x216_sequence_match,
-        "x217_longest_streak": AN.x217_longest_streak,
-        "x218_latency_spectrum": AN.x218_latency_spectrum,
-    }
-)
 
 
 def _seq_match_oracle() -> str:
@@ -4997,13 +4686,6 @@ ORACLE_SQL["x218_latency_spectrum"] = """
 # wave 31: weighted median + waterfall decomposition
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x219_weighted_median": AN.x219_weighted_median,
-        "x220_revenue_waterfall": AN.x220_revenue_waterfall,
-    }
-)
-
 ORACLE_SQL["x219_weighted_median"] = """
     WITH r AS (
         SELECT l_returnflag, l_linestatus, l_extendedprice,
@@ -5060,14 +4742,6 @@ ORACLE_SQL["x220_revenue_waterfall"] = """
 # ---------------------------------------------------------------------------
 # wave 32: proportional allocation, survival curve, ABC classes
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x221_proportional_allocation": C.x221_proportional_allocation,
-        "x222_survival_curve": AN.x222_survival_curve,
-        "x223_abc_classification": AN.x223_abc_classification,
-    }
-)
 
 ORACLE_SQL["x221_proportional_allocation"] = f"""
     WITH c AS (
@@ -5147,8 +4821,6 @@ ORACLE_SQL["x223_abc_classification"] = """
 # wave 33: greedy LM decode
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x224_greedy_decode": T.x224_greedy_decode})
-
 
 def _decode_oracle() -> str:
     from go_mapreduce_spark.operators.text import DECODE_STEPS
@@ -5214,18 +4886,6 @@ ORACLE_SQL["x224_greedy_decode"] = _decode_oracle()
 # wave 34 (round 5): weighted sampling, attribution, PassJoin,
 # containment, novelty, transition matrix, centroid audit
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x225_weighted_sample": C.x225_weighted_sample,
-        "x226_attribution": AN.x226_attribution,
-        "x227_passjoin_editdist": D.x227_passjoin_editdist,
-        "x228_containment": D.x228_containment,
-        "x229_trigram_novelty": T.x229_trigram_novelty,
-        "x230_transition_matrix": AN.x230_transition_matrix,
-        "x231_centroid_cosine_audit": CL.x231_centroid_cosine_audit,
-    }
-)
 
 ORACLE_SQL["x225_weighted_sample"] = """
     WITH keyed AS (
@@ -5358,17 +5018,6 @@ ORACLE_SQL["x231_centroid_cosine_audit"] = """
 # quantile normalization, multi-sink stream, LISTAGG leaderboard
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x232_ewma": AN.x232_ewma,
-        "x233_kl_divergence": T.x233_kl_divergence,
-        "x234_time_weighted_avg": AN.x234_time_weighted_avg,
-        "x235_quantile_normalization": CL.x235_quantile_normalization,
-        "x236_multisink_stream": SE.x236_multisink_stream,
-        "x237_listagg_leaderboard": RX.x237_listagg_leaderboard,
-    }
-)
-
 ORACLE_SQL["x232_ewma"] = """
     WITH recent AS (
         SELECT user_id, event_type, value,
@@ -5476,15 +5125,6 @@ ORACLE_SQL["x237_listagg_leaderboard"] = """
 # ---------------------------------------------------------------------------
 # wave 36 (round 5): silhouette, SCD2, timed funnel, PMI
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x238_silhouette": CL.x238_silhouette,
-        "x239_scd2_history": AN.x239_scd2_history,
-        "x240_timed_funnel": AN.x240_timed_funnel,
-        "x241_pmi_pairs": T.x241_pmi_pairs,
-    }
-)
 
 ORACLE_SQL["x238_silhouette"] = """
     WITH ex AS (
@@ -5611,17 +5251,6 @@ ORACLE_SQL["x241_pmi_pairs"] = f"""
 # wave 37 (round 5): statistical testing & diagnostics
 # ---------------------------------------------------------------------------
 
-from go_mapreduce_spark.operators import stats as ST  # noqa: E402
-
-QUERIES.update(
-    {
-        "x242_benford_audit": ST.x242_benford_audit,
-        "x243_welch_ttest": ST.x243_welch_ttest,
-        "x244_mannwhitney": ST.x244_mannwhitney,
-        "x245_acf": ST.x245_acf,
-    }
-)
-
 _BENFORD_CASE = " ".join(
     f"WHEN {d} THEN CAST({p!r} AS DOUBLE)"
     for d, p in ST.BENFORD_EXPECTED.items()
@@ -5746,15 +5375,6 @@ ORACLE_SQL["x245_acf"] = f"""
 # wave 38 (round 5): CUSUM, HHI, RFM, interval coverage
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x246_cusum_changepoint": ST.x246_cusum_changepoint,
-        "x247_rfm_segments": AN.x247_rfm_segments,
-        "x248_interval_coverage": AN.x248_interval_coverage,
-        "x249_market_concentration": ST.x249_market_concentration,
-    }
-)
-
 ORACLE_SQL["x246_cusum_changepoint"] = """
     WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS d, COUNT(*) AS x
@@ -5866,15 +5486,6 @@ ORACLE_SQL["x249_market_concentration"] = """
 # wave 39 (round 5): SQL UDFs, schema evolution, RESTORE, naive Bayes
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x250_sql_udf": RX.x250_sql_udf,
-        "x251_schema_evolution_read": RX.x251_schema_evolution_read,
-        "x252_lakehouse_restore": LH.x252_lakehouse_restore,
-        "x253_naive_bayes_langid": T.x253_naive_bayes_langid,
-    }
-)
-
 ORACLE_SQL["x250_sql_udf"] = """
     SELECT CASE WHEN l_quantity < 10 THEN 'small'
                 WHEN l_quantity < 30 THEN 'medium'
@@ -5974,15 +5585,6 @@ ORACLE_SQL["x253_naive_bayes_langid"] = """
 # ---------------------------------------------------------------------------
 # wave 40 (round 5): bootstrap CI, proportion z, cohort LTV, seasonality
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x254_bootstrap_ci": ST.x254_bootstrap_ci,
-        "x255_two_proportion_z": ST.x255_two_proportion_z,
-        "x256_cohort_ltv": AN.x256_cohort_ltv,
-        "x257_dow_seasonality": AN.x257_dow_seasonality,
-    }
-)
 
 _BOOT_W = (
     f"CASE WHEN h < '{ST.BOOTSTRAP_CUTS[0]}' THEN 0 "
@@ -6108,16 +5710,6 @@ ORACLE_SQL["x257_dow_seasonality"] = """
 # wave 41 (round 5): Zipf fit, burstiness, mergeable HLL sketches
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x258_zipf_fit": T.x258_zipf_fit,
-        "x259_token_burstiness": T.x259_token_burstiness,
-        # x260 got a BOUND oracle in wave 99: exact columns + a
-        # pinned union-error flag (see the wave-99 block)
-        "x260_hll_sketch_union": SK.x260_hll_sketch_union,
-    }
-)
-
 ORACLE_SQL["x258_zipf_fit"] = f"""
     WITH vocab AS (
         SELECT tok, COUNT(*) AS n
@@ -6171,14 +5763,6 @@ ORACLE_SQL["x259_token_burstiness"] = f"""
 # ---------------------------------------------------------------------------
 # wave 42 (round 5): the final three TPC-H shapes — all 22 now covered
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x261_local_supplier_volume": TP.x261_local_supplier_volume,
-        "x262_forecast_revenue_change": TP.x262_forecast_revenue_change,
-        "x263_waiting_suppliers": TP.x263_waiting_suppliers,
-    }
-)
 
 ORACLE_SQL["x261_local_supplier_volume"] = """
     SELECT n_name,
@@ -6240,14 +5824,6 @@ ORACLE_SQL["x263_waiting_suppliers"] = f"""
 # wave 43 (round 5): malformed-CSV quarantine, mapInArrow, k-anonymity
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x264_malformed_csv": SNK.x264_malformed_csv,
-        "x265_arrow_doc_stats": U.x265_arrow_doc_stats,
-        "x266_k_anonymity": C.x266_k_anonymity,
-    }
-)
-
 ORACLE_SQL["x264_malformed_csv"] = f"""
     SELECT CAST({SNK._N_CORRUPT} AS BIGINT) AS n_corrupt,
            CAST(COUNT(*) AS BIGINT) AS n_clean,
@@ -6282,14 +5858,6 @@ ORACLE_SQL["x266_k_anonymity"] = f"""
 # ---------------------------------------------------------------------------
 # wave 44 (round 5): label propagation, pipe syntax, collations
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x267_label_propagation": G.x267_label_propagation,
-        "x268_pipe_syntax": RX.x268_pipe_syntax,
-        "x269_collated_grouping": RX.x269_collated_grouping,
-    }
-)
 
 
 def _label_prop_oracle(n_rounds: int = G.LPA_ROUNDS) -> str:
@@ -6373,8 +5941,6 @@ ORACLE_SQL["x269_collated_grouping"] = """
 # wave 45 (round 5): manifest Bloom index + pruned point lookup
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x270_bloom_point_lookup": LH.x270_bloom_point_lookup})
-
 ORACLE_SQL["x270_bloom_point_lookup"] = f"""
     SELECT o_orderkey, o_orderstatus,
            ROUND(o_totalprice, 2) AS o_totalprice
@@ -6388,15 +5954,6 @@ ORACLE_SQL["x270_bloom_point_lookup"] = f"""
 # ---------------------------------------------------------------------------
 # wave 46 (round 5): streaming sketch state, LATERAL top-k
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        # x271 is sketch-based (see x260): rows-only driver check;
-        # pytest bounds the estimate and pins restart idempotence.
-        "x271_stream_distinct_sketch": SE.x271_stream_distinct_sketch,
-        "x272_lateral_topk": RX.x272_lateral_topk,
-    }
-)
 
 ORACLE_SQL["x272_lateral_topk"] = f"""
     SELECT n_name, c_name, c_acctbal FROM (
@@ -6412,13 +5969,6 @@ ORACLE_SQL["x272_lateral_topk"] = f"""
 # ---------------------------------------------------------------------------
 # wave 47 (round 5): data expectations, metadata-only ANALYZE
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x273_data_expectations": C.x273_data_expectations,
-        "x274_manifest_table_stats": LH.x274_manifest_table_stats,
-    }
-)
 
 ORACLE_SQL["x273_data_expectations"] = """
     WITH checks AS (
@@ -6475,14 +6025,6 @@ ORACLE_SQL["x274_manifest_table_stats"] = """
 # wave 48 (round 5): civil time, error-safe arithmetic, JSON inference
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x275_local_day_rollup": RX.x275_local_day_rollup,
-        "x276_try_arithmetic": RX.x276_try_arithmetic,
-        "x277_json_schema_inference": RX.x277_json_schema_inference,
-    }
-)
-
 ORACLE_SQL["x275_local_day_rollup"] = f"""
     SELECT CAST(timezone('{RX.BUSINESS_TZ}',
                          timezone('UTC', CAST(ts AS TIMESTAMP))) AS DATE)
@@ -6531,14 +6073,6 @@ ORACLE_SQL["x277_json_schema_inference"] = """
 # ---------------------------------------------------------------------------
 # wave 49 (round 5): rank-order lang-ID, item recs, l-diversity
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x278_rank_order_langid": T.x278_rank_order_langid,
-        "x279_item_recommendations": AN.x279_item_recommendations,
-        "x280_l_diversity": C.x280_l_diversity,
-    }
-)
 
 ORACLE_SQL["x278_rank_order_langid"] = f"""
     WITH docs AS (
@@ -6637,14 +6171,6 @@ ORACLE_SQL["x280_l_diversity"] = f"""
 # ---------------------------------------------------------------------------
 # wave 50 (round 5): association rules, readability, assortativity
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x281_association_rules": AN.x281_association_rules,
-        "x282_readability": T.x282_readability,
-        "x283_degree_assortativity": AN.x283_degree_assortativity,
-    }
-)
 
 ORACLE_SQL["x281_association_rules"] = f"""
     WITH basket AS (
@@ -6751,16 +6277,6 @@ ORACLE_SQL["x283_degree_assortativity"] = """
 # wave 51 (round 5): sketch algebra, conversion latency, vacuum
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        # x284 got a BOUND oracle in wave 99: exact columns + pinned
-        # error-contract flags (see the wave-99 block)
-        "x284_sketch_intersection": SK.x284_sketch_intersection,
-        "x285_conversion_latency": AN.x285_conversion_latency,
-        "x286_vacuum_audit": LH.x286_vacuum_audit,
-    }
-)
-
 ORACLE_SQL["x285_conversion_latency"] = """
     WITH views AS (
         SELECT user_id, MIN(epoch_us(CAST(ts AS TIMESTAMP))) AS view_us
@@ -6794,13 +6310,6 @@ ORACLE_SQL["x286_vacuum_audit"] = """
 # wave 52 (round 5): GROUP BY ALL, IDENTIFIER templating
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x287_group_by_all": RX.x287_group_by_all,
-        "x288_identifier_template": RX.x288_identifier_template,
-    }
-)
-
 # deliberately the SAME modern shorthand both engines now share
 ORACLE_SQL["x287_group_by_all"] = """
     SELECT o_orderstatus, o_orderpriority,
@@ -6826,14 +6335,6 @@ ORACLE_SQL["x288_identifier_template"] = f"""
 # ---------------------------------------------------------------------------
 # wave 53 (round 5): t-closeness, Spearman, Kolmogorov–Smirnov
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x289_t_closeness": C.x289_t_closeness,
-        "x290_spearman_daily": ST.x290_spearman_daily,
-        "x291_ks_test": ST.x291_ks_test,
-    }
-)
 
 ORACLE_SQL["x289_t_closeness"] = """
     WITH base AS (
@@ -6934,14 +6435,6 @@ ORACLE_SQL["x291_ks_test"] = f"""
 # ---------------------------------------------------------------------------
 # wave 54 (round 5): eigenvector centrality, Cramér's V, EXCEPT ALL
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x292_eigenvector_centrality": G.x292_eigenvector_centrality,
-        "x293_cramers_v": ST.x293_cramers_v,
-        "x294_except_all": RX.x294_except_all,
-    }
-)
 
 
 def _eigenvector_oracle(n_iter: int = G.EV_ITERS) -> str:
@@ -7073,13 +6566,6 @@ ORACLE_SQL["x294_except_all"] = f"""
 # wave 55 (round 5): Kruskal-Wallis, Benjamini-Hochberg FDR
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x295_kruskal_wallis": ST.x295_kruskal_wallis,
-        "x296_fdr_bh": ST.x296_fdr_bh,
-    }
-)
-
 ORACLE_SQL["x295_kruskal_wallis"] = """
     WITH sample AS (
         SELECT o_totalprice AS val, o_orderpriority AS grp FROM orders
@@ -7176,8 +6662,6 @@ ORACLE_SQL["x296_fdr_bh"] = f"""
 # wave 56 (round 5): MMR diverse selection
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x297_mmr_selection": S.x297_mmr_selection})
-
 
 def _mmr_oracle(k: int = S.MMR_K, dim: int = S._DIM) -> str:
     """Greedy MMR unrolled to chained CTEs (one cand/pick/sel triple
@@ -7241,8 +6725,6 @@ ORACLE_SQL["x297_mmr_selection"] = _mmr_oracle()
 # ---------------------------------------------------------------------------
 # wave 57 (round 5): TextRank keywords
 # ---------------------------------------------------------------------------
-
-QUERIES.update({"x298_textrank_keywords": T.x298_textrank_keywords})
 
 
 def _textrank_oracle(
@@ -7311,15 +6793,6 @@ ORACLE_SQL["x298_textrank_keywords"] = _textrank_oracle()
 # ---------------------------------------------------------------------------
 # wave 58 (round 6): ROC-AUC, Theil-Sen, mutual information, Levene
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x299_roc_auc": ST.x299_roc_auc,
-        "x300_theil_sen": ST.x300_theil_sen,
-        "x301_mutual_information": ST.x301_mutual_information,
-        "x302_levene_test": ST.x302_levene_test,
-    }
-)
 
 ORACLE_SQL["x299_roc_auc"] = """
     WITH base AS (
@@ -7467,15 +6940,6 @@ ORACLE_SQL["x302_levene_test"] = """
 # user entropy
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x303_negative_sampling": C.x303_negative_sampling,
-        "x304_weighted_jaccard": D.x304_weighted_jaccard,
-        "x305_curriculum_mix": C.x305_curriculum_mix,
-        "x306_user_entropy": ST.x306_user_entropy,
-    }
-)
-
 ORACLE_SQL["x303_negative_sampling"] = f"""
     WITH pos AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     np AS (SELECT COUNT(*) AS n_parts FROM part),
@@ -7603,15 +7067,6 @@ ORACLE_SQL["x306_user_entropy"] = """
 # ---------------------------------------------------------------------------
 # wave 60 (round 6): JS divergence, Chao1 richness, split audit, group OLS
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x307_js_divergence": T.x307_js_divergence,
-        "x308_chao1_richness": T.x308_chao1_richness,
-        "x309_split_balance": C.x309_split_balance,
-        "x310_group_trend": AN.x310_group_trend,
-    }
-)
 
 ORACLE_SQL["x307_js_divergence"] = """
     WITH toks AS (
@@ -7748,15 +7203,6 @@ ORACLE_SQL["x310_group_trend"] = """
 # ---------------------------------------------------------------------------
 # wave 61 (round 6): trimmed mean, cohort LTV, behavior trigrams, Markov π
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x311_trimmed_mean": ST.x311_trimmed_mean,
-        "x312_cohort_ltv": AN.x312_cohort_ltv,
-        "x313_behavior_trigrams": AN.x313_behavior_trigrams,
-        "x314_markov_stationary": AN.x314_markov_stationary,
-    }
-)
 
 ORACLE_SQL["x311_trimmed_mean"] = f"""
     WITH src AS (
@@ -7952,15 +7398,6 @@ ORACLE_SQL["x314_markov_stationary"] = """
 # wave 62 (round 6): Holm step-down, LSH advisor, Simpson, modularity
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x315_holm_bonferroni": ST.x315_holm_bonferroni,
-        "x316_lsh_band_advisor": D.x316_lsh_band_advisor,
-        "x317_simpson_diversity": T.x317_simpson_diversity,
-        "x318_modularity": G.x318_modularity,
-    }
-)
-
 _HOLM_THR_SQL = "(VALUES " + ", ".join(
     f"({i}, CAST({t!r} AS DOUBLE))" for i, t in ST.HOLM_Z_THRESHOLDS.items()
 ) + ")"
@@ -8127,32 +7564,6 @@ ORACLE_SQL["x318_modularity"] = f"""
 """
 
 
-# ---------------------------------------------------------------------------
-# Driver-snapshot ordering
-# ---------------------------------------------------------------------------
-# The external correctness driver records only the FIRST ~50
-# ``queries()`` entries per round (CORRECTNESS_r01–r03 all stop at
-# x42, leaving newer waves green only in local runs).  Reorder the
-# registry so the recorded window always carries (a) the 13 flagship
-# contract queries and (b) the NEWEST declarations — the ones no
-# prior round's artifact has recorded.  Older entries stay in the
-# registry (nothing is dropped); they are already durably recorded in
-# CORRECTNESS_r01–r03, and every round's full sweep is committed as
-# CORRECTNESS_LOCAL_r{N}.json via
-# ``tools/check_correctness.py --out``.
-
-_FLAGSHIP = [
-    "q1_word_count", "q2_grouped_agg", "q3_filter_agg", "q4_broadcast_join",
-    "q5_multiway_join", "q6_count_distinct", "q7_topk", "q8_window",
-    "q9_intersect", "q10_anti_join",
-    "x1_dedup_exact", "x2_top_tokens", "x3_knn_cosine",
-]
-_rest = [k for k in QUERIES if k not in _FLAGSHIP]
-QUERIES = {
-    **{k: QUERIES[k] for k in _FLAGSHIP},
-    **{k: QUERIES[k] for k in reversed(_rest)},
-}
-
 ORACLE_SQL["x151_stream_lakehouse_upsert"] = """
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -8166,16 +7577,6 @@ ORACLE_SQL["x151_stream_lakehouse_upsert"] = """
 # wave 63 (round 6): HITS, permutation test, kappa, decision stump,
 # weighted reservoir
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x319_hits_scores": G.x319_hits_scores,
-        "x320_permutation_test": ST.x320_permutation_test,
-        "x321_cohens_kappa": ST.x321_cohens_kappa,
-        "x322_decision_stump": AN.x322_decision_stump,
-        "x323_weighted_reservoir": C.x323_weighted_reservoir,
-    }
-)
 
 _HITS_EDGES = """
         SELECT ns.n_name AS a, nc.n_name AS b, CAST(COUNT(*) AS DOUBLE) AS w
@@ -8405,15 +7806,6 @@ ORACLE_SQL["x323_weighted_reservoir"] = f"""
 # metrics, coverage curve
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x324_closeness_centrality": G.x324_closeness_centrality,
-        "x325_effect_sizes": ST.x325_effect_sizes,
-        "x326_calibration_metrics": ST.x326_calibration_metrics,
-        "x327_ngram_coverage_curve": T.x327_ngram_coverage_curve,
-    }
-)
-
 
 def _closeness_oracle() -> str:
     parts = [
@@ -8584,14 +7976,6 @@ ORACLE_SQL["x327_ngram_coverage_curve"] = f"""
 # wave 65 (round 6): DP release, SRM guardrail, cluster survivorship
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x328_dp_noisy_counts": C.x328_dp_noisy_counts,
-        "x329_srm_check": ST.x329_srm_check,
-        "x330_cluster_survivor": D.x330_cluster_survivor,
-    }
-)
-
 _DP_V_SQL = "(strpos('0123456789abcdef', substr(h8, 1, 1)) - 1)"
 for _i in range(2, 9):
     _DP_V_SQL = (
@@ -8673,16 +8057,6 @@ ORACLE_SQL["x330_cluster_survivor"] = f"""
 # grouped quartiles
 # ---------------------------------------------------------------------------
 
-import math as _math
-
-QUERIES.update(
-    {
-        "x331_target_encoding": AN.x331_target_encoding,
-        "x332_bloom_fpr_advisor": C.x332_bloom_fpr_advisor,
-        "x333_grouped_quartiles": ST.x333_grouped_quartiles,
-    }
-)
-
 ORACLE_SQL["x331_target_encoding"] = f"""
     WITH base AS MATERIALIZED (
         SELECT c_mktsegment AS seg,
@@ -8761,14 +8135,6 @@ ORACLE_SQL["x333_grouped_quartiles"] = """
 # ---------------------------------------------------------------------------
 # wave 67 (round 6): embedding anisotropy, Hill tail index, ANOVA F
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x334_embedding_anisotropy": CL.x334_embedding_anisotropy,
-        "x335_hill_tail_index": ST.x335_hill_tail_index,
-        "x336_anova_f": ST.x336_anova_f,
-    }
-)
 
 ORACLE_SQL["x334_embedding_anisotropy"] = """
     WITH vals AS MATERIALIZED (
@@ -8850,14 +8216,6 @@ ORACLE_SQL["x336_anova_f"] = """
 # ---------------------------------------------------------------------------
 # wave 68 (round 6): cross-lang overlap, Lorenz deciles, overdispersion
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x337_cross_lang_overlap": T.x337_cross_lang_overlap,
-        "x338_lorenz_deciles": AN.x338_lorenz_deciles,
-        "x339_overdispersion": ST.x339_overdispersion,
-    }
-)
 
 ORACLE_SQL["x337_cross_lang_overlap"] = """
     WITH sh AS MATERIALIZED (
@@ -8950,14 +8308,6 @@ ORACLE_SQL["x339_overdispersion"] = """
 # ---------------------------------------------------------------------------
 # wave 69 (round 6): CUPED, diff-in-diff, off-policy IPS
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x340_cuped_adjustment": ST.x340_cuped_adjustment,
-        "x341_diff_in_diff": ST.x341_diff_in_diff,
-        "x342_ips_estimator": ST.x342_ips_estimator,
-    }
-)
 
 ORACLE_SQL["x340_cuped_adjustment"] = f"""
     WITH per_cust AS MATERIALIZED (
@@ -9094,8 +8444,6 @@ ORACLE_SQL["x342_ips_estimator"] = f"""
 # wave 70 (round 6): streaming windowed top-k
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x343_stream_window_topk": SE.x343_stream_window_topk})
-
 ORACLE_SQL["x343_stream_window_topk"] = """
     -- same finalization predicate as x36 (append-mode watermark),
     -- then the per-window leaderboard on the finalized relation
@@ -9129,8 +8477,6 @@ ORACLE_SQL["x343_stream_window_topk"] = """
 # ---------------------------------------------------------------------------
 # wave 71 (round 6): kNN classifier evaluation
 # ---------------------------------------------------------------------------
-
-QUERIES.update({"x344_knn_eval": S.x344_knn_eval})
 
 ORACLE_SQL["x344_knn_eval"] = f"""
     WITH probes AS (
@@ -9173,14 +8519,6 @@ ORACLE_SQL["x344_knn_eval"] = f"""
 # ---------------------------------------------------------------------------
 # wave 72 (round 6): QTE, power analysis, bandit posteriors
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x345_quantile_treatment_effect": ST.x345_quantile_treatment_effect,
-        "x346_power_mde": ST.x346_power_mde,
-        "x347_bandit_posteriors": ST.x347_bandit_posteriors,
-    }
-)
 
 ORACLE_SQL["x345_quantile_treatment_effect"] = f"""
     WITH pop AS MATERIALIZED (
@@ -9280,16 +8618,6 @@ ORACLE_SQL["x347_bandit_posteriors"] = f"""
 # wave 73 (round 6): classical diagnostics — χ² GOF, Jarque-Bera, Grubbs,
 # Durbin-Watson, Ljung-Box
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x348_chisq_gof": ST.x348_chisq_gof,
-        "x349_jarque_bera": ST.x349_jarque_bera,
-        "x350_grubbs_test": ST.x350_grubbs_test,
-        "x351_durbin_watson": ST.x351_durbin_watson,
-        "x352_ljung_box": ST.x352_ljung_box,
-    }
-)
 
 ORACLE_SQL["x348_chisq_gof"] = """
     WITH per AS (
@@ -9455,15 +8783,6 @@ ORACLE_SQL["x352_ljung_box"] = f"""
 # changepoint, Kaplan-Meier survival
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x353_good_turing": T.x353_good_turing,
-        "x354_chow_test": ST.x354_chow_test,
-        "x355_pettitt_test": ST.x355_pettitt_test,
-        "x356_kaplan_meier": ST.x356_kaplan_meier,
-    }
-)
-
 ORACLE_SQL["x353_good_turing"] = f"""
     WITH per_tok AS (
         SELECT tok, COUNT(*) AS r
@@ -9615,14 +8934,6 @@ ORACLE_SQL["x356_kaplan_meier"] = f"""
 # wave 75 (round 6): Heaps' law, repetition audit, Mann-Kendall
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x357_heaps_law": T.x357_heaps_law,
-        "x358_repetition_audit": T.x358_repetition_audit,
-        "x359_mann_kendall": ST.x359_mann_kendall,
-    }
-)
-
 ORACLE_SQL["x357_heaps_law"] = f"""
     WITH toks AS (
         SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z]+'),
@@ -9733,14 +9044,6 @@ ORACLE_SQL["x359_mann_kendall"] = """
 # wave 76 (round 6): FD audit, seasonal backtest, info-gain ranking
 # ---------------------------------------------------------------------------
 
-QUERIES.update(
-    {
-        "x360_fd_audit": C.x360_fd_audit,
-        "x361_seasonal_backtest": ST.x361_seasonal_backtest,
-        "x362_infogain_ranking": ST.x362_infogain_ranking,
-    }
-)
-
 _FD_BLOCKS = "\n    UNION ALL ".join(
     f"""SELECT '{label}' AS candidate,
                COUNT(*) AS n_keys,
@@ -9849,15 +9152,6 @@ ORACLE_SQL["x362_infogain_ranking"] = f"""
 # ---------------------------------------------------------------------------
 # wave 77 (round 6): conformal interval, energy distance, PSI, log-rank
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x363_conformal_interval": ST.x363_conformal_interval,
-        "x364_energy_distance": ST.x364_energy_distance,
-        "x365_psi_drift": ST.x365_psi_drift,
-        "x366_logrank_test": ST.x366_logrank_test,
-    }
-)
 
 ORACLE_SQL["x363_conformal_interval"] = f"""
     WITH daily AS (
@@ -10040,8 +9334,6 @@ ORACLE_SQL["x366_logrank_test"] = f"""
 # wave 78 (round 6): lakehouse write-audit-publish
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x367_wap_publish": LH.x367_wap_publish})
-
 ORACLE_SQL["x367_wap_publish"] = f"""
     WITH raw AS (
         SELECT * FROM orders WHERE o_orderkey % 4 = 3
@@ -10089,14 +9381,6 @@ ORACLE_SQL["x367_wap_publish"] = f"""
 # ---------------------------------------------------------------------------
 # wave 79 (round 6): join-MV IVM, Horvitz-Thompson, sequential monitoring
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x368_join_mv_ivm": LH.x368_join_mv_ivm,
-        "x369_horvitz_thompson": C.x369_horvitz_thompson,
-        "x370_sequential_monitoring": ST.x370_sequential_monitoring,
-    }
-)
 
 ORACLE_SQL["x368_join_mv_ivm"] = """
     WITH facts_v2 AS (
@@ -10226,14 +9510,6 @@ ORACLE_SQL["x370_sequential_monitoring"] = f"""
 # wave 80 (round 6): streaming PSI drift monitor
 # ---------------------------------------------------------------------------
 
-from go_mapreduce_spark.streaming import events as SE  # noqa: E402
-from go_mapreduce_spark.operators.stats import (  # noqa: E402
-    PSI_BINS_PER_DECADE as _PSI_B,
-    PSI_EPS as _PSI_E,
-)
-
-QUERIES.update({"x371_stream_psi_drift": SE.x371_stream_psi_drift})
-
 ORACLE_SQL["x371_stream_psi_drift"] = f"""
     -- x36/x343 append-mode finalization predicate, then batch PSI
     WITH wm AS (
@@ -10283,14 +9559,6 @@ ORACLE_SQL["x371_stream_psi_drift"] = f"""
 """
 
 # wave 81 (round 7): Mann-Whitney U, McNemar, Kendall tau-b, PR-AUC
-QUERIES.update(
-    {
-        "x372_mann_whitney": ST.x372_mann_whitney,
-        "x373_mcnemar_test": ST.x373_mcnemar_test,
-        "x374_kendall_tau_daily": ST.x374_kendall_tau_daily,
-        "x375_pr_auc": ST.x375_pr_auc,
-    }
-)
 
 ORACLE_SQL["x372_mann_whitney"] = f"""
     WITH per_val AS (
@@ -10419,13 +9687,6 @@ ORACLE_SQL["x375_pr_auc"] = """
 """
 
 # wave 82 (round 7): ridge regression, k-center coreset, personalized PR
-QUERIES.update(
-    {
-        "x376_ridge_regression": ST.x376_ridge_regression,
-        "x377_kcenter_coreset": S.x377_kcenter_coreset,
-        "x378_personalized_pagerank": G.x378_personalized_pagerank,
-    }
-)
 
 ORACLE_SQL["x376_ridge_regression"] = f"""
     WITH feats AS (
@@ -10593,13 +9854,6 @@ def _ppr_oracle(
 ORACLE_SQL["x378_personalized_pagerank"] = _ppr_oracle()
 
 # wave 83 (round 7): CV ridge, seasonal decomposition, isotonic PAVA
-QUERIES.update(
-    {
-        "x379_cv_ridge": ST.x379_cv_ridge,
-        "x380_seasonal_decomposition": ST.x380_seasonal_decomposition,
-        "x381_isotonic_regression": ST.x381_isotonic_regression,
-    }
-)
 
 _CV_V_SQL = "(strpos('0123456789abcdef', substr(h8, 1, 1)) - 1)"
 for _i in range(2, 9):
@@ -10755,13 +10009,6 @@ ORACLE_SQL["x381_isotonic_regression"] = """
 """
 
 # wave 84 (round 7): SemDeDup, tokenizer fertility, embedding outliers
-QUERIES.update(
-    {
-        "x382_semdedup": D.x382_semdedup,
-        "x383_tokenizer_fertility": C.x383_tokenizer_fertility,
-        "x384_embedding_outliers": CL.x384_embedding_outliers,
-    }
-)
 
 ORACLE_SQL["x382_semdedup"] = f"""
     WITH kk AS (
@@ -10891,13 +10138,6 @@ ORACLE_SQL["x384_embedding_outliers"] = f"""
 """
 
 # wave 85 (round 7): recursive CTE, column stats census, Page-Hinkley
-QUERIES.update(
-    {
-        "x385_recursive_cte": RX.x385_recursive_cte,
-        "x386_column_stats": RX.x386_column_stats,
-        "x387_page_hinkley": ST.x387_page_hinkley,
-    }
-)
 
 ORACLE_SQL["x385_recursive_cte"] = f"""
     WITH RECURSIVE edges AS (
@@ -10978,13 +10218,6 @@ ORACLE_SQL["x387_page_hinkley"] = f"""
 """
 
 # wave 86 (round 7): GDPR cascade, capture-recapture, two-proportion test
-QUERIES.update(
-    {
-        "x388_gdpr_cascade": LH.x388_gdpr_cascade,
-        "x389_capture_recapture": D.x389_capture_recapture,
-        "x390_two_proportion_test": ST.x390_two_proportion_test,
-    }
-)
 
 ORACLE_SQL["x388_gdpr_cascade"] = f"""
     WITH c AS (
@@ -11131,12 +10364,6 @@ ORACLE_SQL["x390_two_proportion_test"] = f"""
 """
 
 # wave 87 (round 7): leakage-safe split, NDCG@5
-QUERIES.update(
-    {
-        "x391_leakage_safe_split": C.x391_leakage_safe_split,
-        "x392_ndcg_at_k": S.x392_ndcg_at_k,
-    }
-)
 
 
 def _hexpoly8(col: str) -> str:
@@ -11219,13 +10446,6 @@ ORACLE_SQL["x392_ndcg_at_k"] = f"""
 """
 
 # wave 88 (round 7): streaming Page-Hinkley, correlation matrix, retention
-QUERIES.update(
-    {
-        "x393_stream_page_hinkley": SE.x393_stream_page_hinkley,
-        "x394_correlation_matrix": AN.x394_correlation_matrix,
-        "x395_retention_triangle": AN.x395_retention_triangle,
-    }
-)
 
 ORACLE_SQL["x393_stream_page_hinkley"] = f"""
     -- x36/x343 append-mode finalization predicate, then batch PH
@@ -11335,12 +10555,6 @@ ORACLE_SQL["x395_retention_triangle"] = f"""
 """
 
 # wave 89 (round 7): SCD2 point-in-time lookup, meta-analysis
-QUERIES.update(
-    {
-        "x396_scd2_pit_lookup": AN.x396_scd2_pit_lookup,
-        "x397_meta_analysis": AN.x397_meta_analysis,
-    }
-)
 
 ORACLE_SQL["x396_scd2_pit_lookup"] = f"""
     WITH dim AS ({ORACLE_SQL["x239_scd2_history"]}),
@@ -11412,13 +10626,6 @@ ORACLE_SQL["x397_meta_analysis"] = """
 """
 
 # wave 90 (round 7): Neyman allocation, robust location, dedup dividend
-QUERIES.update(
-    {
-        "x398_neyman_allocation": C.x398_neyman_allocation,
-        "x399_robust_location": ST.x399_robust_location,
-        "x400_dedup_dividend": D.x400_dedup_dividend,
-    }
-)
 
 ORACLE_SQL["x398_neyman_allocation"] = f"""
     WITH per AS (
@@ -11498,12 +10705,6 @@ ORACLE_SQL["x400_dedup_dividend"] = """
 """
 
 # wave 91 (round 7): distinct-count IVM, hard-negative mining
-QUERIES.update(
-    {
-        "x401_distinct_ivm": LH.x401_distinct_ivm,
-        "x402_hard_negatives": S.x402_hard_negatives,
-    }
-)
 
 ORACLE_SQL["x401_distinct_ivm"] = """
     WITH facts_v2 AS (
@@ -11546,12 +10747,6 @@ ORACLE_SQL["x402_hard_negatives"] = """
 """
 
 # wave 92 (round 7): Shapley attribution, expectation suite
-QUERIES.update(
-    {
-        "x403_shapley_attribution": AN.x403_shapley_attribution,
-        "x404_expectation_suite": RX.x404_expectation_suite,
-    }
-)
 
 
 def _shapley_oracle() -> str:
@@ -11641,12 +10836,6 @@ ORACLE_SQL["x404_expectation_suite"] = f"""
 """
 
 # wave 93 (round 7): exponential GOF, cluster size spectrum
-QUERIES.update(
-    {
-        "x405_exponential_gof": ST.x405_exponential_gof,
-        "x406_cluster_size_spectrum": D.x406_cluster_size_spectrum,
-    }
-)
 
 ORACLE_SQL["x405_exponential_gof"] = f"""
     WITH gaps0 AS (
@@ -11722,12 +10911,6 @@ ORACLE_SQL["x406_cluster_size_spectrum"] = f"""
 """
 
 # wave 94 (round 7): BY FDR, join-fanout audit
-QUERIES.update(
-    {
-        "x407_fdr_by": ST.x407_fdr_by,
-        "x408_fanout_audit": ST.x408_fanout_audit,
-    }
-)
 
 _BY_THR_SQL = "(VALUES " + ", ".join(
     f"({i}, CAST({t!r} AS DOUBLE))" for i, t in ST.BY_Z_THRESHOLDS.items()
@@ -11814,8 +10997,6 @@ ORACLE_SQL["x408_fanout_audit"] = """
 # sharing x372 with mann_whitney — round-7 ADVICE)
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x409_doubly_robust": ST.x409_doubly_robust})
-
 ORACLE_SQL["x409_doubly_robust"] = f"""
     WITH rev AS (
         SELECT o_custkey,
@@ -11872,10 +11053,6 @@ ORACLE_SQL["x409_doubly_robust"] = f"""
 # filter pushdown (pushFilters -> WHERE), two-phase parallel writes
 # ---------------------------------------------------------------------------
 
-from go_mapreduce_spark.sources import sqlite_source as SQ  # noqa: E402
-
-QUERIES.update({"x410_sqlite_roundtrip": SQ.x410_sqlite_roundtrip})
-
 ORACLE_SQL["x410_sqlite_roundtrip"] = """
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -11892,13 +11069,6 @@ ORACLE_SQL["x410_sqlite_roundtrip"] = """
 # wave 97 (round 8): SQLite streaming surfaces — rowid-watermark reads
 # (restart-safe) and the exactly-once per-epoch stream sink
 # ---------------------------------------------------------------------------
-
-QUERIES.update(
-    {
-        "x411_sqlite_stream_ingest": SQ.x411_sqlite_stream_ingest,
-        "x412_sqlite_stream_sink": SQ.x412_sqlite_stream_sink,
-    }
-)
 
 ORACLE_SQL["x411_sqlite_stream_ingest"] = """
     SELECT o_orderpriority,
@@ -11926,8 +11096,6 @@ ORACLE_SQL["x412_sqlite_stream_sink"] = """
 # SQLite, Spark receives the answer relation
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x413_sqlite_query_option": SQ.x413_sqlite_query_option})
-
 ORACLE_SQL["x413_sqlite_query_option"] = """
     SELECT o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -11946,8 +11114,6 @@ ORACLE_SQL["x413_sqlite_query_option"] = """
 # functions/png.py); the oracle recomputes every decode result from
 # media_id arithmetic without touching the payload bytes
 # ---------------------------------------------------------------------------
-
-QUERIES.update({"x414_png_decode": MM.x414_png_decode})
 
 ORACLE_SQL["x414_png_decode"] = f"""
     WITH m AS (
@@ -12041,8 +11207,6 @@ ORACLE_SQL["x260_hll_sketch_union"] = """
 # (generator contract: tools/make_wav_fixture.py)
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x415_wav_decode": MM.x415_wav_decode})
-
 ORACLE_SQL["x415_wav_decode"] = f"""
     WITH m AS (
         SELECT media_id
@@ -12087,67 +11251,7 @@ ORACLE_SQL["x415_wav_decode"] = f"""
 # identical media_id arithmetic as batch x415
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x416_stream_media_decode": MM.x416_stream_media_decode})
-
 ORACLE_SQL["x416_stream_media_decode"] = ORACLE_SQL["x415_wav_decode"]
-
-
-# ---------------------------------------------------------------------------
-# Bench I/O-class tags (round-10 verdict ask #3): queries whose
-# execution MATERIALIZES /tmp state — stream checkpoints + replay
-# sinks, lakehouse table churn, staged sqlite dbs, or iterative
-# localCheckpoint chains (block-manager disk spill).  bench.py keys
-# its 1.5 s min-of-3 I/O class on THIS set instead of sniffing module
-# names, so a graph loop in operators/graph.py is classed the same as
-# a stream replay in streaming/events.py (r7–r9 drift showed both
-# carry disk-contention noise: x388 4→24 s, pagerank 10.8→49.2 s in
-# the same contended capture).
-# ---------------------------------------------------------------------------
-
-_IO_MODULE_HINTS = ("streaming", "lakehouse", "sqlite_source")
-# iterative / checkpoint-materializing queries living in otherwise
-# compute-classed modules
-_IO_EXPLICIT = frozenset({
-    "x27_dedup_clusters",
-    "x59_pagerank",
-    "x143_pagerank_dangling",
-    "x146_kcore",
-    "x164_khop_reachability",
-    "x165_cheapest_path",
-    "x179_pca_power_iteration",
-    "x185_logreg_train",
-    "x292_eigenvector_centrality",
-    "x314_markov_stationary",
-    "x318_modularity",
-    "x319_hits_scores",
-    "x324_closeness_centrality",
-    "x377_kcenter_coreset",
-    "x378_personalized_pagerank",
-    "x382_semdedup",
-    "x385_recursive_cte",
-    "x388_gdpr_cascade",
-    "x416_stream_media_decode",
-})
-def io_tmp_state_queries() -> frozenset[str]:
-    """The I/O-class tag set, computed from the LIVE registry at call
-    time.  A module-level frozenset here would snapshot QUERIES
-    mid-module and silently miss any stream/iterative query registered
-    below this point (round-10 advice) — so the scan runs on demand and
-    ``IO_TMP_STATE_QUERIES`` is exposed via module ``__getattr__``."""
-    return (
-        frozenset(
-            name
-            for name, fn in QUERIES.items()
-            if any(h in (getattr(fn, "__module__", "") or "") for h in _IO_MODULE_HINTS)
-        )
-        | (_IO_EXPLICIT & frozenset(QUERIES))
-    )
-
-
-def __getattr__(name: str):
-    if name == "IO_TMP_STATE_QUERIES":
-        return io_tmp_state_queries()
-    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 # ---------------------------------------------------------------------------
@@ -12160,8 +11264,6 @@ def __getattr__(name: str):
 # media_id arithmetic without touching payload bytes — see
 # tools/make_jpeg_fixture.py for the parameter contract.
 # ---------------------------------------------------------------------------
-
-QUERIES.update({"x417_jpeg_decode": MM.x417_jpeg_decode})
 
 ORACLE_SQL["x417_jpeg_decode"] = """
     WITH m AS (SELECT range AS i FROM range(48)),
@@ -12222,8 +11324,6 @@ ORACLE_SQL["x417_jpeg_decode"] = """
 # this, all four media kinds decode real bytes from the stdlib.
 # ---------------------------------------------------------------------------
 
-QUERIES.update({"x418_avi_decode": MM.x418_avi_decode})
-
 ORACLE_SQL["x418_avi_decode"] = """
     WITH m AS (SELECT range AS i FROM range(48)),
     p AS (
@@ -12261,8 +11361,6 @@ ORACLE_SQL["x418_avi_decode"] = """
 # offsets — see tools/make_mjpeg_fixture.py for the contract.  The
 # strict-mode raise now covers only inter-frame codecs (h264/mp4).
 # ---------------------------------------------------------------------------
-
-QUERIES.update({"x419_mjpeg_decode": MM.x419_mjpeg_decode})
 
 ORACLE_SQL["x419_mjpeg_decode"] = """
     WITH m AS (SELECT range AS i FROM range(48)),
@@ -12321,19 +11419,6 @@ ORACLE_SQL["x419_mjpeg_decode"] = """
 """
 
 # ---------------------------------------------------------------------------
-# wave 103 (round 12): the sign-LSH ANN probe promoted from
-# bench-harness-only to a first-class registry entry (round-11 verdict
-# ask #5) — BENCH_FULL's timed set now reconciles with the registry by
-# RULE (tools/round_close.py check f): every timed name is either a
-# registry query or one of bench.py's two declared recall-gate
-# timings.  No SQL oracle (ANN output is index-specific; the x41
-# pattern): recall is pytest-gated vs exact brute force and tracked
-# per-run as ann_recall in bench.py.
-# ---------------------------------------------------------------------------
-
-QUERIES.update({"x420_ann_lsh": S.x420_ann_lsh})
-
-# ---------------------------------------------------------------------------
 # wave 104 (round 12): the end-to-end training-data pipeline composed
 # as ONE lazy plan (round-11 verdict ask #7) — dedup (x1/x200 rule) →
 # benchmark decontamination (x52 rule) → quality gate (x200
@@ -12341,8 +11426,6 @@ QUERIES.update({"x420_ann_lsh": S.x420_ann_lsh})
 # manifest with survivorship fingerprint.  Oracle-replayed end-to-end
 # in DuckDB: the whole five-stage chain is exact SQL.
 # ---------------------------------------------------------------------------
-
-QUERIES.update({"x421_training_pipeline": C.x421_training_pipeline})
 
 
 def _x421_oracle() -> str:

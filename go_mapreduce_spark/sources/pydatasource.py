@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import time
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
@@ -320,6 +322,27 @@ def register_stream(spark) -> None:
     register_on(spark, TsvStreamDataSource)
 
 
+def _drain(q, key: str, target: int, name: str) -> None:
+    """Poll ``q`` every 50 ms until its source's end offset ``key``
+    reaches ``target``, then stop it; raise after 120 s."""
+    deadline = time.time() + 120
+    try:
+        while time.time() < deadline:
+            p = q.lastProgress
+            if p:
+                srcs = p.get("sources") or []
+                eo = srcs[0].get("endOffset") if srcs else None
+                # the python-source offset serializes with repr-style
+                # quoting — extract the value numerically
+                m = re.search(key + r"\D+(\d+)", str(eo) or "")
+                if m and int(m.group(1)) >= target:
+                    return
+            time.sleep(0.05)
+        raise TimeoutError(f"{name} stream did not drain in 120s")
+    finally:
+        q.stop()
+
+
 def x213_custom_stream_source(spark, sf_dir: str):
     """Structured Streaming through the CUSTOM Python source: the
     events table staged as sorted TSV shards, streamed shard-by-shard
@@ -384,26 +407,7 @@ def x213_custom_stream_source(spark, sf_dir: str):
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    import re as _re
-    import time as _time
-
-    deadline = _time.time() + 120
-    try:
-        while _time.time() < deadline:
-            p = q.lastProgress
-            if p:
-                srcs = p.get("sources") or []
-                eo = srcs[0].get("endOffset") if srcs else None
-                # the python-source offset serializes with repr-style
-                # quoting — extract the index numerically
-                m = _re.search(r"index\D+(\d+)", str(eo) or "")
-                if m and int(m.group(1)) >= n_files:
-                    break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError("x213 stream did not drain in 120s")
-    finally:
-        q.stop()
+    _drain(q, "index", n_files, "x213")
     return (
         spark.read.parquet(out_dir)
         .groupBy("event_type")
@@ -543,24 +547,7 @@ def x215_lakehouse_stream_source(spark, sf_dir: str):
         .trigger(processingTime="50 milliseconds")
         .start()
     )
-    import re as _re
-    import time as _time
-
-    deadline = _time.time() + 120
-    try:
-        while _time.time() < deadline:
-            p = q.lastProgress
-            if p:
-                srcs = p.get("sources") or []
-                eo = srcs[0].get("endOffset") if srcs else None
-                m = _re.search(r"version\D+(\d+)", str(eo) or "")
-                if m and int(m.group(1)) >= n_versions:
-                    break
-            _time.sleep(0.05)
-        else:
-            raise TimeoutError("x215 stream did not drain in 120s")
-    finally:
-        q.stop()
+    _drain(q, "version", n_versions, "x215")
     return (
         spark.read.parquet(out_dir)
         .groupBy("event_type")

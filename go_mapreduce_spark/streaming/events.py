@@ -521,24 +521,10 @@ def x134_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp tie-breaks.  State is O(users), per-batch work is
     O(batch keys): the 100 TB-stream shape.
     """
-    from go_mapreduce_spark.streaming.stateful import (
-        RUNNING_TOTALS_SCHEMA,
-        _STATE_SCHEMA,
-        _update_user_totals,
-    )
+    from go_mapreduce_spark.streaming.stateful import user_running_totals
 
     stream = replay_events(spark, sf_dir)
-    totals = (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_totals,
-            RUNNING_TOTALS_SCHEMA,
-            _STATE_SCHEMA,
-            "append",
-            "NoTimeout",
-        )
-    )
+    totals = user_running_totals(stream.select("user_id", "value"))
     out = _replay_to_parquet(spark, sf_dir, "x134", totals)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (

@@ -61,15 +61,16 @@ def _update_user_totals(
 def user_running_totals(events: DataFrame) -> DataFrame:
     """Streaming running totals per user via custom state.
 
-    Emits one updated (user_id, n_events, total_value) row per user
-    per micro-batch in which that user appeared."""
+    Appends one (user_id, n_events, total_value) snapshot row per user
+    per micro-batch in which that user appeared; a user's last snapshot
+    is the one with the most events."""
     return (
         events.groupBy("user_id")
         .applyInPandasWithState(
             _update_user_totals,
             outputStructType=RUNNING_TOTALS_SCHEMA,
             stateStructType=_STATE_SCHEMA,
-            outputMode="update",
+            outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )

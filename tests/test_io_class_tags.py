@@ -1,31 +1,21 @@
-"""The bench I/O-class tag set must track the LIVE registry (round-10
-advice): a stream/lakehouse query registered after the tag block in
-queries.py must still be tagged, so the set is computed at use time."""
+"""The bench I/O-class tag set: every registry query from a streaming,
+lakehouse or SQLite module, plus the named iterative ones."""
 
 from __future__ import annotations
 
 import go_mapreduce_spark.queries as Q
 
 
-def test_io_set_is_computed_at_use_time():
-    def fake(spark, sf_dir):  # pragma: no cover - never called
-        raise AssertionError
-
-    fake.__module__ = "go_mapreduce_spark.streaming.events"
-    name = "x999_fake_late_registered_stream"
-    assert name not in Q.io_tmp_state_queries()
-    Q.QUERIES[name] = fake
-    try:
-        assert name in Q.io_tmp_state_queries()
-        # the module attribute resolves lazily to the same live scan
-        assert name in Q.IO_TMP_STATE_QUERIES
-    finally:
-        del Q.QUERIES[name]
-    assert name not in Q.io_tmp_state_queries()
+def test_io_set_is_the_hint_and_explicit_rule_over_the_registry():
+    assert Q.IO_TMP_STATE_QUERIES == {
+        name
+        for name, fn in Q.QUERIES.items()
+        if any(h in fn.__module__ for h in Q._IO_MODULE_HINTS)
+    } | (Q._IO_EXPLICIT & set(Q.QUERIES))
 
 
 def test_explicit_iterative_tags_present():
-    s = Q.io_tmp_state_queries()
+    s = Q.IO_TMP_STATE_QUERIES
     for n in ("x143_pagerank_dangling", "x378_personalized_pagerank",
               "x416_stream_media_decode"):
         assert n in s

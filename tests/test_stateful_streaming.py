@@ -24,12 +24,12 @@ def test_stateful_running_totals_converge_to_batch(spark, sf_dir, stream_dir):
         user_running_totals(stream)
         .writeStream.format("memory")
         .queryName("t_running")
-        .outputMode("update")
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    # multiple update rows per user (one per batch it appeared in);
+    # multiple snapshot rows per user (one per batch it appeared in);
     # the FINAL state per user must equal the batch aggregate
     final = spark.sql(
         """

@@ -80,6 +80,22 @@ def test_identity_gate_accepts_reordered_rows(ab):
     assert (got["jobs"], got["stages"]) == (2, 3)
 
 
+def test_zero_reps_is_an_identity_only_gate(ab):
+    base = _FakeSide(ab, "base", _ROWS)
+    head = _FakeSide(ab, "head", _ROWS[::-1])
+    code, report = ab.run_ab([base, head], ["q", "r"], reps=0)
+    assert code == 0 and report["identical"] is True
+    assert base.ops == head.ops == ["rows", "rows"]  # no timed run on either side
+    assert report["queries"]["q"]["head"]["sha256"] == report["queries"]["q"]["base"]["sha256"]
+
+
+def test_negative_reps_is_rejected(ab, monkeypatch, capsys):
+    monkeypatch.setattr(sys, "argv", ["ab.py", "--base", "HEAD", "--sf", REPO, "--reps", "-1", "q"])
+    with pytest.raises(SystemExit) as exc:
+        ab.main()
+    assert exc.value.code == 2 and "--reps" in capsys.readouterr().err
+
+
 @needs_git
 def test_materialize_head_matches_git_blob(ab, tmp_path):
     ab.materialize("HEAD", str(tmp_path))

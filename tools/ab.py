@@ -13,7 +13,8 @@ in the identity collect, so the timed runs see the warm path.
 
 Identity gate: before any timing each side collects every query once.
 Unless the order-insensitive row hashes are equal, the tool prints the
-hashes (no timings) and exits 1.  Then, per query, each rep runs the
+hashes (no timings) and exits 1.  ``--reps 0`` stops there (exit 0,
+``identical: true``).  Otherwise, per query, each rep runs the
 query through the noop sink on both sides (build + execute, cache
 cleared after), the side that goes first alternating per rep.  Both
 sides share one host window, so no calibration probe is taken.
@@ -152,6 +153,8 @@ def run_ab(sides: list, queries: list[str], reps: int) -> tuple[int, dict]:
     ]
     if bad:
         return 1, {"identical": False, "differ": bad, "queries": report}
+    if reps == 0:  # identity gate only
+        return 0, {"identical": True, "queries": report}
     for q in queries:
         walls = {s.name: [] for s in sides}
         for rep in range(reps):
@@ -171,6 +174,13 @@ def run_ab(sides: list, queries: list[str], reps: int) -> tuple[int, dict]:
     return 0, {"identical": True, "queries": report}
 
 
+def non_negative(text: str) -> int:
+    n = int(text)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {n}")
+    return n
+
+
 def main() -> int:
     if sys.argv[1:2] == ["--worker"]:
         worker(sys.argv[2])
@@ -182,7 +192,8 @@ def main() -> int:
     ap.add_argument("--head", help="git revision of the head side (default: working tree)")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR"),
                     help="input dir (default: $SPARK_GRAFT_SF_DIR)")
-    ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--reps", type=non_negative, default=5,
+                    help="timed runs per query and side; 0 runs the identity gate only")
     ap.add_argument("queries", nargs="+", metavar="QUERY")
     args = ap.parse_args()
     if not args.sf:
