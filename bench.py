@@ -1,4 +1,4 @@
-"""Benchmark harness: runs every declared query at the bench scale
+"""Benchmark: runs every declared query at the bench scale
 factor and prints ONE JSON line.
 
     SPARK_GRAFT_SF_DIR  input dir (default /root/testdata/sf0.1)
@@ -7,6 +7,15 @@ factor and prints ONE JSON line.
 Each query executes through a no-op sink (``format("noop")``) so the
 full physical plan — including final sorts — runs without paying an
 output-materialization cost; results never hit the driver.
+
+BENCH_FULL.json records each query's wall (``queries``) and work
+(``profile``): jobs, stages, tasks, shuffle bytes, spill and task time
+of its build (the query function, with every eager job it fires) and
+of its exec (the noop write), as status-store id deltas
+(``perfbench.layers.StatusStore``), so a streaming query's micro-batch
+jobs count too.  Counts do not move with host load, so
+``tools/compare_bench.py`` gates on them.  Scratch data lives under a
+fresh temp root per capture, so no capture reuses another's.
 """
 
 from __future__ import annotations
@@ -14,29 +23,37 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
+import subprocess
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from go_mapreduce_spark.queries import QUERIES
 from go_mapreduce_spark.session import get_spark
+from perfbench.layers import StatusStore, Window
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+WARMUP_SF_DIR = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
 
 # The ONLY timed names allowed outside the query registry (round-11
 # verdict ask #5: BENCH_FULL's timed set must reconcile with the
 # registry by rule — tools/round_close.py check f enforces
 # timed == QUERIES ∪ BENCH_ONLY_TIMED).  These two are the recall-GATE
-# harness timings: they run the same operator calls as the registry's
+# timings: they run the same operator calls as the registry's
 # x420_ann_lsh / x41_ann_ivf but collect real rows so the wall and the
 # recall number come from the same execution.
 BENCH_ONLY_TIMED = ("ann_lsh_topk", "ann_ivf_topk")
 
-# when a capture self-flags as drift-polluted, the requeue re-runs the
-# K most expensive queries by current wall in addition to the
-# worst-delta set (see drift_requeue_pass)
-TOP_COST_REQUEUE = 10
+# StatusStore.window reads every job and stage back from the status
+# store, which past spark.ui.retained* (default 1000) evicts stages,
+# skipped ones first at any age; keep them all
+RETAIN_ALL = {"spark.ui.retainedJobs": "1000000", "spark.ui.retainedStages": "1000000"}
+# Window totals written per phase, besides job and stage counts
+PROFILE_SUMS = ("tasks", "shuffle_read_bytes", "shuffle_write_bytes",
+                "spill_mem_bytes", "spill_disk_bytes", "task_run_ms", "task_cpu_ns")
 
 
 def sf_of(path: str) -> float:
@@ -44,131 +61,53 @@ def sf_of(path: str) -> float:
     return float(m.group(1).rstrip(".")) if m else 0.0
 
 
-WARMUP_SF_DIR = os.environ.get("SPARK_GRAFT_WARMUP_SF_DIR", "/root/testdata/sf0.001")
+def phase(w: Window) -> dict:
+    return {"jobs": w.jobs, "stages": w.stages, "skipped_stages": w.skipped_stages,
+            **{k: w.sums[k] for k in PROFILE_SUMS}}
 
 
-def drift_requeue_pass(
-    prev,
-    drift_ratio,
-    timings,
-    min_of,
-    queries,
-    timed_run,
-    calib_probe,
-):
-    """Drift requeue (round-11 verdict ask #1, module-level so the
-    never-yet-fired branch is unit-testable with fakes): two
-    consecutive driver captures shipped 15- and 19-query "regression"
-    tails that each next round's interleaved A/B adjudicated 0/N real
-    — pure host drift during the capture.  Close the loop AT CAPTURE
-    TIME: when the capture self-flags (calib_drift_ratio outside
-    [0.7, 1.4]), re-run every common query whose wall grew > 0.8 s vs
-    prev min-of-3 and commit the steady walls.  By this point the
-    probe has already measured the host's end state, so the re-runs
-    are the same-session steady evidence the A/B would otherwise have
-    to produce a round later.
-
-    Mutates ``timings``/``min_of`` in place; returns the requeue
-    record for the JSON (or None when no requeue ran).
-
-    Two selection rules, unioned (worst delta first, then remaining
-    top-cost):
-
-    - delta > 0.8 s vs prev — catches queries the drift inflated
-      THIS round;
-    - top-``TOP_COST_REQUEUE`` by current wall — catches queries
-      inflated in BOTH captures, which the delta rule is blind to
-      (round 12, first live firing: x247 committed 6.04 s against a
-      polluted prev of 6.86 s, so its delta read NEGATIVE and the
-      2.7 s steady wall never shipped; the expensive head of the
-      capture is also exactly what the judge's top-10 reads).
-    """
-    if prev is None or drift_ratio is None or 0.7 <= drift_ratio <= 1.4:
-        return None
-    pq = prev.get("queries", {})
-    by_delta = sorted(
-        (
-            (name, timings[name] - pq[name])
-            for name in timings
-            if name in pq and name in queries and timings[name] - pq[name] > 0.8
-        ),
-        key=lambda t: -t[1],
-    )
-    top_cost = sorted(
-        ((n, w) for n, w in timings.items() if n in queries),
-        key=lambda t: -t[1],
-    )[:TOP_COST_REQUEUE]
-    seen = {n for n, _ in by_delta}
-    suspects = by_delta + [t for t in top_cost if t[0] not in seen]
-    requeue = {
-        "rule": (
-            "calib_drift_ratio outside [0.7, 1.4] -> re-run min-of-3 and "
-            "commit min(first_pass, steady) for: every common query with "
-            f"delta > 0.8 s vs prev, UNION top-{TOP_COST_REQUEUE} by "
-            "current wall (delta is blind to queries inflated in BOTH "
-            "captures)"
-        ),
-        "calib_drift_ratio": drift_ratio,
-        "queries": {},
-    }
-    for name, _delta in suspects:
-        fn = queries[name]
-        steady = min(timed_run(fn) for _ in range(3))
-        requeue["queries"][name] = {
-            "prev": pq.get(name),
-            "first_pass": timings[name],
-            "steady_min3": round(steady, 3),
-        }
-        timings[name] = round(min(timings[name], steady), 3)
-        min_of[name] = max(min_of.get(name, 1), 3)
-    # third probe: records which host state the steady walls ran on
-    requeue["calib_sec_post_requeue"] = calib_probe()
-    return requeue
-
-
-def steady_only_total_of(timings: dict, drift_requeue) -> float:
-    """Steady-only capture total (round-12 verdict ask #6): the requeue
-    commits min(first_pass, steady_min3) per query, which is
-    one-directional — a capture where the requeue fired is not
-    methodology-comparable to one where it didn't.  This substitutes the
-    requeued queries' steady_min3 walls (their first_pass stays recorded
-    in drift_requeue["queries"]), so cross-round comparisons can be done
-    steady-vs-steady without adjudication.  Equals the committed total
-    when no requeue ran."""
-    rq = drift_requeue["queries"] if drift_requeue else {}
-    return round(
-        sum(rq[n]["steady_min3"] if n in rq else w for n, w in timings.items()),
-        3,
-    )
+def timed_run(spark, store: StatusStore, fn, sf_dir: str) -> tuple[float, dict]:
+    """Build and execute one query through the noop sink; returns its
+    wall and its ``{"build": ..., "exec": ...}`` profile."""
+    # flush the write-back backlog BEFORE the timer starts: the
+    # r7-r9 contention drift was earlier queries' dirty /tmp pages
+    # (checkpoints, replay sinks, staged dbs) being flushed by the
+    # kernel DURING later queries' timed windows, billing query A's
+    # I/O to query B.  sync(2) waits for completion, so its cost
+    # lands in bench overhead, not in any query's wall.
+    os.sync()
+    start = store.mark()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    built = store.mark()
+    df.write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    done = store.mark()
+    # queries may persist shared intermediates (dedup indexes);
+    # drop them so each timing stands alone
+    spark.catalog.clearCache()
+    return wall, {"build": phase(store.window(start, built)),
+                  "exec": phase(store.window(built, done))}
 
 
 def main() -> None:
-    spark = get_spark("bench")
+    root = tempfile.mkdtemp(prefix="bench_")
+    tempfile.tempdir = root  # scratch.build_once / fresh_dir live here
+    try:
+        capture()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def capture() -> None:
+    spark = get_spark("bench", extra_conf=RETAIN_ALL)
+    store = StatusStore(spark)
     # Warmup: run every query once at the smallest SF.  Codegen caches
     # key on generated source (schemas + expressions), not file paths,
     # so this warms compilation for the measured runs — timings then
     # measure execution, not first-compile noise.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
-    # Host-noise calibration: a fixed pure-CPU job timed AFTER JIT
-    # warmup.  Round-over-round query walls can only be compared
-    # through this (same-HEAD full-bench runs have measured 196–270 s
-    # total purely from host/VM throttling variance); a round whose
-    # calib_sec is 1.4× another's is a slower machine, not a slower
-    # engine.  min-of-3: single probe runs have measured a 36% spread
-    # (0.442–0.60 s back-to-back, round 5) while the 263-query raw
-    # total moved 1.0% — the min is the probe's stable floor, a lone
-    # sample mostly measures scheduler jitter.
-    def calib_probe() -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(400_000_000).selectExpr("sum(id * 3 + 1)").collect()
-            c = round(time.perf_counter() - t0, 3)
-            best = c if best is None else min(best, c)
-        return best
-
-    calib_sec = calib_probe()
     # One-time table-maintenance artifacts belong in warmup, not in a
     # timed query (round-6 verdict: x194's cold layout write measured
     # 3.3 s of setup instead of the sub-second DPP scan)
@@ -183,8 +122,8 @@ def main() -> None:
             # Skip mechanically by module (the old name-prefix list
             # silently stopped covering stream queries added after
             # x151; their sf0.001 replays wasted ~20 s of warmup).
-            # Their min-of-3 first rep absorbs the one-time session
-            # streaming warmup instead.
+            # The first timed stream query pays the one-time session
+            # streaming warmup in its wall; its counts are unaffected.
             mod = getattr(fn, "__module__", "") or ""
             if "streaming" in mod:
                 continue
@@ -202,52 +141,10 @@ def main() -> None:
             QUERIES[_ivf_q](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
 
-    # I/O-noise discipline (round-7 verdict #6): same-HEAD full-bench
-    # totals swung 713.6→967.6 s with the CPU calib probe FLAT — the
-    # inflation concentrated in /tmp-materializing queries (lakehouse
-    # churn, streaming replay sinks, localCheckpoint iteratives:
-    # x388 4→24 s, x393 2.7→17.7 s, pagerank 10.8→49.2 s).  Those
-    # classes get min-of-3: a single sample under disk contention
-    # measures the contention, not the engine.  Rule: min-of-3 when
-    # the first run exceeds 3 s (round 9: the 3-5 s band - x254, x314,
-    # x281 - was single-sampled and carried cold-scan contention into
-    # committed walls; their isolated steady states are 2-3 s)
-    # or the query lives in a streaming/lakehouse module and exceeds
-    # 1.5 s (catches replay sinks and table churn below 5 s).
-    IO_REPS = 3
     timings: dict[str, float] = {}
-    min_of: dict[str, int] = {}
-
-    def _timed_run(fn) -> float:
-        # flush the write-back backlog BEFORE the timer starts: the
-        # r7-r9 contention drift was earlier queries' dirty /tmp pages
-        # (checkpoints, replay sinks, staged dbs) being flushed by the
-        # kernel DURING later queries' timed windows, billing query A's
-        # I/O to query B.  sync(2) waits for completion, so its cost
-        # lands in bench overhead, not in any query's wall.
-        os.sync()
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        d = time.perf_counter() - t0
-        # queries may persist shared intermediates (dedup indexes);
-        # drop them so each timing stands alone
-        spark.catalog.clearCache()
-        return d
-
-    from go_mapreduce_spark.queries import IO_TMP_STATE_QUERIES
-
+    profile: dict[str, dict] = {}
     for name, fn in QUERIES.items():
-        wall = _timed_run(fn)
-        # tag-based I/O class (queries.IO_TMP_STATE_QUERIES): any
-        # query that materializes /tmp state — stream checkpoints,
-        # table churn, staged sqlite dbs, iterative localCheckpoint
-        # chains — regardless of which module it lives in (the class
-        # where same-HEAD disk contention dominated r7/r8 drift)
-        io_class = name in IO_TMP_STATE_QUERIES
-        if wall > 3.0 or (io_class and wall > 1.5):
-            for _ in range(IO_REPS - 1):
-                wall = min(wall, _timed_run(fn))
-            min_of[name] = IO_REPS
+        wall, profile[name] = timed_run(spark, store, fn, SF_DIR)
         timings[name] = round(wall, 3)
 
     # ANN quality gate: recall of the sign-LSH approximate top-k vs
@@ -311,74 +208,24 @@ def main() -> None:
     )
     spark.catalog.clearCache()
 
-    import subprocess
-
     try:
         head = subprocess.run(
-            ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
-             "rev-parse", "HEAD"],
+            ["git", "-C", os.path.dirname(os.path.abspath(__file__)), "rev-parse", "HEAD"],
             capture_output=True, text=True, timeout=10,
         ).stdout.strip() or None
     except OSError:
         head = None
 
-    # Within-capture drift flag (round 11): the SAME probe re-run
-    # after the last timed query.  The r10 and first r11 captures were
-    # contention-polluted and it only showed up as cross-round ratio
-    # noise; calib_drift_ratio >> 1 marks a capture whose tail ran on
-    # a slower host than its head — treat its per-query walls as
-    # A/B-selection input, not as committed regressions.
-    calib_sec_end = calib_probe()
-
-    # Load the previous round's committed detail ONCE — used both by
-    # the drift requeue below and the round-over-round ratios printed
-    # at the end.
-    prev_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_PREV",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_PREV.json"),
-    )
-    prev = None
-    if os.path.isfile(prev_path):
-        try:
-            prev = json.load(open(prev_path))
-        except ValueError:
-            prev = None
-
-    # Drift requeue (round-11 verdict ask #1): two consecutive driver
-    # captures shipped 15- and 19-query "regression" tails that each
-    # next round's interleaved A/B adjudicated 0/N real — pure host
-    # drift during the capture.  Close the loop AT CAPTURE TIME: when
-    # the capture self-flags (calib_drift_ratio outside [0.7, 1.4]),
-    # re-run every common query whose wall grew > 0.8 s vs prev
-    # min-of-3 and commit the steady walls.  By this point the probe
-    # has already measured the host's end state, so the re-runs are
-    # the same-session steady evidence the A/B would otherwise have
-    # to produce a round later.
-    drift_ratio = round(calib_sec_end / calib_sec, 3) if calib_sec else None
-    drift_requeue = drift_requeue_pass(
-        prev,
-        drift_ratio,
-        timings,
-        min_of,
-        {n: fn for n, fn in QUERIES.items()},
-        _timed_run,
-        calib_probe,
-    )
-
     total = round(sum(timings.values()), 3)
-    steady_only_total = steady_only_total_of(timings, drift_requeue)
+    jobs = sum(w["jobs"] for p in profile.values() for w in p.values())
+    stages_run = sum(w["stages"] - w["skipped_stages"] for p in profile.values() for w in p.values())
     full = {
         "metric": "total_query_wall_seconds",
         "value": total,
-        "steady_only_total": steady_only_total,
         "unit": "sec",
         "queries": timings,
+        "profile": profile,
         "sf": sf_of(SF_DIR),
-        "calib_sec": calib_sec,
-        "calib_sec_end": calib_sec_end,
-        "calib_drift_ratio": (
-            round(calib_sec_end / calib_sec, 3) if calib_sec else None
-        ),
         "head": head,
         "ann_recall": ann_recall,
         "ivf_recall": ivf_recall,
@@ -391,21 +238,6 @@ def main() -> None:
         # representative gate and holds 1.0.
         "ivf_recall_fixture": "uniform-noise (0.6 = IVF-on-noise floor; see x41b)",
         "ivf_recall_clustered_fixture": "clustered (representative gate)",
-        "min_of": min_of,
-        "drift_requeue": drift_requeue,
-        # Harness policy fingerprint (round-9 ADVICE): ratios vs a
-        # prev capture are only valid when the prev ran the SAME
-        # timing policy.  The r9 driver capture (BENCH_FULL head
-        # d8fb0c3) already ran with sync-before-window + the 3 s
-        # min-of-3 threshold, so r10-vs-r9 ratios compare like for
-        # like; compare_bench/tools should check this block against
-        # prev's before trusting a ratio.
-        "harness": {
-            "sync_before_window": True,
-            "min3_threshold_s": 3.0,
-            "io_class_threshold_s": 1.5,
-            "io_class": "tag:IO_TMP_STATE_QUERIES",
-        },
     }
     # The driver captures only a ~2 KiB tail of stdout: a single line
     # carrying all per-query timings no longer fits (BENCH_r02 lost its
@@ -416,39 +248,6 @@ def main() -> None:
         json.dump(full, fh, indent=1, sort_keys=True)
         fh.write("\n")
 
-    # Round-over-round drift, host-noise corrected: compare against
-    # the PREVIOUS round's committed per-query detail
-    # (BENCH_FULL_PREV.json, refreshed each round) on the common query
-    # set, normalizing by the calib_sec ratio so a slower VM doesn't
-    # read as a slower engine.  common_ratio_calib_norm ≈ 1.0 means
-    # flat real performance regardless of host throttling.
-    common_ratio = common_ratio_norm = prev_head = None
-    prev_stale = None
-    if prev is not None:
-        try:
-            prev_head = prev.get("head")
-            # Round-4's prev lingered two rounds and made the printed
-            # ratios compare against the wrong round (round-6 verdict
-            # #3).  A prev with no recorded head predates the rotation
-            # discipline, and a prev whose head equals the current
-            # HEAD was never rotated after this round's own run —
-            # flag both so the ratios can't masquerade as
-            # round-over-round drift.
-            prev_stale = prev_head is None or prev_head == head
-            pq = prev.get("queries", {})
-            common = set(pq) & set(timings)
-            tot_prev = sum(pq[k] for k in common)
-            tot_now = sum(timings[k] for k in common)
-            if tot_prev > 0:
-                common_ratio = round(tot_now / tot_prev, 3)
-                pc = prev.get("calib_sec")
-                if pc and calib_sec:
-                    common_ratio_norm = round(
-                        (tot_now / calib_sec) / (tot_prev / pc), 3
-                    )
-        except (ValueError, KeyError, ZeroDivisionError):
-            pass
-
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
     print(
         json.dumps(
@@ -458,19 +257,8 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf_of(SF_DIR),
                 "n_queries": len(timings),
-                "steady_only_total": steady_only_total,
-                "calib_sec": calib_sec,
-                "calib_drift_ratio": (
-                    round(calib_sec_end / calib_sec, 3) if calib_sec else None
-                ),
-                "common_ratio_vs_prev": common_ratio,
-                "common_ratio_calib_norm": common_ratio_norm,
-                "prev_head": prev_head[:10] if prev_head else None,
-                "prev_stale": prev_stale,
-                "min_of_3_count": len(min_of),
-                "drift_requeue_n": (
-                    len(drift_requeue["queries"]) if drift_requeue else 0
-                ),
+                "jobs": jobs,
+                "stages_run": stages_run,
                 "queries": slowest,
                 "queries_file": "BENCH_FULL.json",
                 "ann_recall": ann_recall,

@@ -98,15 +98,13 @@ QUERIES: dict[str, QueryFn] = collect_queries(
 
 
 # ---------------------------------------------------------------------------
-# Bench I/O-class tags (round-10 verdict ask #3): queries whose
-# execution MATERIALIZES /tmp state — stream checkpoints + replay
-# sinks, lakehouse table churn, staged sqlite dbs, or iterative
-# localCheckpoint chains (block-manager disk spill).  bench.py keys
-# its 1.5 s min-of-3 I/O class on THIS set instead of sniffing module
-# names, so a graph loop in operators/graph.py is classed the same as
-# a stream replay in streaming/events.py (r7–r9 drift showed both
-# carry disk-contention noise: x388 4→24 s, pagerank 10.8→49.2 s in
-# the same contended capture).
+# I/O-class tags (round-10 verdict ask #3): queries whose execution
+# MATERIALIZES /tmp state — stream checkpoints + replay sinks,
+# lakehouse table churn, staged sqlite dbs, or iterative
+# localCheckpoint chains (block-manager disk spill).  The one user is
+# tests/test_window_lint.py::_lint_sweep_names, which leaves this set
+# out of the default plan-lint sample: these builders fire actions, so
+# building one just to lint its plan costs seconds.
 # ---------------------------------------------------------------------------
 
 _IO_MODULE_HINTS = ("streaming", "lakehouse", "sqlite_source")

@@ -1,8 +1,8 @@
-"""tools/: the revision A/B tool (identity gate, git-archive sides, one
-end-to-end smoke) and a guard that every tool still compiles and
-imports only engine names that exist; plus a guard that only
-``go_mapreduce_spark/scratch.py`` decides where engine scratch data
-lives."""
+"""tools/: the revision A/B tool (identity gate, git-archive sides, job
+counts, one end-to-end smoke), the capture diff's count gate, and a
+guard that every tool still compiles and imports only engine names
+that exist; plus a guard that only ``go_mapreduce_spark/scratch.py``
+decides where engine scratch data lives."""
 
 from __future__ import annotations
 
@@ -159,6 +159,63 @@ def test_ab_smoke_head_against_working_tree(sf_dir):
         assert len(side["walls"]) == 1 and side["wall_min"] == side["wall_median"] > 0
         assert side["jobs"] >= 1 and side["stages"] >= side["jobs"]
         assert side["plan_lines"] > 0 and side["parquet_scans"] >= 1
+
+
+def test_ab_counts_micro_batch_jobs(ab, spark, sf_dir):
+    # x134's micro-batch jobs run on the stream's own thread, outside
+    # any job group the caller sets; ab must count them all
+    from go_mapreduce_spark.queries import QUERIES
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs, stages = dag.nextJobId(), dag.nextStageId()
+    res = ab.timed_run(spark, QUERIES["x134_stateful_totals"], sf_dir)
+    assert res["jobs"] == dag.nextJobId() - jobs
+    assert res["stages"] == dag.nextStageId() - stages
+
+
+def _phases(build_jobs, exec_stages, exec_skipped):
+    return {
+        "build": {"jobs": build_jobs, "stages": 2, "skipped_stages": 0},
+        "exec": {"jobs": 1, "stages": exec_stages, "skipped_stages": exec_skipped},
+    }
+
+
+def _capture(tmp_path, name, wall=1.0, build_jobs=3, exec_stages=4, exec_skipped=1):
+    """A BENCH_FULL.json with two queries: q as given, r fixed."""
+    doc = {
+        "head": name,
+        "queries": {"q": wall, "r": 1.0},
+        "profile": {"q": _phases(build_jobs, exec_stages, exec_skipped), "r": _phases(3, 4, 1)},
+    }
+    path = tmp_path / f"{name}.json"
+    path.write_text(json.dumps(doc))
+    return str(path)
+
+
+@pytest.mark.parametrize(
+    "change, code",
+    [
+        ({"build_jobs": 4}, 1),  # one more job
+        ({"exec_stages": 5}, 1),  # one more stage run
+        ({"exec_stages": 5, "exec_skipped": 2}, 0),  # one more skipped stage
+        ({"wall": 9.0}, 0),  # 9x the wall, same counts
+        ({"build_jobs": 2, "exec_stages": 3}, 0),  # fewer jobs and stages
+    ],
+    ids=["jobs-grew", "stages-grew", "skipped-only", "wall-only", "counts-shrank"],
+)
+def test_compare_bench_gates_on_counts_not_walls(tmp_path, change, code):
+    old = _capture(tmp_path, "old")
+    new = _capture(tmp_path, "new", **change)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(TOOLS_DIR, "compare_bench.py"), old, new],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert proc.returncode == code, proc.stdout + proc.stderr
+    assert ("COUNT REGRESSION q:" in proc.stdout) == (code == 1)
+    assert "COUNT REGRESSION r:" not in proc.stdout
+    if "wall" in change:
+        assert "REGRESSION q: 1.00s -> 9.00s" in proc.stdout
+        assert "A/B: python tools/ab.py --base old --head new q" in proc.stdout
 
 
 def _engine_imports(tree):

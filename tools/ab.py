@@ -22,8 +22,11 @@ sides share one host window, so no calibration probe is taken.
 Prints one JSON document; per query and side: rows and their sha256,
 the executed-plan line count and ``FileScan parquet`` count (taken
 before the identity collect), the min and median wall, and the jobs
-and stages the last timed run fired.  ``SPARK_GRAFT_CPUS`` sets the
-workers' ``local[N]`` as for every ``get_spark`` caller.
+and stages the last timed run fired.  Those are status-store id deltas
+(``perfbench.layers.StatusStore``, from this checkout), so the jobs a
+streaming query runs on its micro-batch thread count too.
+``SPARK_GRAFT_CPUS`` sets the workers' ``local[N]`` as for every
+``get_spark`` caller.
 """
 
 from __future__ import annotations
@@ -43,6 +46,12 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ARCHIVED = ("go_mapreduce_spark", "fixtures")
+sys.path.append(REPO)  # after a side's root, so its own engine is imported
+from perfbench.layers import StatusStore  # noqa: E402
+
+# as bench.RETAIN_ALL: the status store must keep every job and stage
+# that StatusStore.window reads back (it evicts skipped stages first)
+RETAIN_ALL = {"spark.ui.retainedJobs": "1000000", "spark.ui.retainedStages": "1000000"}
 
 
 def git(*args: str) -> bytes:
@@ -69,6 +78,19 @@ def rows_hash(cols, rows) -> str:
     return hashlib.sha256(body.encode()).hexdigest()
 
 
+def timed_run(spark, fn, sf: str) -> dict:
+    """Run one query through the noop sink: its wall and the jobs and
+    stages it fired."""
+    store = StatusStore(spark)
+    since = store.mark()
+    os.sync()  # flush earlier runs' dirty pages outside the timer
+    t0 = time.perf_counter()
+    fn(spark, sf).write.format("noop").mode("overwrite").save()
+    wall = time.perf_counter() - t0
+    w = store.window(since, store.mark())
+    return {"wall": round(wall, 3), "jobs": w.jobs, "stages": w.stages}
+
+
 def worker(sf: str) -> None:
     """Serve one side: answer ``[op, query]`` JSON lines from stdin on
     the original stdout; everything else printed goes to stderr."""
@@ -79,9 +101,8 @@ def worker(sf: str) -> None:
     from go_mapreduce_spark.queries import QUERIES
     from go_mapreduce_spark.session import get_spark
 
-    spark = get_spark("ab")
-    sc = spark.sparkContext
-    for n, line in enumerate(sys.stdin):
+    spark = get_spark("ab", extra_conf=RETAIN_ALL)
+    for line in sys.stdin:
         op, query = json.loads(line)
         try:
             fn = QUERIES[query]
@@ -96,19 +117,7 @@ def worker(sf: str) -> None:
                     "parquet_scans": plan.count("FileScan parquet"),
                 }
             else:
-                group = f"ab-{n}"
-                sc.setJobGroup(group, f"ab {query}")
-                os.sync()  # flush earlier runs' dirty pages outside the timer
-                t0 = time.perf_counter()
-                fn(spark, sf).write.format("noop").mode("overwrite").save()
-                wall = time.perf_counter() - t0
-                tracker = sc.statusTracker()
-                jobs = tracker.getJobIdsForGroup(group)
-                res = {
-                    "wall": round(wall, 3),
-                    "jobs": len(jobs),
-                    "stages": sum(len(tracker.getJobInfo(j).stageIds) for j in jobs),
-                }
+                res = timed_run(spark, fn, sf)
         except Exception as e:  # noqa: BLE001 — reported, ends the A/B
             res = {"error": f"{type(e).__name__}: {e}"[:2000]}
         spark.catalog.clearCache()

@@ -246,22 +246,7 @@ def main() -> int:
     from go_mapreduce_spark.session import get_spark
 
     spark = get_spark("bench-skew")
-
-    # same calibration probe as bench.py: the r10→r11 BENCH_SKEW
-    # captures moved x190's ratio 0.678→1.445 with zero code change
-    # because each arm was a single sequential block — record the
-    # host state so a future swing can be attributed
-    def calib_probe() -> float:
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(400_000_000).selectExpr("sum(id * 3 + 1)").collect()
-            c = round(time.perf_counter() - t0, 3)
-            best = c if best is None else min(best, c)
-        return best
-
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    calib_sec = calib_probe()
     skew_dir = build_skew_dir(spark, SF_DIR)
 
     results: dict[str, dict] = {}
@@ -272,7 +257,8 @@ def main() -> int:
         # arms INTERLEAVED within each rep (round-11 verdict ask #2):
         # uniform then skewed inside every rep, min-of-N per arm —
         # host drift lands on both arms instead of masquerading as a
-        # skew ratio
+        # skew ratio (the r10→r11 captures, one sequential block per
+        # arm, moved x190's ratio 0.678→1.445 with zero code change)
         for _ in range(N_RUNS):
             for label, d in (("uniform", SF_DIR), ("skewed", skew_dir)):
                 t0 = time.perf_counter()
@@ -288,7 +274,6 @@ def main() -> int:
     results["lakehouse_merge_hot_range"] = bench_merge(spark, SF_DIR, N_RUNS)
     worst = max(worst, results["lakehouse_merge_hot_range"]["ratio"])
 
-    calib_sec_end = calib_probe()
     out = {
         "metric": "skew_stress_ratio_max",
         "value": worst,
@@ -297,11 +282,6 @@ def main() -> int:
         "hot_fraction": 1.0 / HOT_FRACTION_MOD,
         "n_runs": N_RUNS,
         "interleaved_arms": True,
-        "calib_sec": calib_sec,
-        "calib_sec_end": calib_sec_end,
-        "calib_drift_ratio": (
-            round(calib_sec_end / calib_sec, 3) if calib_sec else None
-        ),
         "queries": results,
         "gate": "ratio <= 2.0",
         "pass": worst <= 2.0,
